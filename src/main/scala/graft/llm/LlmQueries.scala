@@ -118,6 +118,31 @@ object LlmQueries {
     (srcRows, fpb)
   }
 
+  /** The shared scaffold of the streaming sketch gates (m33, m33b, m34,
+    * m36): stage the corpus ([[stageSketchSrc]]), stream it back as four
+    * micro-batches into `maintain(src, statePath, checkpoint, trigger)`,
+    * await the fold, then build the gate's output with `finish(base)` —
+    * the committed state lives at `$base/state`, the staged corpus at
+    * `$base/src`. `finish` runs in the same
+    * [[graft.queries.QUtil.withStreamPartsFor]] scope as the fold. */
+  private def sketchGate(s: org.apache.spark.sql.SparkSession, dir: String,
+      label: String)(
+      maintain: (DataFrame, String, String,
+        org.apache.spark.sql.streaming.Trigger) =>
+        org.apache.spark.sql.streaming.StreamingQuery)(
+      finish: String => DataFrame): DataFrame = {
+    val base = java.nio.file.Files.createTempDirectory(s"graft_$label").toString
+    val (srcRows, fpb) = stageSketchSrc(s, dir, base, label)
+    withStreamPartsFor(s, 8, srcRows) {
+      val schema = s.read.parquet(s"$base/src").schema
+      val src = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", fpb).parquet(s"$base/src")
+      awaitTraced(label, maintain(src, s"$base/state", s"$base/ckpt",
+        org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+      finish(base)
+    }
+  }
+
   val queries: Map[String, QFn] = Map(
     "l1_exact_dedup" -> { (s, dir) =>
       TextDedup.exactDedup(Tables.documents(s, dir)) },
@@ -421,25 +446,18 @@ object LlmQueries {
     // being graded, not the batch twin. n_exact rides from a batch read
     // of the same staged corpus as the audit column.
     "m33_stream_kmv" -> { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_m33").toString
-      val (srcRows, fpb) = stageSketchSrc(s, dir, base, "m33")
-      graft.queries.QUtil.withStreamPartsFor(s, 8, srcRows) {
-      val schema = s.read.parquet(s"$base/src").schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", fpb).parquet(s"$base/src")
-      graft.queries.QUtil.awaitTraced("m33",
-        TextStats.kmvMaintain(src, s"$base/state", s"$base/ckpt",
-          org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      val est = TextStats.kmvEstimate(
-        graft.operators.GenState.readState(s, s"$base/state"))
-      val exact = TextStats.sourceGramHashes(s.read.parquet(s"$base/src"))
-        .groupBy("source").agg(count(lit(1)).as("n_exact"))
-      exact.join(est, Seq("source"), "left")
-        .select(col("source"), col("n_exact"),
-          coalesce(col("kmv_est"), col("n_exact").cast("double"))
-            .as("kmv_est"))
-        .orderBy("source")
-    } },
+      sketchGate(s, dir, "m33")(TextStats.kmvMaintain(_, _, _, _)) { base =>
+        val est = TextStats.kmvEstimate(
+          graft.operators.GenState.readState(s, s"$base/state"))
+        val exact = TextStats.sourceGramHashes(s.read.parquet(s"$base/src"))
+          .groupBy("source").agg(count(lit(1)).as("n_exact"))
+        exact.join(est, Seq("source"), "left")
+          .select(col("source"), col("n_exact"),
+            coalesce(col("kmv_est"), col("n_exact").cast("double"))
+              .as("kmv_est"))
+          .orderBy("source")
+      }
+    },
 
     // m33's PRODUCTION shape (VERDICT r15 #6): identical staged corpus,
     // identical four-micro-batch KMV maintenance, but the output is read
@@ -453,19 +471,12 @@ object LlmQueries {
     // documented contract), so the oracle's n_exact appears only inside
     // the oracle's own CASE arithmetic.
     "m33b_stream_kmv_noaudit" -> { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_m33b").toString
-      val (srcRows, fpb) = stageSketchSrc(s, dir, base, "m33b")
-      graft.queries.QUtil.withStreamPartsFor(s, 8, srcRows) {
-      val schema = s.read.parquet(s"$base/src").schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", fpb).parquet(s"$base/src")
-      graft.queries.QUtil.awaitTraced("m33b",
-        TextStats.kmvMaintain(src, s"$base/state", s"$base/ckpt",
-          org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      TextStats.kmvEstimate(
-        graft.operators.GenState.readState(s, s"$base/state"))
-        .orderBy("source")
-    } },
+      sketchGate(s, dir, "m33b")(TextStats.kmvMaintain(_, _, _, _)) { base =>
+        TextStats.kmvEstimate(
+          graft.operators.GenState.readState(s, s"$base/state"))
+          .orderBy("source")
+      }
+    },
 
     // count-min sketch: token-frequency estimation in fixed 4x1024 cells
     // (the FREQUENCY sketch next to l42's cardinality), one-sided error
@@ -478,22 +489,15 @@ object LlmQueries {
     // exactly additive), and the estimates read off the merged sketch
     // must land bit-identically on l64's one-shot oracle
     "m34_stream_countmin" -> { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_m34").toString
-      val (srcRows, fpb) = stageSketchSrc(s, dir, base, "m34")
-      graft.queries.QUtil.withStreamPartsFor(s, 8, srcRows) {
-      val schema = s.read.parquet(s"$base/src").schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", fpb).parquet(s"$base/src")
-      graft.queries.QUtil.awaitTraced("m34",
-        TextStats.countMinMaintain(src, s"$base/state", s"$base/ckpt",
-          org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      val sketch = graft.operators.GenState.readState(s, s"$base/state")
-      val top = s.read.parquet(s"$base/src")
-        .select(explode(split(col("text"), " ")).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("n_exact"))
-        .orderBy(desc("n_exact"), col("tok")).limit(20)
-      TextStats.countMinEstimate(sketch, top)
-    } },
+      sketchGate(s, dir, "m34")(TextStats.countMinMaintain(_, _, _, _)) { base =>
+        val sketch = graft.operators.GenState.readState(s, s"$base/state")
+        val top = s.read.parquet(s"$base/src")
+          .select(explode(split(col("text"), " ")).as("tok"))
+          .groupBy("tok").agg(count(lit(1)).as("n_exact"))
+          .orderBy(desc("n_exact"), col("tok")).limit(20)
+        TextStats.countMinEstimate(sketch, top)
+      }
+    },
 
     // bloom-filter membership audit: the reference's negative-lookup
     // contract (O20) as visible output — no false negatives, bounded
@@ -585,19 +589,12 @@ object LlmQueries {
     },
 
     "m36_stream_bloom" -> { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_m36").toString
-      val (srcRows, fpb) = stageSketchSrc(s, dir, base, "m36")
-      graft.queries.QUtil.withStreamPartsFor(s, 8, srcRows) {
-      val schema = s.read.parquet(s"$base/src").schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", fpb).parquet(s"$base/src")
-      graft.queries.QUtil.awaitTraced("m36",
-        TextStats.bloomMaintain(src, s"$base/state", s"$base/ckpt",
-          org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      TextStats.bloomAuditFromState(
-        graft.operators.GenState.readState(s, s"$base/state"),
-        s.read.parquet(s"$base/src"))
-    } },
+      sketchGate(s, dir, "m36")(TextStats.bloomMaintain(_, _, _, _)) { base =>
+        TextStats.bloomAuditFromState(
+          graft.operators.GenState.readState(s, s"$base/state"),
+          s.read.parquet(s"$base/src"))
+      }
+    },
 
     // bigram-LM perplexity scoring (the CCNet quality filter): add-one
     // smoothed P(w2|w1) from corpus counts, per-doc mean log-prob +

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.GenState
 
 /** Per-document text analysis for training-data curation: token counts,
   * lexical-diversity and quality signals, a BPE-ish subword-count estimate,
@@ -1137,27 +1138,17 @@ object TextStats {
 
   /** Maintain the KMV sketch under a streaming source (the m33 gate):
     * each micro-batch folds [[kmvDelta]] into generation-committed state
-    * via [[graft.operators.GenState]] (replay-safe, crash-safe — the
-    * m28 idiom). The full history is never rescanned: per batch the cost
-    * is batch-scan + a k·|sources|-row merge. */
+    * with [[kmvMerge]] through [[GenState.fold]]
+    * (replay-safe, crash-safe — the m28 idiom; the sketch is key-less,
+    * k·|sources|-bounded state, so it is one bucket). The full history is
+    * never rescanned: per batch the cost is batch-scan + a
+    * k·|sources|-row merge. */
   def kmvMaintain(src: DataFrame, statePath: String, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger, k: Int = 256)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (b, id) => graft.operators.GenState.applyBatch(
-        b.sparkSession, statePath, id) { prev =>
-        val d = kmvDelta(b.toDF(), k)
-        prev match {
-          case Some(st) => kmvMerge(st, d, k)
-          case None     => d
-        }
-      }
-    src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(fn)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    GenState.foreachBatch(src, checkpoint, trigger) { (b, id) =>
+      GenState.fold(statePath, b, id)(kmvDelta(_, k), kmvMerge(_, _, k))
+    }
 
   /** Count-min sketch (Cormode & Muthukrishnan 2005) over corpus token
     * frequencies, audited against the exact counts — the FREQUENCY member
@@ -1220,28 +1211,18 @@ object TextStats {
       .orderBy(desc("n_exact"), col("token"))
 
   /** Maintain the count-min sketch under a streaming source (the m34
-    * gate) — countMinDelta folded per micro-batch into generation-
-    * committed state (the m33/m28 idiom); per-batch merge cost is
-    * depth·width-bounded forever. */
+    * gate) — [[countMinDelta]] folded per micro-batch into generation-
+    * committed state with [[countMinMerge]] through
+    * [[GenState.fold]] (the m33/m28 idiom: key-less,
+    * one bucket); per-batch merge cost is depth·width-bounded forever. */
   def countMinMaintain(src: DataFrame, statePath: String, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger,
       depth: Int = 4, width: Int = 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (b, id) => graft.operators.GenState.applyBatch(
-        b.sparkSession, statePath, id) { prev =>
-        val d = countMinDelta(b.toDF(), depth, width)
-        prev match {
-          case Some(st) => countMinMerge(st, d)
-          case None     => d
-        }
-      }
-    src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(fn)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    GenState.foreachBatch(src, checkpoint, trigger) { (b, id) =>
+      GenState.fold(statePath, b, id)(
+        countMinDelta(_, depth, width), countMinMerge)
+    }
 
   def countMinTokens(docs: DataFrame, depth: Int = 4, width: Int = 1024,
       k: Int = 20): DataFrame = {
@@ -1335,26 +1316,16 @@ object TextStats {
 
   /** Maintain the bloom filter under a streaming source (the m36 gate) —
     * [[bloomDelta]] folded per micro-batch into generation-committed
-    * state; per-batch merge cost is `bits`-bounded forever. */
+    * state with [[bloomMerge]] through [[GenState.fold]]
+    * (key-less, one bucket); per-batch merge cost is `bits`-bounded
+    * forever. */
   def bloomMaintain(src: DataFrame, statePath: String, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger,
       bits: Int = 4096, nh: Int = 3)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (b, id) => graft.operators.GenState.applyBatch(
-        b.sparkSession, statePath, id) { prev =>
-        val d = bloomDelta(b.toDF(), bits, nh)
-        prev match {
-          case Some(st) => bloomMerge(st, d)
-          case None     => d
-        }
-      }
-    src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(fn)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    GenState.foreachBatch(src, checkpoint, trigger) { (b, id) =>
+      GenState.fold(statePath, b, id)(bloomDelta(_, bits, nh), bloomMerge)
+    }
 
   /** l65's audit read off a MAINTAINED set-bit state instead of the
     * one-shot build: probes and the exact-membership audit come from a

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import scala.util.control.NonFatal
 
 /** Generation-directory state with commit markers — the shared persistence
   * protocol under the incrementally-maintained operators ([[IncrementalAgg]]
@@ -17,25 +19,27 @@ import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
   * apply. Generations still referenced (see below) survive; everything
   * else older than the previous commit is pruned.
   *
-  * Two write shapes share the marker protocol:
+  * One writer, [[applyBatch]], persists every state. A generation is
+  * hash-bucketed by key into `data/__b=<k>/` sub-directories, and a
+  * per-generation manifest records which generation holds each bucket.
+  * That is what CORPUS-SIZED state (one row per document/edge/key ever
+  * seen: m37 labels, m41 edges+counts, m29 upsert tables) needs:
+  * rewriting it wholesale per micro-batch is a double scale-killer (a
+  * single writer task serializes the write, and the write volume is
+  * O(corpus) per batch regardless of trigger cadence). Instead each
+  * batch rewrites ONLY buckets containing changed rows (parallel, one
+  * task per few buckets) and carries every untouched bucket forward BY
+  * REFERENCE in the manifest. Per-batch bytes written ≈ |changed rows| ·
+  * bucket-fill, amortized-batch-proportional; the standing corpus is
+  * rewritten only at rebase (below), amortized O(1) per row — the LSM
+  * bargain.
   *
-  *  - [[applyBatch]] — the whole state rewritten per batch as one file.
-  *    Correct and cheap FOREVER for group-bounded state (the m27/m28
-  *    rollups, the m33/m34/m36 sketches: state size is fixed by group
-  *    cardinality or sketch width, not by corpus size).
-  *  - [[applyBatchBucketed]] — for CORPUS-SIZED state (one row per
-  *    document/edge/key ever seen: m37 labels, m41 edges+counts, m29
-  *    upsert tables). Rewriting such state wholesale per micro-batch is a
-  *    double scale-killer: a single writer task serializes the write and
-  *    the write volume is O(corpus) per batch regardless of trigger
-  *    cadence. Instead the state is hash-bucketed by key into
-  *    `data/__b=<k>/` sub-directories per generation; each batch rewrites
-  *    ONLY buckets containing changed rows (parallel, one task per few
-  *    buckets) and carries every untouched bucket forward BY REFERENCE in
-  *    a per-generation manifest. Per-batch bytes written ≈
-  *    |changed rows| · bucket-fill, amortized-batch-proportional; the
-  *    standing corpus is rewritten only at rebase (below), amortized O(1)
-  *    per row — the LSM bargain.
+  * KEY-LESS state (`bucketCols = Nil`) is GROUP-BOUNDED — the m28
+  * rollup, the m33/m34/m36 sketches: its size is fixed by group
+  * cardinality or sketch width, not by corpus size, and it has no key to
+  * bucket by. Such a state is one bucket by definition: every batch is
+  * written as `data/__b=0` by one task, whatever the batch-size hint
+  * says, under a 1-bucket manifest. [[fold]] is its entry point.
   *
   * Bucket count adapts at REBASE time (first write, manifest spread over
   * [[RebaseSourceSpread]] generations, or buckets grown past
@@ -47,22 +51,25 @@ import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
   * manifest (pmod(xxhash64(keys), N)), so carry-forward always uses the
   * PREVIOUS manifest's N; only a rebase may change it.
   *
-  * A state that fits in ONE bucket target (the gate-scale steady state)
-  * sits at the ladder's bottom rung: N = 1, written as a single file by
-  * a single task with no partitionBy — the whole-state write's exact
-  * cost, with the manifest still recording size and schema. wantsRebase
-  * treats N = 1 as always-rebase, so the state re-buckets wide the
-  * moment it outgrows a target (and `deltaUseful` stays false meanwhile,
+  * A keyed state that fits in ONE bucket target (the gate-scale steady
+  * state) sits at the ladder's bottom rung with the key-less states:
+  * N = 1, one coalesce(1) write by a single task with no partitionBy,
+  * the manifest still recording size and schema. wantsRebase treats
+  * N = 1 as always-rebase, so a keyed state re-buckets wide the moment
+  * it outgrows a target (and `deltaUseful` stays false meanwhile,
   * keeping producers from building changed-keys frames nobody reads).
   */
 private[graft] object GenState {
 
   /** SPARK_GRAFT_TRACE=1: per-batch phase timings on stderr (delta
     * compute, state write, commit tail) — the gate-floor profiling
-    * instrument; zero cost when off. Unrecognized values fail fast,
-    * the same contract as Bench's env switches (a silently-ignored
-    * "true" would read as "the phases are not where the time goes"). */
-  private val trace = sys.env.get("SPARK_GRAFT_TRACE") match {
+    * instrument; zero cost when off. The one parser of the switch: the
+    * streaming gates' [[graft.queries.QUtil.tracedPhase]] and
+    * [[graft.queries.QUtil.awaitTraced]] read it too. Unrecognized
+    * values fail fast, the same contract as Bench's env switches (a
+    * silently-ignored "true" would read as "the phases are not where the
+    * time goes"). */
+  private[graft] val trace = sys.env.get("SPARK_GRAFT_TRACE") match {
     case Some("1") => true
     case Some("0") | None => false
     case Some(v) => throw new IllegalArgumentException(
@@ -147,11 +154,12 @@ private[graft] object GenState {
   //                                    per-batch rebase predicate is pure
   //                                    manifest arithmetic — no Files.walk
   //                                    over thousands of bucket dirs)
-  // Absent bucket ids hold no rows. A generation without a manifest is a
-  // legacy whole-state write (applyBatch) and is read as a plain parquet
-  // dir — the two shapes interoperate, so a state can migrate. v1
-  // manifests (no <bytes> field) are still read; their sizes are walked
-  // once on first use, the next write re-records them as v2.
+  // Absent bucket ids hold no rows. Every generation this writer commits
+  // has a manifest; one without is a whole-state write by an older build
+  // and is read as a plain parquet dir, so such a state still opens and
+  // the next write rebases it under a manifest. v1 manifests (no <bytes>
+  // field) are still read; their sizes are walked once on first use, the
+  // next write re-records them as v2.
 
   private case class BucketSrc(gen: Long, bytes: Long)
   private case class Manifest(buckets: Int,
@@ -163,7 +171,7 @@ private[graft] object GenState {
   /** Parsed-manifest memo (VERDICT r12 #3): a (statePath, gen) manifest
     * is IMMUTABLE once its commit marker exists, yet every micro-batch
     * used to re-read and re-parse it at least twice (`deltaUseful` in
-    * the streaming fn, then `applyBatchBucketed`; three times counting
+    * the streaming fn, then `applyBatch`; three times counting
     * the read-back) — and a v1 manifest re-ran its dirBytes migration
     * walk on EVERY read (ADVICE r12). Write-through on [[writeManifest]]
     * so the next batch's reads never touch the filesystem at all;
@@ -246,7 +254,7 @@ private[graft] object GenState {
     * touched-bucket computation is itself a per-batch Spark job (collect
     * of distinct bucket ids) costing more than just rewriting the whole
     * tiny state, so full-rewrite is trivially batch-proportional there.
-    * Shared verbatim between [[applyBatchBucketed]]'s decision and
+    * Shared verbatim between [[applyBatch]]'s decision and
     * [[deltaUseful]]'s pre-decision so the two can never drift. */
   private def wantsRebase(prevMan: Option[Manifest],
       targetBytes: Long): Boolean = {
@@ -263,7 +271,7 @@ private[graft] object GenState {
     prevMan.exists(_.buckets <= 1)
   }
 
-  /** Will the NEXT [[applyBatchBucketed]] on this path actually consume a
+  /** Will the NEXT [[applyBatch]] on this path actually consume a
     * changed-keys frame? False when the store would rebase regardless
     * (first write, spread/fat/tiny triggers) — a producer whose
     * changed-keys frame costs real per-batch work (an extra join +
@@ -278,14 +286,14 @@ private[graft] object GenState {
   }
 
   /** Cheap input-size estimate for a micro-batch frame, for
-    * [[applyBatchBucketed]]'s `batchBytesHint`: the optimizer's
+    * [[applyBatch]]'s `batchBytesHint`: the optimizer's
     * sizeInBytes (file-source batches report real file bytes — no job
     * runs). `None` when the plan can't say (the default Long.MaxValue
     * sentinel), so an unknown never masquerades as huge OR tiny. */
   def batchBytes(batch: DataFrame): Option[Long] = try {
     val s = batch.queryExecution.optimizedPlan.stats.sizeInBytes
     if (s >= BigInt(Long.MaxValue) / 2 || s < 0) None else Some(s.toLong)
-  } catch { case _: Throwable => None }
+  } catch { case NonFatal(_) => None }
 
   /** The current committed state (error if no batch ever committed). */
   def readState(spark: SparkSession, statePath: String): DataFrame = {
@@ -295,57 +303,13 @@ private[graft] object GenState {
       .getOrElse(readGen(spark, statePath, gens.last))
   }
 
-  /** Apply one micro-batch with a WHOLE-STATE rewrite — the right shape
-    * for group-bounded state only (see the object doc). Skips batches
-    * whose marker already exists (replay after a successful commit);
-    * rewrites the generation wholesale otherwise (replay after a crash
-    * mid-write lands on `overwrite`). */
-  def applyBatch(spark: SparkSession, statePath: String,
-                 batchId: Long)(next: Option[DataFrame] => DataFrame): Unit = {
-    import java.nio.file.Files
-    val marker = commitsDir(statePath).resolve(batchId.toString)
-    if (Files.exists(marker)) return
-    val prev = committedGens(statePath).filter(_ < batchId)
-    val merged = next(prev.lastOption.map(g =>
-      cachedState(spark, statePath, g)
-        .getOrElse(readGen(spark, statePath, g))))
-    // Misuse guard (VERDICT r12 #3): this overload's contract is
-    // GROUP-BOUNDED state (rollups, sketches) — nothing used to fail
-    // loudly if a maintainer with corpus-sized state picked it, and the
-    // coalesce(1) would then serialize an ever-growing whole-state
-    // rewrite through one task every batch (the exact r11 scale-killer
-    // the bucketed shape replaced). When the PREVIOUS generation's
-    // recorded size already exceeds a few bucket targets, warn and drop
-    // the coalesce so at least the write parallelizes; the warning names
-    // the fix (applyBatchBucketed). Legacy (manifest-less) gen sizes are
-    // memoized per (path, gen) — immutable once committed — so the
-    // guard costs ONE walk per generation, not one per batch.
-    val guardBytes = 8L * targetBucketBytes(spark)
-    val prevStateBytes = prev.lastOption.map { g =>
-      readManifest(statePath, g).map(_.sources.values.map(_.bytes).sum)
-        .getOrElse(legacyGenBytes(statePath, g))
-    }.getOrElse(0L)
-    val big = prevStateBytes > guardBytes
-    if (big)
-      System.err.println(s"[GenState] WARN applyBatch($statePath) is " +
-        s"rewriting ${prevStateBytes / (1 << 20)} MB of standing state " +
-        s"wholesale per batch — this overload is for group-bounded state; " +
-        s"corpus-sized state belongs in applyBatchBucketed. Writing " +
-        s"in parallel (no coalesce) to bound the damage.")
-    (if (big) merged else merged.coalesce(1)).write.mode("overwrite")
-      .parquet(s"$statePath/gen-$batchId")
-    // a bucketed predecessor's manifest may reference older generations;
-    // in-flight readers of that (surviving) generation still need them
-    commit(spark, statePath, batchId, merged, prev, keepExtra =
-      prev.lastOption.flatMap(readManifest(statePath, _))
-        .map(_.sources.values.map(_.gen).toSet).getOrElse(Set.empty))
-  }
-
-  /** Apply one micro-batch with a BUCKETED incremental rewrite — the
-    * corpus-sized-state shape (see the object doc). `next(prev)` returns
-    * `(newState, changedKeys)`: the full new state frame plus a frame of
-    * the rows whose key changed this batch, projected to `bucketCols`
-    * (same names and types as in the state — the bucket hash must agree).
+  /** Apply one micro-batch — the one state writer (see the object doc).
+    * Skips a batch whose marker already exists (replay after a successful
+    * commit); a replay after a crash mid-write rewrites the generation.
+    * `next(prev)` returns `(newState, changedKeys)`: the full new state
+    * frame plus a frame of the rows whose key changed this batch,
+    * projected to `bucketCols` (same names and types as in the state —
+    * the bucket hash must agree).
     * Only buckets containing changed keys are written; the rest carry
     * forward by manifest reference. The caller CONTRACT making that
     * sound: newState restricted to an untouched bucket must equal the
@@ -355,6 +319,8 @@ private[graft] object GenState {
     * pinned by each maintainer's recompute oracle. `changedKeys = None`
     * forces a full (still parallel) rewrite — the first batch, a driver
     * fast path, or any batch where the delta is not cheaply available.
+    * `bucketCols = Nil` declares a key-less state: it must pass
+    * `changedKeys = None` and is always written as the single bucket 0.
     *
     * `batchBytesHint` is the producer's estimate of THIS batch's input
     * bytes (micro-batch plan stats — free). It gates the single-task
@@ -367,8 +333,8 @@ private[graft] object GenState {
     * state must sit at ≤ half a bucket target) — worst case ONE
     * single-task batch when an unhinted huge batch lands on a provably
     * small state, after which the recorded oversize re-promotes to the
-    * wide path. */
-  def applyBatchBucketed(spark: SparkSession, statePath: String,
+    * wide path. A key-less state never consults the hint. */
+  def applyBatch(spark: SparkSession, statePath: String,
       batchId: Long, bucketCols: Seq[String],
       batchBytesHint: Option[Long] = None)
       (next: Option[DataFrame] => (DataFrame, Option[DataFrame])): Unit = {
@@ -382,6 +348,9 @@ private[graft] object GenState {
       cachedState(spark, statePath, g)
         .getOrElse(readGen(spark, statePath, g))))
     val tNext = System.nanoTime()
+    val keyless = bucketCols.isEmpty
+    require(!keyless || changed.isEmpty,
+      s"key-less state $statePath cannot carry changed keys")
 
     // rebase decision: no bucketed prev, manifest spread past the
     // compaction trigger, or buckets grown fat → pick a fresh N from the
@@ -423,7 +392,9 @@ private[graft] object GenState {
       case Some(_) => prevBytes.exists(_ <= targetBytes)
       case None => prevBytes.exists(_ <= targetBytes / 2)
     }
-    val tiny = rebase &&
+    // a key-less state is one bucket by definition (object doc): always
+    // this path, whatever the hint says
+    val tiny = keyless || rebase &&
       (prevSmallEnough ||
         // a TRUE first write (no prior generation at all) is tiny only on
         // the hint's positive say-so — absent a hint it takes the wide
@@ -509,6 +480,33 @@ private[graft] object GenState {
       f"commit=${(System.nanoTime() - tWrite) / 1e9}%.2f")
   }
 
+  /** Apply one micro-batch to a mergeable KEY-LESS state: `delta(batch)`
+    * merged into the previous state (`merge(state, delta)`), or the delta
+    * alone on the first batch — the foreachBatch body of the rollup and
+    * sketch maintainers. Correct for any batch split because `merge` is
+    * associative and commutative over the caller's algebra. */
+  def fold(statePath: String, batch: DataFrame, batchId: Long)
+      (delta: DataFrame => DataFrame,
+       merge: (DataFrame, DataFrame) => DataFrame): Unit =
+    applyBatch(batch.sparkSession, statePath, batchId, Nil) { prev =>
+      val d = delta(batch)
+      (prev.fold(d)(merge(_, d)), None)
+    }
+
+  /** Run `body` as the foreachBatch of a stream over `src`, checkpointed
+    * at `checkpoint` — the one wiring of every state maintainer. */
+  def foreachBatch(src: DataFrame, checkpoint: String, trigger: Trigger)
+      (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    // explicit Scala function value: dodges the Scala/Java foreachBatch
+    // overload ambiguity (the StreamIngest idiom)
+    val fn: (Dataset[Row], Long) => Unit = (b, id) => body(b.toDF(), id)
+    src.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(fn)
+      .start()
+  }
+
   /** Shared commit tail: marker, pass-forward cache, pruning. `keepExtra`
     * holds generations still referenced by the latest (and, for in-flight
     * readers, the previous) manifest — they survive pruning with their
@@ -540,26 +538,6 @@ private[graft] object GenState {
       deleteTree(java.nio.file.Paths.get(s"$statePath/gen-$g"))
       Files.deleteIfExists(commitsDir(statePath).resolve(g.toString)): Unit
       manifestCache.synchronized(manifestCache.remove((statePath, g)): Unit)
-    }
-  }
-
-  /** On-disk bytes of a manifest-less (whole-state) generation, memoized:
-    * a committed generation never changes, so the walk is paid once per
-    * (path, gen) per JVM instead of once per micro-batch. */
-  private val MaxCachedSizes = 64
-  private val sizeCache = // j.l.Long values: a missing key must be null,
-    new java.util.LinkedHashMap[(String, Long), java.lang.Long](16, 0.75f, true) {
-      override def removeEldestEntry( // not a silently-unboxed 0
-          e: java.util.Map.Entry[(String, Long), java.lang.Long]): Boolean =
-        size > MaxCachedSizes
-    }
-  private def legacyGenBytes(statePath: String, gen: Long): Long = {
-    val k = (statePath, gen)
-    val hit = sizeCache.synchronized(Option(sizeCache.get(k)))
-    hit.map(_.longValue).getOrElse {
-      val b = dirBytes(java.nio.file.Paths.get(s"$statePath/gen-$gen"))
-      sizeCache.synchronized(sizeCache.put(k, b): Unit)
-      b
     }
   }
 

@@ -451,7 +451,7 @@ object Graph {
   /** [[incrementalComponents]] plus the batch's CHANGED-KEY frame — the
     * rows whose (doc_id, cluster_id) differs from the previous state:
     * relabeled members of merged components plus every batch node. Feeds
-    * [[GenState.applyBatchBucketed]] so each micro-batch rewrites only
+    * [[GenState.applyBatch]] so each micro-batch rewrites only
     * the state buckets those rows hash into, never the standing corpus
     * frame (`None` on the first batch — everything is new). The changed
     * set is relabel-proportional, not state-proportional: only labels in
@@ -1042,7 +1042,7 @@ object Graph {
   /** [[incrTriangles]] plus the batch's CHANGED-KEY frame — (u, v, node)
     * projections of the state rows this batch adds or rewrites: the new
     * edges and the nodes whose triangle count was bumped. Feeds
-    * [[GenState.applyBatchBucketed]]: both sets are batch-proportional
+    * [[GenState.applyBatch]]: both sets are batch-proportional
     * (|ΔE| and the owned-wedge endpoints), so the bucketed state write
     * never rewrites the standing edge set or untouched counts. */
   def incrTrianglesDelta(prev: Option[DataFrame], pairs: DataFrame,
@@ -1310,21 +1310,14 @@ object Graph {
     * committed state. */
   def trianglesMaintain(src: DataFrame, statePath: String,
       checkpoint: String, trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (b, id) => {
-        // skip the changed-keys job when the store will rebase anyway
-        val want = GenState.deltaUseful(b.sparkSession, statePath)
-        GenState.applyBatchBucketed(b.sparkSession, statePath, id,
-          Seq("u", "v", "node"), GenState.batchBytes(b.toDF()))(prev =>
-            incrTrianglesDelta(prev, b.toDF(), wantChanged = want))
-      }
-    src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(fn)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    GenState.foreachBatch(src, checkpoint, trigger) { (b, id) =>
+      // skip the changed-keys job when the store will rebase anyway
+      val want = GenState.deltaUseful(b.sparkSession, statePath)
+      GenState.applyBatch(b.sparkSession, statePath, id,
+        Seq("u", "v", "node"), GenState.batchBytes(b))(prev =>
+          incrTrianglesDelta(prev, b, wantChanged = want))
+    }
 
   /** The dedupClusters output face over a maintained label frame:
     * (doc_id, cluster_id, n_members, keep), ordered by doc_id. */
@@ -1342,23 +1335,16 @@ object Graph {
     * rollup maintenance family). */
   def componentsMaintain(src: DataFrame, statePath: String,
       checkpoint: String, trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (b, id) => {
-        // skip the changed-keys job when the store will rebase anyway
-        val want = GenState.deltaUseful(b.sparkSession, statePath)
-        // one plan-stats read feeds both the store's tiny-path gate and
-        // the delta's broadcast gate (no per-batch count job, r17)
-        val hint = GenState.batchBytes(b.toDF())
-        GenState.applyBatchBucketed(b.sparkSession, statePath, id,
-          Seq("doc_id"), hint)(prev =>
-            incrementalComponentsDelta(prev, b.toDF(), wantChanged = want,
-              batchBytesHint = hint))
-      }
-    src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(fn)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    GenState.foreachBatch(src, checkpoint, trigger) { (b, id) =>
+      // skip the changed-keys job when the store will rebase anyway
+      val want = GenState.deltaUseful(b.sparkSession, statePath)
+      // one plan-stats read feeds both the store's tiny-path gate and
+      // the delta's broadcast gate (no per-batch count job, r17)
+      val hint = GenState.batchBytes(b)
+      GenState.applyBatch(b.sparkSession, statePath, id,
+        Seq("doc_id"), hint)(prev =>
+          incrementalComponentsDelta(prev, b, wantChanged = want,
+            batchBytesHint = hint))
+    }
 }

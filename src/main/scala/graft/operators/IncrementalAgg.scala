@@ -48,7 +48,8 @@ object IncrementalAgg {
   // ---- streaming maintenance --------------------------------------------
   //
   // Persistence (generation directories + commit markers, exactly-once
-  // under foreachBatch replay) is [[GenState]]'s, shared with KeyedUpsert.
+  // under foreachBatch replay) is [[GenState]]'s, shared with every
+  // maintainer. The rollup is key-less, group-bounded state: one bucket.
 
   /** The current maintained state (empty-schema error if never run). */
   def readState(spark: org.apache.spark.sql.SparkSession,
@@ -56,16 +57,12 @@ object IncrementalAgg {
     GenState.readState(spark, statePath)
 
   /** Apply one micro-batch to the state — the foreachBatch body, public
-    * so tests can drive replay/crash scenarios directly. */
+    * so tests can drive replay/crash scenarios directly: [[delta]] folded
+    * into the committed state with [[merge]] ([[GenState.fold]]). */
   def maintainBatch(statePath: String, keys: Seq[String], value: Column)
                    (batch: DataFrame, batchId: Long): Unit =
-    GenState.applyBatch(batch.sparkSession, statePath, batchId) { prev =>
-      val d = delta(batch, keys, value)
-      prev match {
-        case Some(st) => merge(st, d, keys)
-        case None     => d
-      }
-    }
+    GenState.fold(statePath, batch, batchId)(
+      delta(_, keys, value), merge(_, _, keys))
 
   /** Incremental JOIN maintenance — the join sibling of [[merge]]:
     * maintain the materialized view V = A ⋈ B under append batches
@@ -103,15 +100,7 @@ object IncrementalAgg {
   def maintain(src: DataFrame, keys: Seq[String], value: Column,
                statePath: String, checkpoint: String,
                trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // explicit Scala function value: dodges the Scala/Java foreachBatch
-    // overload ambiguity (the StreamIngest idiom)
-    val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (b, id) => maintainBatch(statePath, keys, value)(b.toDF(), id)
-    src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(fn)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    GenState.foreachBatch(src, checkpoint, trigger)(
+      maintainBatch(statePath, keys, value))
 }

@@ -63,7 +63,7 @@ object KeyedUpsert {
     * so untouched state partitions aren't even re-aggregated. */
   def applyBatch(statePath: String, key: String, version: Seq[String])
                 (batch: DataFrame, batchId: Long): Unit =
-    GenState.applyBatchBucketed(batch.sparkSession, statePath, batchId,
+    GenState.applyBatch(batch.sparkSession, statePath, batchId,
         Seq(key), GenState.batchBytes(batch)) { prev =>
       val d = delta(batch, key, version)
       prev match {
@@ -82,13 +82,7 @@ object KeyedUpsert {
   def maintain(src: DataFrame, key: String, version: Seq[String],
                statePath: String, checkpoint: String,
                trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (b, id) => applyBatch(statePath, key, version)(b.toDF(), id)
-    src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch(fn)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    GenState.foreachBatch(src, checkpoint, trigger)(
+      applyBatch(statePath, key, version))
 }

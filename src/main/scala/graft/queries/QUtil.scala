@@ -87,26 +87,19 @@ object QUtil {
     try body finally s.conf.set(key, prev)
   }
 
-  /** SPARK_GRAFT_TRACE=1: streaming-gate floor itemization (VERDICT r14
-    * #3) — the same env switch [[graft.operators.GenState]] uses for its
-    * per-batch state phases, here covering the phases GenState cannot
-    * see: the gate's source-staging write, each micro-batch's Spark-side
+  /** SPARK_GRAFT_TRACE=1 ([[graft.operators.GenState.trace]], the one
+    * parser of the switch): streaming-gate floor itemization (VERDICT r14
+    * #3) covering the phases GenState's per-batch state trace cannot see:
+    * the gate's source-staging write, each micro-batch's Spark-side
     * machinery split (Structured Streaming's own durationMs ledger:
     * latestOffset/getBatch source listing, queryPlanning, walCommit +
     * commitOffsets offset/commit-log writes, addBatch = the whole
     * foreachBatch body), and the post-stream finalize read. Zero cost
-    * when off; fail-fast on unrecognized values (the Bench/GenState
-    * contract). */
-  private[graft] val trace = sys.env.get("SPARK_GRAFT_TRACE") match {
-    case Some("1") => true
-    case Some("0") | None => false
-    case Some(v) => throw new IllegalArgumentException(
-      s"SPARK_GRAFT_TRACE=$v: expected 1 or 0")
-  }
-
-  /** Wall-time one named phase of a gate to stderr when tracing. */
+    * when off.
+    *
+    * Wall-time one named phase of a gate to stderr when tracing. */
   def tracedPhase[A](label: String)(f: => A): A =
-    if (!trace) f
+    if (!graft.operators.GenState.trace) f
     else {
       val t0 = System.nanoTime()
       try f finally System.err.println(
@@ -121,7 +114,7 @@ object QUtil {
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val t0 = System.nanoTime()
     q.awaitTermination()
-    if (trace) {
+    if (graft.operators.GenState.trace) {
       System.err.println(
         f"[trace] $label stream total wall=${(System.nanoTime() - t0) / 1e9}%.3f s")
       q.recentProgress.foreach { p =>

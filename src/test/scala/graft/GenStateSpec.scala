@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The bucketed generation store ([[graft.operators.GenState
-  * .applyBatchBucketed]]): correctness under replay/crash, manifest
+/** The generation store's one writer ([[graft.operators.GenState
+  * .applyBatch]]): correctness under replay/crash, manifest
   * carry-forward, batch-proportional (not state-proportional) write
-  * volume, parallel writes, and rebase compaction. */
+  * volume, parallel writes, rebase compaction, the key-less single-bucket
+  * rule, and reads of manifest-less generations left by older builds. */
 class GenStateSpec extends SparkSpec {
   import graft.operators.GenState
 
@@ -44,7 +45,7 @@ class GenStateSpec extends SparkSpec {
   }
   private def applySum(statePath: String,
       batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
-    GenState.applyBatchBucketed(spark, statePath, id, Seq("k")) { prev =>
+    GenState.applyBatch(spark, statePath, id, Seq("k")) { prev =>
       (sumState(prev, batch), prev.map(_ => batch.select("k")))
     }
 
@@ -200,7 +201,7 @@ class GenStateSpec extends SparkSpec {
       // driver fast path passes) forces that rebase directly.
       spark.conf.set("spark.graft.state.targetBucketBytes",
         (64L << 20).toString)
-      GenState.applyBatchBucketed(spark, p, 2L, Seq("k")) { prev =>
+      GenState.applyBatch(spark, p, 2L, Seq("k")) { prev =>
         (sumState(prev, Seq((2L, 1L)).toDF("k", "v")), None)
       }
       val st = GenState.readState(spark, p)
@@ -303,7 +304,7 @@ class GenStateSpec extends SparkSpec {
     // a catch-up batch DECLARED big (hint > 4× target) must not ride the
     // single-task rung no matter how small the prior state was (ADVICE
     // r12: the one-task whole-state stall) — the rebase goes wide
-    GenState.applyBatchBucketed(spark, p, 2L, Seq("k"),
+    GenState.applyBatch(spark, p, 2L, Seq("k"),
         batchBytesHint = Some(64L << 20)) { prev =>
       (sumState(prev, Seq((4L, 2L)).toDF("k", "v")), None)
     }
@@ -313,7 +314,7 @@ class GenStateSpec extends SparkSpec {
       s"big-hinted batch stayed on the tiny path: ${bucketDirs(p, 2L)}")
     // and a true FIRST write with a tiny hint starts on the bottom rung
     val p2 = tmp("tinyfirst")
-    GenState.applyBatchBucketed(spark, p2, 0L, Seq("k"),
+    GenState.applyBatch(spark, p2, 0L, Seq("k"),
         batchBytesHint = Some(1024L)) { prev =>
       (sumState(prev, Seq((1L, 1L)).toDF("k", "v")), None)
     }
@@ -336,7 +337,7 @@ class GenStateSpec extends SparkSpec {
       val p = tmp("nohint")
       val rows = spark.range(2300).select(col("id").as("k"),
         xxhash64(col("id"), lit(7)).as("v"))
-      GenState.applyBatchBucketed(spark, p, 0L, Seq("k"),
+      GenState.applyBatch(spark, p, 0L, Seq("k"),
           batchBytesHint = Some(1024L)) { prev => (sumState(prev, rows), None) }
       assert(bucketDirs(p, 0L) == Seq("__b=0"),
         s"fixture not on the tiny rung: ${bucketDirs(p, 0L)}")
@@ -354,7 +355,7 @@ class GenStateSpec extends SparkSpec {
       assert(bytes > 16384 && bytes <= 32768,
         s"fixture drifted out of (target/2, target]: state is $bytes B")
       // small HINTED batch onto that state: tiny rung (prev <= target)
-      GenState.applyBatchBucketed(spark, p, 1L, Seq("k"),
+      GenState.applyBatch(spark, p, 1L, Seq("k"),
           batchBytesHint = Some(1024L)) { prev =>
         (sumState(prev, Seq((1L, 1L)).toDF("k", "v")), None)
       }
@@ -362,7 +363,7 @@ class GenStateSpec extends SparkSpec {
         s"small-hinted batch left the tiny rung: ${bucketDirs(p, 1L)}")
       // the SAME state, UNHINTED: nothing can vouch for the batch and
       // the state is past half a target — the rebase must go wide
-      GenState.applyBatchBucketed(spark, p, 2L, Seq("k")) { prev =>
+      GenState.applyBatch(spark, p, 2L, Seq("k")) { prev =>
         (sumState(prev, Seq((2L, 2L)).toDF("k", "v")), None)
       }
       assert(bucketDirs(p, 2L).size > 1,
@@ -379,44 +380,90 @@ class GenStateSpec extends SparkSpec {
     Seq(k).toDF("id").select(xxhash64(col("id"), lit(7))).head().getLong(0)
   }
 
-  test("applyBatch on corpus-sized state warns and drops the single-task " +
-      "coalesce (the misuse guard)") {
-    val p = tmp("guard")
-    // 16 KB target → guard threshold 128 KB; this ~1.6 MB state crosses it
-    spark.conf.set("spark.graft.state.targetBucketBytes", "16384")
-    try {
-      val big = spark.range(100000).select(col("id").as("k"),
-        xxhash64(col("id"), lit(1)).as("s"))
-      GenState.applyBatch(spark, p, 0L)(_ => big)
-      // gen-0's recorded size is above the guard threshold, so the NEXT
-      // applyBatch must keep the merged frame's parallelism: >1 part
-      // file written (the unguarded shape coalesces to exactly 1)
-      GenState.applyBatch(spark, p, 1L)(prev => prev.get.repartition(4))
-      val gen1 = java.nio.file.Paths.get(s"$p/gen-1")
-      val walk = java.nio.file.Files.walk(gen1)
-      val parts = try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("part-")).toSeq
-      } finally walk.close()
-      assert(parts.size > 1,
-        s"guard did not parallelize a ${parts.size}-file big-state rewrite")
-      assert(GenState.readState(spark, p).count() == 100000L,
-        "guarded write lost rows")
-    } finally spark.conf.unset("spark.graft.state.targetBucketBytes")
-  }
-
   test("bucketed and whole-state writes interoperate on one statePath") {
     import spark.implicits._
     val p = tmp("mixed")
     def b(lo: Int, hi: Int) = (lo until hi).map(i => (i.toLong % 16, 1L))
       .toDF("k", "v")
-    GenState.applyBatch(spark, p, 0L)(prev => sumState(prev, b(0, 256)))
+    // a whole-state generation as older builds committed it: plain
+    // parquet under gen-0/, no manifest, plus its marker
+    sumState(None, b(0, 256)).coalesce(1).write.parquet(s"$p/gen-0")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p, "_commits"))
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(p, "_commits", "0"))
+    assert(snap(p) == sumState(None, b(0, 256)).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq,
+      "manifest-less generation read wrong")
     applySum(p, b(256, 512), 1L) // legacy prev → full bucketed rewrite
-    GenState.applyBatch(spark, p, 2L)(prev => sumState(prev, b(512, 768)))
+    assert(java.nio.file.Files.isRegularFile(
+      java.nio.file.Paths.get(s"$p/gen-1/manifest")),
+      "write over a legacy generation committed no manifest")
+    applySum(p, b(512, 768), 2L)
     applySum(p, b(768, 1024), 3L)
     val expect = sumState(None, b(0, 1024))
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(snap(p) == expect, "mixed write shapes diverged from one-shot")
+  }
+
+  test("key-less state commits every generation as a 1-bucket manifest " +
+      "with one part file, whatever the batch-size hint") {
+    import spark.implicits._
+    val p = tmp("keyless")
+    // 16 KB target and a hint far above 4× it: a keyed state would take
+    // the 16-bucket parallel path here; a key-less one has no key to
+    // bucket by and must stay one bucket, one task, one file
+    spark.conf.set("spark.graft.state.targetBucketBytes", "16384")
+    try {
+      val rows = spark.range(20000).select(col("id").as("k"),
+        pmod(xxhash64(col("id"), lit(3)), lit(1000000L)).as("v"))
+      // checked as each generation commits: pruning drops gen g-2
+      for (g <- 0L to 2L) {
+        GenState.applyBatch(spark, p, g, Nil,
+            batchBytesHint = Some(1L << 20)) { prev =>
+          (sumState(prev, rows.repartition(4)), None)
+        }
+        val man = java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get(s"$p/gen-$g/manifest"))
+        assert(man.get(0) == "v2 1", s"gen-$g manifest header: ${man.get(0)}")
+        val parts = {
+          import scala.jdk.CollectionConverters._
+          val w = java.nio.file.Files.walk(
+            java.nio.file.Paths.get(s"$p/gen-$g/data"))
+          try w.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("part-")).toSeq
+          finally w.close()
+        }
+        assert(bucketDirs(p, g) == Seq("__b=0") && parts.size == 1,
+          s"gen-$g not one bucket / one file: ${bucketDirs(p, g)} $parts")
+      }
+      val st = GenState.readState(spark, p)
+      assert(st.count() == 20000L &&
+        st.filter(col("s") =!=
+          pmod(xxhash64(col("k"), lit(3)), lit(1000000L)) * 3).isEmpty,
+        "key-less state diverged from three folds of the batch")
+      // a key-less state has no key to report changes by
+      intercept[IllegalArgumentException] {
+        GenState.applyBatch(spark, p, 3L, Nil) { prev =>
+          (prev.get, Some(prev.get.select("k")))
+        }
+      }
+    } finally spark.conf.unset("spark.graft.state.targetBucketBytes")
+  }
+
+  test("batchBytes: a frame whose plan stats sit at the Long.MaxValue " +
+      "sentinel yields None; a file scan yields its bytes") {
+    import spark.implicits._
+    val rdd = spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L)))
+    val unknown = spark.createDataFrame(rdd,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("k",
+          org.apache.spark.sql.types.LongType))))
+    assert(unknown.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(Long.MaxValue), "fixture: plan stats not at the sentinel")
+    assert(GenState.batchBytes(unknown).isEmpty,
+      "sentinel stats read as a size")
+    val p = tmp("bytes")
+    Seq(1L, 2L, 3L).toDF("k").write.parquet(s"$p/src")
+    assert(GenState.batchBytes(spark.read.parquet(s"$p/src")).exists(_ > 0),
+      "file-scan frame reported no size")
   }
 }

@@ -218,9 +218,12 @@ class OperatorsSpec extends SparkSpec {
     // checkpoint replay of an already-committed batch: marker short-circuits
     apply_(b(10, 20), 1L)
     assert(snap() == afterTwo, "replay of a committed batch changed state")
-    // crash mid-write: gen-2 exists, marker does not → replay must rewrite
-    b(20, 25).groupBy("k").count().write.mode("overwrite")
-      .parquet(s"$state/gen-2") // garbage partial write, wrong schema even
+    // crash mid-write: gen-2's bucket and a stale manifest exist, the
+    // marker does not → replay must rewrite
+    val garbage = b(20, 25).groupBy("k").count() // wrong schema even
+    garbage.write.mode("overwrite").parquet(s"$state/gen-2/data/__b=0")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$state/gen-2/manifest"),
+      s"v2 1\nschema ${garbage.schema.json}\n0 2 1".getBytes("UTF-8"))
     apply_(b(20, 30), 2L)
     val expect = IncrementalAgg.delta(b(0, 30), keys, col("v"))
       .orderBy("k").collect()
@@ -676,9 +679,9 @@ class OperatorsSpec extends SparkSpec {
     val dirs = (0 until 10).map(i =>
       java.nio.file.Files.createTempDirectory(s"graft_genlru_$i").toString)
     for ((p, i) <- dirs.zipWithIndex)
-      graft.operators.GenState.applyBatch(spark, p, 0) { prev =>
+      graft.operators.GenState.applyBatch(spark, p, 0, Nil) { prev =>
         assert(prev.isEmpty, s"fresh state $i must start empty")
-        Seq((i.toLong, s"v$i")).toDF("k", "v").localCheckpoint()
+        (Seq((i.toLong, s"v$i")).toDF("k", "v").localCheckpoint(), None)
       }
     // dirs(0) and dirs(1) left the LRU (cap 8) — parquet must answer
     val back = graft.operators.GenState.readState(spark, dirs(0))
@@ -686,9 +689,10 @@ class OperatorsSpec extends SparkSpec {
     assert(back == Seq((0L, "v0")), s"evicted state read wrong: $back")
     // and an applyBatch building on the evicted generation merges off
     // the parquet read, then re-enters the cache for the NEXT batch
-    graft.operators.GenState.applyBatch(spark, dirs(0), 1) { prev =>
+    graft.operators.GenState.applyBatch(spark, dirs(0), 1, Nil) { prev =>
       assert(prev.nonEmpty, "gen-0 must be visible to batch 1")
-      prev.get.unionByName(Seq((100L, "v100")).toDF("k", "v")).localCheckpoint()
+      (prev.get.unionByName(Seq((100L, "v100")).toDF("k", "v"))
+        .localCheckpoint(), None)
     }
     val merged = graft.operators.GenState.readState(spark, dirs(0))
       .as[(Long, String)].collect().toSet
