@@ -4,6 +4,12 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Every cause in the chain as `class: message`, outermost first — an
+    * `ExceptionInInitializerError` has a null message of its own. */
+  private def causes(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+      .map(c => s"${c.getClass.getName}: ${c.getMessage}").mkString(" <- caused by ")
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional: run just these queries
@@ -23,8 +29,8 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case e: Throwable => // also LinkageErrors: report, go on
+        System.err.println(s"[verify] $name failed: ${causes(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

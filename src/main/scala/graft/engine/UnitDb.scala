@@ -2,14 +2,16 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TopicMatches, TopicPartsMatches}
+import graft.functions.{NotTombstoned, TombstoneKeys, TombstoneSet, TopicMatches, TopicPartsMatches}
 import graft.model.{Entry, Message, MessageId, Query, Tombstone, Topic, TopicKey, Varz}
 
 /** Embedded message-store facade — the Spark-native re-expression of the
@@ -26,9 +28,12 @@ import graft.model.{Entry, Message, MessageId, Query, Tombstone, Topic, TopicKey
   *    pipeline collapses into Spark's file-commit protocol, SURVEY §3.2).
   *  - `get`       (db.go:222-319)  → declarative filter + top-K; Catalyst
   *    turns it into partition-pruned scan + TakeOrderedAndProject.
-  *  - `delete`    (db.go:392-425)  → tombstone in a `_tombstones` sidecar
-  *    + anti-join on read (the sidecar, not the main table, is scanned for
-  *    deletions — delete-heavy stores stay broadcast-able).
+  *  - `delete`    (db.go:392-425)  → tombstone in a `_tombstones` sidecar,
+  *    resolved on the driver into a `not_tombstoned(seq, topic)` filter
+  *    (the reference marks the index entry freed before any block read).
+  *    The sidecar keys are read once per sidecar file set and shipped as a
+  *    broadcast variable, so a `get` is one scan job with no join, and
+  *    delete-heavy stores stay broadcast-able.
   *  - TTL/expiry  (db_sync.go:306-328) → `expires_at` visibility predicate
   *    on read + `vacuum()` compaction.
   *  - `batch`     (db.go:434-447)  → buffered entries committed as a single
@@ -140,7 +145,6 @@ final class UnitDb private (
   // declared before the recovery block below, which seeds hwmWritten
   @volatile private var hwmWritten = 0L
   @volatile private var storeExists = hasStore
-  @volatile private var tombsExist = hasTombs
   @volatile private var closed = false
 
   private def ensureOpen(): Unit =
@@ -182,7 +186,7 @@ final class UnitDb private (
       val row = readStoreRaw().agg(max("seq")).head()
       if (!row.isNullAt(0)) m = math.max(m, row.getLong(0))
     }
-    if (tombsExist) {
+    if (hasTombs) {
       val row = readTombs().agg(max("seq")).head()
       if (!row.isNullAt(0)) m = math.max(m, row.getLong(0))
     }
@@ -253,7 +257,7 @@ final class UnitDb private (
   }
 
   /** Delete one message by seq + topic — appends a sidecar tombstone;
-    * readers anti-join it out (reference db.go:392-425 frees the block). */
+    * readers filter it out (reference db.go:392-425 frees the block). */
   def delete(seq: Long, topic: String, contract: Long = Message.MasterContract): Unit =
     synchronized {
       ensureOpen()
@@ -296,7 +300,7 @@ final class UnitDb private (
     * count returned to the caller rides the write job itself as an
     * `Observation` (zero extra scan). Space is reclaimed by the next
     * [[vacuum]], exactly as for single deletes; until then readers
-    * anti-join the sidecar as usual. Requires write permission on the
+    * filter the sidecar's keys out as usual. Requires write permission on the
     * pattern in secure mode (deletes are write-side ops, as in
     * [[delete]]). */
   def deleteMatching(q0: Query): Long = flushLock.synchronized {
@@ -325,7 +329,6 @@ final class UnitDb private (
       .partitionBy("contract").option("compression", "snappy")
       .parquet(tombsPath)
     val n = obs.get("n").asInstanceOf[Long]
-    if (n > 0) tombsExist = true
     nDeletes.addAndGet(n) // cumulative varz counter — NOT the return value
     n
   }
@@ -390,15 +393,14 @@ final class UnitDb private (
     try {
       // Tombstones flush FIRST: the two appends are not atomic together,
       // and a crash between them must only ever under-apply the batch. A
-      // tombstone whose message never landed is a harmless anti-join
-      // no-op; the reverse order would expose batch puts with their
-      // deletes lost.
+      // tombstone whose message never landed is a harmless no-op; the
+      // reverse order would expose batch puts with their deletes lost.
       if (tombs.nonEmpty) {
         val ds = spark.createDataset(tombs)(Encoders.product[Tombstone])
         ds.toDF().repartition(1).write.mode(SaveMode.Append)
           .partitionBy("contract").option("compression", "snappy")
           .parquet(tombsPath)
-        synchronized { flushingTombs.clear(); tombsExist = true }
+        synchronized { flushingTombs.clear() }
       }
       if (msgs.nonEmpty) {
         // large flushes: ship rows as an RDD so the InternalRow encode
@@ -494,7 +496,8 @@ final class UnitDb private (
     * duration cutoff, and at-rest decrypt as [[scanFrame]]. Liveness
     * necessarily differs in two ways: TTL expiry is evaluated at each
     * micro-batch's processing instant (`current_timestamp`), and the
-    * tombstone anti-join binds the sidecar at PLAN time — deletes issued
+    * `not_tombstoned` filter binds the tombstone keys at PLAN time (the
+    * stream keeps the broadcast it was planned with) — deletes issued
     * after the stream starts do not retract rows already emitted (an
     * append-only stream cannot un-emit; the reference's live SUBSCRIBE
     * has the same semantics — a delete never recalls a delivered
@@ -528,6 +531,7 @@ final class UnitDb private (
       pred = pred && col("ts") >= lit(new Timestamp(c)) &&
         col("day") >= lit(dayOf(c, sessionZone))
     }
+    pred = pred && seqlockRead(notTombstoned(Some(q.contract)))
     val matched =
       if (!t.isWildcard)
         src.filter(col("wc") === 0 && col("topic") === t.key && pred)
@@ -537,9 +541,7 @@ final class UnitDb private (
       else
         src.filter(
           TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred)
-    matched
-      .join(broadcast(tombstonesFor(q.contract)), Seq("seq", "topic"), "left_anti")
-      .select("seq", "topic", "ts", "payload")
+    matched.select("seq", "topic", "ts", "payload")
   }
 
   /** Shared core of [[getFrame]]/[[scanFrame]]: the pattern-matched,
@@ -562,6 +564,8 @@ final class UnitDb private (
       .map(c => math.min(c, Query.MaxLimit))
       .getOrElse(q.effectiveLimit)
 
+    // store listing and tombstone keys in one consistent capture
+    val (snap, live) = seqlockRead((snapshot(), notTombstoned(Some(q.contract))))
     var pred: Column =
       col("contract") === q.contract &&
       (col("expires_at").isNull || col("expires_at") > lit(new Timestamp(nowMs)))
@@ -573,8 +577,8 @@ final class UnitDb private (
       pred = pred && col("ts") >= lit(new Timestamp(c)) &&
         col("day") >= lit(dayOf(c, sessionZone))
     }
-
-    val snap = snapshot()
+    // last, so it probes only rows the cheaper conjuncts kept
+    pred = pred && live
     // Static patterns: pushable equality over the static bucket, unioned
     // with a bidirectional match over the (tiny) wildcard bucket — stored
     // wildcard publishes still answer static queries (SURVEY §2.3 rule 1).
@@ -591,16 +595,16 @@ final class UnitDb private (
         snap.filter(
           TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred)
 
-    (matched
-      .join(broadcast(tombstonesFor(q.contract)), Seq("seq", "topic"), "left_anti"),
-      limit)
+    (matched, limit)
   }
 
-  /** Live-entry count (reference db.go:475-478). */
+  /** Live-entry count over every contract (reference db.go:475-478): not
+    * expired, not tombstoned. */
   def count(): Long = {
-    snapshot()
-      .filter(col("expires_at").isNull || col("expires_at") > lit(new Timestamp(clock())))
-      .join(broadcast(tombstonesFor()), Seq("seq", "topic"), "left_anti")
+    val (snap, live) = seqlockRead((snapshot(), notTombstoned(None)))
+    snap
+      .filter((col("expires_at").isNull ||
+        col("expires_at") > lit(new Timestamp(clock()))) && live)
       .count()
   }
 
@@ -682,8 +686,8 @@ final class UnitDb private (
 
   /** Full snapshot (store + unsynced pending) with payloads decrypted when
     * a key is present, and the `day`/`wc` partition columns retained for
-    * pruning. Tombstoned rows are NOT removed here — callers anti-join
-    * [[tombstonesFor]] (get/count do). */
+    * pruning. Tombstoned rows are NOT removed here — readers filter them
+    * with `not_tombstoned` (get/count do). */
   def snapshot(): DataFrame = seqlockRead {
     val pendingDf = synchronized {
       val rows = (flushing ++ pending).toSeq
@@ -715,30 +719,58 @@ final class UnitDb private (
     flushLock.synchronized(capture)
   }
 
-  /** Delete markers visible to a reader as (seq, topic) pairs: sidecar ∪
-    * unsynced, pruned by contract. Readers anti-join on BOTH keys — a
-    * delete whose topic does not match the stored message is a no-op, as
-    * in the reference (Delete validates the topic before freeing the
-    * block, db.go:392-425; ADVICE r2). The sidecar is orders smaller than
-    * the store, so the anti-join side stays broadcast-able even on
-    * delete-heavy stores (VERDICT r1 #2). */
-  def tombstonesFor(contract: Long = -1L): DataFrame = seqlockRead {
-    val pendingDf = synchronized {
-      val rows = (flushingTombs ++ pendingTombs).toSeq
-      if (rows.isEmpty) None
-      else Some(spark.createDataset(rows)(Encoders.product[Tombstone]).toDF())
+  private val sidecarKeys = new ConcurrentHashMap[Long, SidecarKeys]()
+
+  /** Data files under `_tombstones/contract=<c>`, sorted: the cache key. */
+  private def sidecarFiles(contract: Long): Seq[(String, Long)] =
+    listDir(Paths.get(tombsPath, s"contract=$contract"))
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(f => (f.getPath, f.length)).sorted
+
+  private def listDir(p: Path): Seq[java.io.File] =
+    Option(p.toFile.listFiles).map(_.toSeq).getOrElse(Nil)
+
+  /** One contract's sidecar keys. They are re-read, by one Spark job over
+    * exactly the listed files, only when that file set changed since the
+    * last read; concurrent readers that both miss just read twice. */
+  private def sidecarFor(contract: Long): SidecarKeys = {
+    val files = sidecarFiles(contract)
+    val hit = sidecarKeys.get(contract)
+    if (hit != null && hit.files == files) hit
+    else {
+      val keys =
+        if (files.isEmpty) TombstoneKeys.empty
+        else TombstoneKeys(spark.read.schema(tombKeySchema)
+          .parquet(files.map(_._1): _*).collect().iterator
+          .map(r => (r.getLong(0), r.getString(1))))
+      val e = SidecarKeys(files,
+        if (keys.size == 0) None else Some(spark.sparkContext.broadcast(keys)),
+        keys.size)
+      sidecarKeys.put(contract, e)
+      e
     }
-    val sidecar = if (tombsExist) Some(readTombs()) else None
-    val all = (sidecar, pendingDf) match {
-      case (Some(s), Some(p)) => s.unionByName(p)
-      case (Some(s), None)    => s
-      case (None, Some(p))    => p
-      case (None, None) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
+  }
+
+  /** The delete-liveness filter `not_tombstoned(seq, topic)` for rows of
+    * `contract` (of every contract when None): cached sidecar keys plus
+    * the unsynced tombstones. Readers match on BOTH keys — a delete whose
+    * topic does not match the stored message is a no-op, as in the
+    * reference (Delete validates the topic before freeing the block,
+    * db.go:392-425; ADVICE r2). The buffers are captured before the
+    * listing, so a concurrent flush shows its keys in one or both; callers
+    * still capture under [[seqlockRead]] to pair the keys with the store
+    * listing. */
+  private def notTombstoned(contract: Option[Long]): Column = {
+    val unsynced = synchronized {
+      (flushingTombs ++ pendingTombs).filter(t => contract.forall(_ == t.contract)).toSeq
     }
-    val pruned = if (contract >= 0) all.filter(col("contract") === contract) else all
-    pruned.select("seq", "topic").distinct()
+    val contracts = contract.map(Seq(_)).getOrElse(
+      listDir(Paths.get(tombsPath)).map(_.getName)
+        .filter(_.startsWith("contract=")).map(_.stripPrefix("contract=").toLong))
+    val sidecar = contracts.map(sidecarFor)
+    val u = TombstoneKeys(unsynced.iterator.map(t => (t.seq, t.topic)))
+    NotTombstoned(col("seq"), col("topic"), new TombstoneSet(
+      sidecar.flatMap(_.keys), u, sidecar.map(_.size.toLong).sum + u.size))
   }
 
   // ---------------------------------------------------------- maintenance
@@ -747,7 +779,9 @@ final class UnitDb private (
     * table atomically via the store's [[StoreCommitProtocol]] (the moral
     * equivalent of the reference block_writer rollback protocol,
     * block_writer.go:291-322, and its expirer, db_sync.go:306-328). The
-    * consumed `_tombstones` sidecar is dropped with the old directory;
+    * rewrite filters with the same `not_tombstoned` keys as every reader
+    * (all contracts). The consumed `_tombstones` sidecar is dropped with
+    * the old directory, and the cached sidecar keys with it;
     * every OTHER `_`-prefixed sidecar (streaming `_ingest_commits` replay
     * markers, `_rejects` dead letters) is carried across the swap — losing
     * them would mean silent dead-letter loss and a duplicate-replay window
@@ -772,9 +806,7 @@ final class UnitDb private (
     retentionMs.foreach { r =>
       livePred = livePred && col("ts") >= lit(new Timestamp(nowTs - r))
     }
-    val live = readStoreRaw()
-      .filter(livePred)
-      .join(broadcast(tombstonesFor()), Seq("seq", "topic"), "left_anti")
+    val live = readStoreRaw().filter(livePred && notTombstoned(None))
     val tmp = commitProtocol.rewriteTarget(path)
     writeStoreTo(live, tmp)
     // every `_` sidecar except the consumed tombstones (and write-staging
@@ -794,11 +826,10 @@ final class UnitDb private (
       // the tombstones were consumed by the rewrite. A swap protocol
       // dropped the sidecar with the old directory; a manifest commit
       // never touches sidecars, so remove it here (a crash before this
-      // point just leaves stale tombstones whose anti-join matches
-      // nothing — idempotent)
+      // point just leaves stale tombstones that match nothing — idempotent)
       val tp = Paths.get(tombsPath)
       if (Files.exists(tp)) FsUtil.deleteTree(tp)
-      tombsExist = false
+      sidecarKeys.clear()
     } finally exitDiskMutation()
   }
 
@@ -1178,6 +1209,15 @@ object UnitDb {
     StructField("contract", LongType, nullable = false),
     StructField("topic", StringType, nullable = false),
     StructField("ts", TimestampType, nullable = false)))
+
+  /** One contract's sidecar keys as read at one file set (path and
+    * length per data file). No broadcast when the sidecar holds no key. */
+  private final case class SidecarKeys(files: Seq[(String, Long)],
+      keys: Option[Broadcast[TombstoneKeys]], size: Int)
+
+  /** The two tombstone columns readers match on. */
+  private val tombKeySchema: StructType = StructType(tombSchema.fields.filter(f =>
+    f.name == "seq" || f.name == "topic"))
 
   private def dayOf(ms: Long, zone: java.time.ZoneId): String =
     java.time.Instant.ofEpochMilli(ms).atZone(zone).toLocalDate.toString

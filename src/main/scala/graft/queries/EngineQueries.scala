@@ -15,7 +15,7 @@ import graft.streaming.StreamIngest
   * m1–m6 queries prove the *semantics* on the raw events table; this one
   * drives the actual store — Structured Streaming ingest (S1) of the
   * events stream into a fresh UnitDb, then the core read path (O4 get:
-  * wildcard match + pruned scan + tombstone anti-join + top-K) — and is
+  * wildcard match + pruned scan + `not_tombstoned` filter + top-K) — and is
   * hash-compared against DuckDB over the same source rows.
   *
   * Determinism: payloads carry the event_id, timestamps come from the

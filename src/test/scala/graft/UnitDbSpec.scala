@@ -1068,4 +1068,152 @@ class UnitDbSpec extends SparkSpec {
         s"${lost.size} accepted puts missing after close (e.g. ${lost.take(5)})")
     } finally db2.close()
   }
+
+  /** Spark jobs that `f` runs, counted by a listener once the bus drained. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    org.apache.spark.graftprobe.ListenerBusWait(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = f
+      org.apache.spark.graftprobe.ListenerBusWait(spark.sparkContext)
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("get is one Spark job: tombstones resolve on the driver, no exchange or join") {
+    val (db, _, tick) = freshDb()
+    for (i <- 1 to 12) { db.put(s"one.d${i % 3}.t", s"o.$i".getBytes); tick(1000) }
+    db.put("one.*.t", "wild".getBytes) // stored wildcard: both union branches run
+    db.sync()
+    val rows = db.scanFrame(Query("one...")).collect()
+    def seqOf(p: String) = rows.find(r =>
+      new String(r.getAs[Array[Byte]]("payload")) == p).get.getAs[Long]("seq")
+    db.delete(seqOf("o.3"), "one.d0.t")
+    db.delete(seqOf("o.6"), "one.d0.t")
+    db.sync()                           // two synced tombstones
+    db.delete(seqOf("o.9"), "one.d0.t") // and one pending
+    val static = Query("one.d0.t")
+    val wild = Query("one.*.t", limit = 100)
+    // the first read after a sync re-reads the changed sidecar: one more job
+    val (first, firstJobs) = jobsOf(db.get(static))
+    assert(firstJobs == 2, s"sidecar refresh + scan, got $firstJobs jobs")
+    assert(first.map(new String(_)).toSeq == Seq("wild", "o.12"))
+    val (got, staticJobs) = jobsOf(db.get(static))
+    assert(staticJobs == 1, s"static get ran $staticJobs jobs")
+    assert(got.map(new String(_)).toSeq == Seq("wild", "o.12"))
+    val (gotWild, wildJobs) = jobsOf(db.get(wild))
+    assert(wildJobs == 1, s"wildcard get ran $wildJobs jobs")
+    assert(gotWild.length == 10 && !gotWild.map(new String(_)).exists(Set("o.3", "o.6", "o.9")))
+
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    for (q <- Seq(static, wild)) {
+      val plan = db.getFrame(q).queryExecution.executedPlan
+      val bad = helper.collectWithSubqueries(plan) {
+        case e: Exchange => e.nodeName
+        case j: BaseJoinExec => j.nodeName
+      }
+      assert(bad.isEmpty, s"$q plans ${bad.mkString(", ")}:\n$plan")
+      val text = plan.toString
+      assert(!text.contains("Exchange") && !text.contains("Join"), text)
+      // the plan shows a key count, never the keys
+      val shown = """not_tombstoned\(seq#\d+L?, topic#\d+, (\d+) keys\)""".r
+        .findAllMatchIn(text).map(_.group(1).toInt).toSet
+      assert(shown == Set(3), s"expected the 3-key summary in:\n$text")
+    }
+  }
+
+  test("tombstone key cache follows every store change (in-memory model)") {
+    import scala.collection.mutable
+    val dir = Files.createTempDirectory("graftdb_model").toString + "/store"
+    var now = 1700000000000L
+    var db = UnitDb.open(spark, dir, clock = () => now)
+    final case class M(seq: Long, topic: String, contract: Long, ts: Long,
+        expires: Option[Long], payload: String, var deleted: Boolean = false) {
+      def live: Boolean = !deleted && expires.forall(_ > now)
+    }
+    val model = mutable.ArrayBuffer[M]()
+    val C2 = 77L
+    var k = 0
+    def put(topic: String, contract: Long = Message.MasterContract,
+        ttl: Option[Long] = None): M = {
+      k += 1
+      val p = s"v$k"
+      val id = db.putEntry(Entry(topic, p.getBytes, contract, ttl))
+      val m = M(graft.model.MessageId.decode(id)._3, topic, contract, now,
+        ttl.map(now + _), p)
+      model += m; now += 1000; m
+    }
+    def matches(m: M, pattern: String) =
+      if (pattern.endsWith(".*")) m.topic.startsWith(pattern.dropRight(1))
+      else m.topic == pattern
+    def check(step: String): Unit = {
+      for (c <- Seq(Message.MasterContract, C2);
+           (pattern, limit) <- Seq("mdl.a" -> 0, "mdl.b" -> 0, "mdl.*" -> 0, "mdl.*" -> 3)) {
+        val want = model.filter(m => m.contract == c && matches(m, pattern) && m.live)
+          .sortBy(m => (-m.ts, -m.seq)).take(if (limit > 0) limit else 1000)
+          .map(_.payload).toSeq
+        val got = db.get(Query(pattern, c, limit)).map(new String(_)).toSeq
+        assert(got == want, s"$step: get($pattern, $c, $limit)")
+      }
+      assert(db.count() == model.count(_.live), s"$step: count")
+    }
+
+    for (i <- 1 to 6) put(if (i % 2 == 0) "mdl.a" else "mdl.b")
+    put("mdl.a", ttl = Some(30000L))
+    put("mdl.a", C2); put("mdl.b", C2)
+    db.sync()
+    check("synced")
+    // a pending delete of a pending put, and of a synced row
+    val fresh = put("mdl.a")
+    db.delete(fresh.seq, "mdl.a"); fresh.deleted = true
+    val old = model.head
+    db.delete(old.seq, old.topic); old.deleted = true
+    check("pending tombstones")
+    db.sync()
+    check("sidecar file set changed")
+    // a wrong-topic delete is a no-op, pending and synced
+    val target = model.find(m => m.topic == "mdl.a" && m.live).get
+    db.delete(target.seq, "mdl.b")
+    check("wrong-topic delete pending")
+    db.sync()
+    check("wrong-topic delete synced")
+    // the second contract's keys are its own
+    val c2 = model.find(m => m.contract == C2 && m.topic == "mdl.a").get
+    db.delete(c2.seq, "mdl.a", C2); c2.deleted = true
+    db.sync()
+    check("second contract delete")
+    val swept = db.deleteMatching(Query("mdl.b"))
+    val sweptModel = model.filter(m => m.contract == Message.MasterContract &&
+      m.topic == "mdl.b" && m.live)
+    sweptModel.foreach(_.deleted = true)
+    assert(swept == sweptModel.size.toLong)
+    check("deleteMatching")
+    now += 60000L // the TTL row expires
+    check("expiry")
+    for (_ <- 1 to 3) { put("mdl.a"); db.sync() }
+    assert(db.compact(minFiles = 2) > 0)
+    assert(Files.exists(java.nio.file.Paths.get(dir, "_tombstones")))
+    check("compact keeps the sidecar")
+    db.vacuum()
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "_tombstones")))
+    check("vacuum consumed the sidecar")
+    val again = model.find(m => m.topic == "mdl.a" && m.live).get
+    db.delete(again.seq, "mdl.a"); again.deleted = true
+    db.sync()
+    check("delete after vacuum")
+    db.close()
+    db = UnitDb.open(spark, dir, clock = () => now)
+    check("reopened")
+    put("mdl.b"); db.sync()
+    check("reopened, written")
+    db.close()
+  }
 }
