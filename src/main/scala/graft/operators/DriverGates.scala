@@ -15,13 +15,13 @@ package graft.operators
   */
 object DriverGates {
 
-  /** Edge cap for the rank family's driver fast path (pageRank, weighted,
-    * personalized, HITS, triangleCounts' collect). Bounding argument:
-    * BYTES — 2M edge rows ≈ 100–200 MB transient on an 8 GiB driver, the
-    * same order as a broadcast-join build side. The work per edge is a
-    * handful of integer ops × iters, so once the bytes fit, the driver
-    * loop beats ~16–20 scheduler waves of join+reduce (measured 6–8 s of
-    * pure scheduling on sub-millisecond math at sf0.1). */
+  /** Edge cap for the rank kernel's driver twin (pageRank, weighted and
+    * personalized PageRank, HITS — the gate argument is in the kernel's
+    * doc in [[Graph]]) and for triangleCounts' and incrTriangles' collect.
+    * Bounding argument: BYTES — 2M edge rows ≈ 100–200 MB transient on an
+    * 8 GiB driver, the same order as a broadcast-join build side. The sf0.1
+    * co-purchase graph (1.17M symmetrized edge rows) fits; the ×10 bench
+    * graph does not, so both twins run under measurement. */
   val RankGraphEdgeCap: Long = 2000000L
 
   /** Edge cap for dedupClusters' driver union-find. Bounding argument:

@@ -17,70 +17,71 @@ object Graph {
 
   private val Mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-  /** Iteration parallelism derived from the MEASURED edge count (~100k
-    * edge rows per task): every round pays |stages|·parts task-scheduling
-    * overhead × iters, so a session-wide partition count oversized for
-    * the graph is pure floor — the count materializes the (persisted)
-    * frame anyway, and a 1000-executor deployment's billions of edges
-    * land back at the session cap. (AQE coalesces shuffle stages but not
-    * a persisted frame's partitioning, which the rounds reuse.) */
-  private def sizedParts(e: DataFrame): Int = {
-    val sessParts = e.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1, math.min(sessParts, (e.count() / 100000L).toInt + 1))
-  }
+  /** S: every rank-family score is a BIGINT count of 1/S units. */
+  private val Scale = 1000000000000L
 
-  /** The shared rank-iteration scaffold: distinct edges, measured-size
-    * partitioning on `src`, the out-degree frame MATERIALIZED
-    * (localCheckpoint) before the raw edge caches are dropped — a lazy
-    * reference would silently re-run the caller's whole edge-building
-    * plan after the unpersist (measured: 4x on the q38 gate before this
-    * was pinned; the invariant lives HERE so the three rank operators
-    * can't drift apart). `ej` carries each edge's source out-degree
-    * (one join, cached — rounds never recompute it); `nNodes` is the
-    * bounded driver scalar the teleport literals need. */
-  private case class PreppedEdges(ej: DataFrame, deg: DataFrame, nNodes: Long,
-      nEdges: Long)
+  /** The rank kernel: pageRank, weightedPageRank, personalizedPageRank
+    * and hits are one linear iteration, the GraphX/Pregel round — join
+    * the score frame onto the cached edges, sum each edge's share per
+    * destination, apply one per-node step. Each operator is a
+    * [[RankSpec]]; [[rank]] runs it on one of two twins.
+    *
+    * Fixed point: scores are exact integers (S = 10¹² units), so every
+    * aggregation is order-free and both twins — and the DuckDB oracles —
+    * land bit-identically, where float sums depend on partition order.
+    * Rounds are FIXED (`iters`), never converged on an epsilon:
+    * a deterministic round count is the oracle contract and the
+    * production pattern alike.
+    *
+    * Floors: every `div` floors, leaking at most one unit per edge per
+    * round — bounded, deterministic, and stated identically in the
+    * oracles. Each operator's evaluation order is part of its model.
+    *
+    * Symmetry contract (the PageRank family): every destination must also
+    * be a source — symmetrize undirected edge lists, as q38 does. A node
+    * with no out-edges would need a dangling-mass term and one with no
+    * in-edges a left join; the contract keeps every round one inner join
+    * + one aggregate. It is CHECKED on both twins, since the inner join
+    * would otherwise drop no-out-edge nodes after round 1 and leak their
+    * mass silently. HITS is bipartite and has no such contract.
+    *
+    * Gate: at most `smallGraphCap` edges ([[DriverGates.RankGraphEdgeCap]])
+    * run the driver twin — the same recurrence over the collected edges,
+    * because 8 rounds of join + reduce are 16–20 scheduler waves that
+    * dwarf the arithmetic on a small graph (the sf0.1 co-purchase graphs
+    * spent 6–8 s scheduling sub-millisecond math). Larger graphs run the
+    * distributed twin, and the gate costs them nothing beyond the count
+    * of the persisted edge frame. Both twins carry real traffic (the
+    * sf0.1 graphs take the driver twin; the `_distpath` oracles and the
+    * ×10 bench graphs the distributed one), and tests pin them against
+    * each other and against BigInt references (cap 0 forces distributed).
+    */
+  private final case class RankSpec(
+      /** Operator name, in contract-failure messages. */
+      op: String,
+      /** Edge prep: per-(src, dst) weight sums, share
+        * (((85·r) div 100)·w) div W(u) with W(u) = Σ out-weights. Else
+        * distinct pairs, share (85·r) div (100·outdeg(u)). */
+      weighted: Boolean = false,
+      /** Teleport (and initial score) only onto these nodes; else onto
+        * every node. */
+      seeds: Option[DataFrame] = None,
+      /** HITS: share r itself, node step max-normalize to S, and two
+        * phases per round, the second over reversed edges. */
+      hits: Boolean = false)
 
-  /** Edge cap for the rank family's driver fast path — the
-    * [[graft.llm.TextDedup.dedupClusters]] small-graph rule applied to
-    * fixed-point rank iteration: 8 rounds of join+reduce are ~16-20
-    * scheduler waves, which dwarf the arithmetic whenever the edge list
-    * is small (the sf0.1 co-purchase graphs: 1600 nodes, each rank query
-    * spent 6-8 s on sub-millisecond math). Under the cap the SAME integer
-    * recurrence runs as a driver loop over the collected edge array —
-    * division order, floors and join semantics identical, property-pinned
-    * against the distributed rounds AND the BigInt reference — and above
-    * it nothing changes beyond one count on the already-persisted
-    * distinct frame. 2M edge rows ≈ 100-200 MB transient on the 8 GiB
-    * driver — bounded by design, the same order as a broadcast-join
-    * build side (the sf0.1 co-purchase graph is 1.17M symmetrized edge
-    * rows; the ×10 bench graph stays distributed, so BOTH paths run
-    * under measurement every round). Value and bounding argument live in
-    * [[DriverGates.RankGraphEdgeCap]] with the other gate budgets. */
-  val RankGraphEdgeCap: Long = DriverGates.RankGraphEdgeCap
-
-  /** The shared driver-side fixed point — index-array form (r16
-    * optimization): node keys map to dense ints ONCE, then every round is
-    * a primitive-array pass (the boxed HashMap[Any, Long] rounds were the
-    * single largest phase of each gated rank query — 1.3 s of the q38
-    * gate's 2.9 s at sf0.1, measured by phase split). The recurrence is
-    * UNCHANGED: a node absent from `ranks` contributes nothing (hasRank),
-    * a node receiving no contribution this round drops out of the next
-    * (hasContrib — a zero-valued contribution still counts as present,
-    * exactly like the old map's getOrElse+update), the teleport adds only
-    * onto present nodes, and all arithmetic is the same Long floor math.
-    * `contribOf(rank, edgeIdx)` is a primitive-specialized closure over
-    * per-edge arrays; `init`/`teleportOf` keep the old per-key contract.
-    * Exactness: integer sums are order-free, so array edge order vs map
-    * iteration order cannot change a single bit. */
-  private final class DriverGraph(rows: Array[org.apache.spark.sql.Row]) {
+  /** The driver twin's indexed edge list. Node keys map to dense ints
+    * ONCE, so every phase is a primitive-array pass. Sources are indexed
+    * first: they take `0 until nSrc`, the initial-score domain (HITS's
+    * hubs), so `n == nSrc` IS "dst-set ⊆ src-set". */
+  private final class DriverGraph(rows: Array[org.apache.spark.sql.Row],
+      weighted: Boolean) {
     val m = rows.length
-    val nodeOf = new scala.collection.mutable.HashMap[Any, Int]()
+    private val nodeOf = new scala.collection.mutable.HashMap[Any, Int]()
     val srcIdx = new Array[Int](m)
     val dstIdx = new Array[Int](m)
     private def idx(k: Any): Int =
       nodeOf.getOrElseUpdate(k, nodeOf.size)
-    // sources first: the source set IS the init/outdeg domain
     var e = 0
     while (e < m) { srcIdx(e) = idx(rows(e).get(0)); e += 1 }
     val nSrc = nodeOf.size
@@ -89,336 +90,341 @@ object Graph {
     val n = nodeOf.size // sources ∪ destinations
     val keys = new Array[Any](n)
     nodeOf.foreach { case (k, i) => keys(i) = k }
-    val outdeg = new Array[Long](n)
+    val w: Array[Long] =
+      if (weighted) rows.map(_.getLong(2)) else Array.emptyLongArray
+    /** The share denominator per source: out-degree, or W(u). */
+    val deg = new Array[Long](n)
     e = 0
-    while (e < m) { outdeg(srcIdx(e)) += 1L; e += 1 }
+    while (e < m) { deg(srcIdx(e)) += (if (weighted) w(e) else 1L); e += 1 }
   }
 
-  private def driverRankLoop(g: DriverGraph,
-      init: Iterable[(Any, Long)], teleportOf: Any => Long, iters: Int,
-      contribOf: (Long, Int) => Long)
-      : scala.collection.mutable.HashMap[Any, Long] = {
-    val n = g.n
-    var ranks = new Array[Long](n)
-    var hasRank = new Array[Boolean](n)
-    init.foreach { case (k, v) =>
-      val i = g.nodeOf(k); ranks(i) = v; hasRank(i) = true }
-    val teleport = new Array[Long](n)
-    var j = 0
-    while (j < n) { teleport(j) = teleportOf(g.keys(j)); j += 1 }
-    var it = 0
-    while (it < iters) {
-      it += 1
-      val contrib = new Array[Long](n)
-      val hasContrib = new Array[Boolean](n)
+  /** The driver twin's one phase: every edge whose `from` end holds a
+    * score adds its share into its `to` end, then the node step — add
+    * `teleport(j)`, or (None) max-normalize to S. Exactly the distributed
+    * twin's inner join + groupBy: a node that receives nothing drops out
+    * of the next phase, a zero share still counts as received, and the
+    * teleport lands only on receiving nodes.
+    *
+    * The one overflow rule: sums run in Long through `addExact` (PageRank
+    * mass stays ≤ S, so its sums never leave it); a HITS sum that would
+    * wrap — in-degree past ~9.2M — redoes the phase in BigInt, and the
+    * normalization (raw·S) div max is BigInt per node, the distributed
+    * twin's DECIMAL(38,0) arithmetic. */
+  private def driverPhase(n: Int, from: Array[Int], to: Array[Int],
+      in: Array[Long], inHas: Array[Boolean], share: (Long, Int) => Long,
+      teleport: Option[Array[Long]]): (Array[Long], Array[Boolean]) = {
+    val has = new Array[Boolean](n)
+    val raw = new Array[Long](n)
+    val rawB: Array[BigInt] = try {
       var e = 0
-      while (e < g.m) {
-        val s = g.srcIdx(e)
-        if (hasRank(s)) {
-          val d = g.dstIdx(e)
-          contrib(d) += contribOf(ranks(s), e)
-          hasContrib(d) = true
+      while (e < from.length) {
+        val s = from(e)
+        if (inHas(s)) {
+          val d = to(e)
+          raw(d) = Math.addExact(raw(d), share(in(s), e))
+          has(d) = true
         }
         e += 1
       }
-      j = 0
-      while (j < n) {
-        if (hasContrib(j)) contrib(j) += teleport(j)
-        j += 1
+      null
+    } catch { case _: ArithmeticException =>
+      val b = Array.fill(n)(BigInt(0))
+      var e = 0
+      while (e < from.length) {
+        val s = from(e)
+        if (inHas(s)) { b(to(e)) += share(in(s), e); has(to(e)) = true }
+        e += 1
       }
-      ranks = contrib; hasRank = hasContrib
+      b
     }
-    val out = new scala.collection.mutable.HashMap[Any, Long]()
-    j = 0
-    while (j < n) { if (hasRank(j)) out.update(g.keys(j), ranks(j)); j += 1 }
-    out
-  }
-
-  private def rankDf(template: DataFrame, keyCol: String,
-      ranks: scala.collection.Map[Any, Long], outCol: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        template.schema(keyCol).dataType),
-      org.apache.spark.sql.types.StructField(outCol,
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    template.sparkSession.createDataFrame(
-      ranks.toSeq.map { case (k, v) =>
-        org.apache.spark.sql.Row(k, v) }.asJava, schema)
-      .orderBy("node")
-  }
-
-  /** The rank operators' symmetry contract, VALIDATED (not just
-    * documented): every destination must also appear as a source —
-    * otherwise the inner join+groupBy round silently drops no-in-edge
-    * nodes after round 1 and leaks dangling mass instead of failing.
-    * One anti-join count over the (persisted) edge frame, piggybacked on
-    * the materialization pass — cheap relative to `iters` rounds of
-    * joins. Disable via spark.graft.graph.validateEdges=false if a
-    * caller has already proven symmetry upstream. */
-  private def validateSymmetry(ep: DataFrame, deg: DataFrame): Unit = {
-    val conf = ep.sparkSession.conf
-      .get("spark.graft.graph.validateEdges", "true")
-    if (conf.toBoolean) {
-      // anti-join straight on the edge frame (no distinct — that forced a
-      // full dst shuffle; the planner broadcasts the checkpointed deg
-      // frame when it fits and falls back to shuffle when N is huge — no
-      // explicit hint, which would OOM a billion-node broadcast), and
-      // limit(1): the check needs existence, not a census
-      val dangling = ep.select(col("dst"))
-        .join(deg.select(col("src").as("dst")), Seq("dst"), "left_anti")
-        .limit(1).count()
-      require(dangling == 0L,
-        "rank iteration requires dst-set ⊆ src-set (symmetrize the " +
-          "edge list for undirected graphs); found destination node(s) " +
-          "with no out-edges — their rank would silently vanish after " +
-          "round 1")
+    def rawAt(j: Int): BigInt = if (rawB == null) BigInt(raw(j)) else rawB(j)
+    val out = new Array[Long](n)
+    var j = 0
+    teleport match {
+      case Some(tp) =>
+        while (j < n) {
+          if (has(j)) out(j) =
+            if (rawB == null) raw(j) + tp(j) else (rawB(j) + tp(j)).toLong
+          j += 1
+        }
+      case None =>
+        var mx = BigInt(0)
+        while (j < n) { if (has(j) && rawAt(j) > mx) mx = rawAt(j); j += 1 }
+        j = 0
+        while (j < n) {
+          if (has(j)) out(j) = (rawAt(j) * Scale / mx).toLong
+          j += 1
+        }
     }
+    (out, has)
   }
 
-  /** The rank family's per-round broadcast hint, applied in ONE place
-    * (pageRank, weighted, personalized, HITS): a node-count-bounded score
-    * frame gets an explicit broadcast against the cached edge frame so no
-    * round re-sorts/re-shuffles the edges (the ×100-probe q38/q42
-    * lesson); past [[DriverGates.RankBroadcastNodeCap]] the hint drops
-    * and the planner/AQE picks the shuffle join. The guard must measure
-    * the SCORE frame's domain (nodes), never the edge count — see the
-    * HITS note at its call site. */
+  private def requireSymmetric(ok: Boolean): Unit =
+    require(ok, "rank iteration requires dst-set ⊆ src-set (symmetrize " +
+      "the edge list for undirected graphs); found destination node(s) " +
+      "with no out-edges — their rank would silently vanish after round 1")
+
+  /** The rank family's per-round broadcast hint: a node-bounded score
+    * frame is broadcast against the cached edges, so no round re-sorts or
+    * re-shuffles the edge frame (the ×100-probe q38/q42 lesson); past
+    * [[DriverGates.RankBroadcastNodeCap]] the planner/AQE picks the join.
+    * The guard measures the SCORE frame's domain (nodes), never edges: at
+    * the ×100 probe q42's 117M edges dwarfed the cap while its 1.6M-node
+    * score frames were exactly the side the hint exists for. */
   private def rankBroadcastSide(nodeCount: Long)(f: DataFrame): DataFrame =
     if (nodeCount <= DriverGates.RankBroadcastNodeCap) broadcast(f) else f
 
-  /** Big-graph preparation over the ALREADY-distincted, persisted edge
-    * frame [[collectedEdges]] hands back when the cap doesn't fire. */
-  private def prepareEdges(e: DataFrame): PreppedEdges = {
-    val parts = sizedParts(e)
-    val ep = e.repartition(parts, col("src")).persist(Mem)
-    val deg = ep.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    val ej = ep.join(deg, "src")
-      .repartition(parts, col("src"))
-      .persist(Mem)
-    val m = ej.count() // materialize before the rounds so e/ep can drop early
-    validateSymmetry(ep, deg)
-    e.unpersist(); ep.unpersist()
-    val n = deg.count()
-    require(n >= 1, "rank iteration needs a non-empty edge list")
-    PreppedEdges(ej, deg, n, m)
-  }
-
-  /** The small-graph entry: distinct the edge list ONCE (the only real
-    * data work — at gate scale everything else prepareEdges does is
-    * machinery for rounds that won't run) and, under the cap, hand back
-    * the collected rows; above it, None — the caller falls through to
-    * [[prepareEdges]], whose own distinct reuses this cache. Out-degrees
-    * and the symmetry contract are driver-side arithmetic on the
-    * collected array (same check, same failure message, honoring the
-    * same validateEdges switch).
-    *
-    * `assumeDistinct` (r17, guide §2.4 "a distinct on data that is
-    * already unique"): a caller that can PROVE its edge list is
-    * duplicate-free skips the dedup — a full-width exchange + hash
-    * aggregate over the whole edge frame, the single largest phase of
-    * every gated rank query (measured 1.35–1.75 s of q38b's ~3.5 s warm
-    * wall at sf0.1, and a corpus-width shuffle at any scale). The
-    * contract mirrors validateEdges: opt-in, default-off, and a wrong
-    * claim double-counts contributions — callers must state their proof
-    * at the call site. */
-  private def collectedEdges(edges: DataFrame, cap: Long,
-      assumeDistinct: Boolean = false)
-      : (DataFrame, Option[Array[org.apache.spark.sql.Row]]) = {
-    val sel = edges.select("src", "dst")
-    val e = (if (assumeDistinct) sel else sel.distinct()).persist(Mem)
-    val m = e.count()
-    if (m <= cap) {
-      val rows = e.collect()
-      e.unpersist()
-      (e, Some(rows))
-    } else (e, None)
-  }
-
-  /** Build the indexed driver graph and apply the shared contract checks
-    * (same failure messages as the distributed path). The symmetry check
-    * is structural: a destination never seen as a source indexes past
-    * nSrc, so `n == nSrc` IS "dst-set ⊆ src-set". */
-  private def driverGraph(rows: Array[org.apache.spark.sql.Row],
-      validate: Boolean): DriverGraph = {
-    val g = new DriverGraph(rows)
-    if (validate) require(g.n == g.nSrc,
-      "rank iteration requires dst-set ⊆ src-set (symmetrize the " +
-        "edge list for undirected graphs); found destination node(s) " +
-        "with no out-edges — their rank would silently vanish after " +
-        "round 1")
-    require(g.nSrc > 0, "rank iteration needs a non-empty edge list")
-    g
-  }
-
-  private def validateConf(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.graph.validateEdges", "true").toBoolean
-
-  /** PageRank in 10⁻¹² fixed point — every rank is a BIGINT number of
-    * "picoranks", so all arithmetic is integer (exact, overflow-safe:
-    * ranks ≤ 10¹², ×85 ≤ 8.5·10¹³) and every aggregation is ORDER-FREE.
-    * That is what makes the result engine-identical and oracle-gateable:
-    * float PageRank sums contributions in partition order, so no two runs
-    * — let alone two engines — agree bit-for-bit; fixed point turns the
-    * whole iteration into exact integer dataflow. (Production variants
-    * that want IEEE doubles lose only the gate, not the plan — same
-    * joins, same reductions.) The floor in each `div` leaks ≤ 1 picorank
-    * per edge per round — bounded, deterministic, identical in both
-    * engines.
-    *
-    * Model: r₀(v) = S div N; rₜ₊₁(v) = (15·S) div (100·N) +
-    * Σ_{u→v} (85·rₜ(u)) div (100·outdeg(u)), damping 0.85, S = 10¹².
-    * Dangling nodes are the CALLER's contract: every node must have at
-    * least one out-edge (symmetrize the edge list for undirected graphs —
-    * what [[graft.queries.AnalyticsQueries]] q38 does), because a rank
-    * row whose node never appears as a source would need the dangling-
-    * mass redistribution term, and a node with no IN-edges would need a
-    * left join; requiring out∪in symmetry keeps every round one inner
-    * join + one aggregate.
-    *
-    * Scale shape: `edges` is persisted and pre-partitioned on `src`, so
-    * each round shuffles ONLY the rank frame (N rows) into the edge
-    * partitioning, then one partial-aggregated sum by `dst` — per-round
-    * cost is one |edges| join + one |edges|→N reduction, the same shape
-    * GraphX/Pregel lowers to. Iterations are FIXED (`iters`), not
-    * converged-on-a-float-epsilon: deterministic round count is both the
-    * oracle contract and the production pattern (rank deltas at 8 rounds
-    * are far inside any downstream consumer's tolerance).
-    *
-    * Input: (src, dst) string-keyed edge list (any key type works — keys
-    * are only grouped/joined). Output: (node, rank_fp) — exact BIGINT
-    * picoranks, ordered by node. */
-  def pageRank(edges: DataFrame, iters: Int = 8,
-      smallGraphCap: Long = RankGraphEdgeCap,
-      assumeDistinct: Boolean = false): DataFrame = {
-    require(iters >= 1, s"pageRank needs iters >= 1, got $iters")
-    val scale = 1000000000000L
-    val (e, small) = collectedEdges(edges, smallGraphCap, assumeDistinct)
-    small match {
-      case Some(rows) =>
-        val g = driverGraph(rows, validateConf(e))
-        val n = g.nSrc
-        val teleport = (15L * scale) / (100L * n)
-        val init = (0 until g.nSrc).map(i => g.keys(i) -> scale / n)
-        val ranks = driverRankLoop(g, init, _ => teleport, iters,
-          (r, ei) => (85L * r) / (100L * g.outdeg(g.srcIdx(ei))))
-        return rankDf(e, "src", ranks, "rank_fp")
-      case None => ()
+  /** Runs `spec`: shared contract checks and edge prep, then the gate. */
+  private def rank(spec: RankSpec, edges: DataFrame, iters: Int,
+      smallGraphCap: Long, assumeDistinct: Boolean = false): DataFrame = {
+    require(iters >= 1, s"${spec.op} needs iters >= 1, got $iters")
+    val seeds = spec.seeds.map { s =>
+      val set = s.select(col("node")).distinct().localCheckpoint()
+      val k = set.count()
+      require(k >= 1, s"${spec.op} needs at least one seed")
+      (set, k)
     }
-    val PreppedEdges(ej, deg, n, _) = prepareEdges(e)
-    val teleport = (15L * scale) / (100L * n)
-    // the per-round score frame is broadcast-sized long after the edge
-    // frame stops being: an explicit hint keeps every round a broadcast
-    // hash join over the CACHED edges (no per-round sort/shuffle of the
-    // edge frame — the ×100-probe q38 lesson, DriverGates doc)
-    val rankSide: DataFrame => DataFrame = rankBroadcastSide(n)
-    var ranks = deg.select(col("src").as("node"), lit(scale / n).as("r"))
-      .localCheckpoint()
-    var i = 0
-    while (i < iters) {
-      i += 1
-      ranks = ej.join(rankSide(ranks.withColumnRenamed("node", "src")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(expr("(85 * r) div (100 * outdeg)")).as("contrib"))
-        .select(col("node"), (lit(teleport) + col("contrib")).as("r"))
-      // truncate lineage every SECOND round (and before returning): a
-      // 2-round plan is still bounded, and halving the eager
-      // materialization jobs shaves the per-round job floor — the
-      // checkpoint cadence is a floor-vs-lineage dial, not correctness
-      if (i % 2 == 0 || i == iters) ranks = ranks.localCheckpoint()
-    }
-    ej.unpersist()
-    ranks.select(col("node"), col("r").as("rank_fp")).orderBy("node")
-  }
-
-  /** Weighted PageRank — [[pageRank]] with integer edge weights: a node
-    * distributes its rank mass proportionally to each out-edge's weight
-    * instead of uniformly (co-purchase STRENGTH, link multiplicity,
-    * citation counts — the signal the unweighted walk discards). Same
-    * fixed point; the contribution is
-    * (((85·r) div 100) · w) div W(u), W(u) = Σ out-weights — the inner
-    * div runs FIRST so the product stays ≤ 8.5·10¹¹·w (overflow-safe for
-    * any weight ≤ 10⁷; one extra floor per edge, same determinism
-    * argument), and that exact evaluation order is the model both
-    * engines state. Duplicate (src, dst) rows sum their weights; weights
-    * must be positive integers. */
-  def weightedPageRank(edges: DataFrame, iters: Int = 8,
-      smallGraphCap: Long = RankGraphEdgeCap): DataFrame = {
-    require(iters >= 1, s"weightedPageRank needs iters >= 1, got $iters")
-    val e = edges.select(col("src"), col("dst"),
-        col("w").cast("long").as("w"))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .persist(Mem)
-    val scale = 1000000000000L
-    val mEdges = e.count()
-    require(mEdges >= 1, "rank iteration needs a non-empty edge list")
-    if (mEdges <= smallGraphCap) {
-      val rows = e.collect()
-      e.unpersist()
-      // driver twins of the distributed path's contract checks — same
-      // failure messages, same thresholds
-      val ws = rows.map(_.getLong(2))
-      val (wMin, wMax) = (ws.min, ws.max)
-      require(wMin >= 1L && wMax <= 10000000L,
-        s"weightedPageRank needs positive integer weights <= 1e7 after " +
-          s"per-(src,dst) summing (overflow-safe fixed point); got " +
-          s"min=$wMin max=$wMax")
-      val g = driverGraph(rows, validateConf(e))
-      val wdeg = new Array[Long](g.n)
-      var ei = 0
-      while (ei < g.m) { wdeg(g.srcIdx(ei)) += ws(ei); ei += 1 }
-      val n = g.nSrc
-      val teleport = (15L * scale) / (100L * n)
-      val init = (0 until g.nSrc).map(i => g.keys(i) -> scale / n)
-      // the stated inner-div-first order, verbatim: overflow-safe for
-      // any w ≤ 1e7 (enforced above), floors identical to the SQL div
-      val ranks = driverRankLoop(g, init, _ => teleport, iters,
-        (r, eidx) => (((85L * r) / 100L) * ws(eidx)) / wdeg(g.srcIdx(eidx)))
-      return rankDf(e, "src", ranks, "rank_fp")
-    }
-    val parts = sizedParts(e)
-    val ep = e.repartition(parts, col("src")).persist(Mem)
-    val deg = ep.groupBy("src").agg(sum(col("w")).as("wdeg"))
-      .localCheckpoint() // materialized before the unpersist (the
-                         // prepareEdges lesson — shared invariant)
-    val ej = ep.join(deg, "src")
-      .repartition(parts, col("src"))
-      .persist(Mem)
-    ej.count()
-    // Enforce the documented weight contract instead of wrapping Long:
-    // w < 1 makes the proportional model meaningless; w > 10⁷ can
-    // overflow ((85·r) div 100)·w ≈ 8.5·10¹¹·w past Long.MaxValue.
-    // One tiny aggregate over the persisted aggregated-edge frame.
-    val wRow = e.agg(min(col("w").cast("long")).as("mn"),
-      max(col("w").cast("long")).as("mx")).first()
-    require(!wRow.isNullAt(0), "rank iteration needs a non-empty edge list")
-    val (wMin, wMax) = (wRow.getLong(0), wRow.getLong(1))
-    require(wMin >= 1L && wMax <= 10000000L,
-      s"weightedPageRank needs positive integer weights <= 1e7 after " +
+    val e = (
+      if (spec.weighted) edges.select(col("src"), col("dst"),
+          col("w").cast("long").as("w"))
+        .groupBy("src", "dst").agg(sum("w").as("w"))
+      else {
+        val pairs =
+          if (spec.hits) edges.select(col("hub").as("src"), col("auth").as("dst"))
+          else edges.select("src", "dst")
+        if (assumeDistinct) pairs else pairs.distinct()
+      }).persist(Mem)
+    // weighted: the count and the weight range in one pass
+    val stats = if (spec.weighted)
+      Some(e.agg(count(lit(1)), min(col("w")), max(col("w"))).first())
+    else None
+    val m = stats.fold(e.count())(_.getLong(0))
+    require(m >= 1L || spec.hits, "rank iteration needs a non-empty edge list")
+    // w < 1 makes the proportional model meaningless, and w > 10⁷ could
+    // overflow ((85·r) div 100)·w ≈ 8.5·10¹¹·w past Long.MaxValue
+    stats.foreach(st => require(st.getLong(1) >= 1L && st.getLong(2) <= 10000000L,
+      s"${spec.op} needs positive integer weights <= 1e7 after " +
         s"per-(src,dst) summing (overflow-safe fixed point); got " +
-        s"min=$wMin max=$wMax")
-    validateSymmetry(ep, deg)
-    e.unpersist(); ep.unpersist()
-    val n = deg.count()
-    require(n >= 1, "rank iteration needs a non-empty edge list")
-    val teleport = (15L * scale) / (100L * n)
-    // broadcast the round's score frame under the node cap (see pageRank)
-    val rankSide: DataFrame => DataFrame = rankBroadcastSide(n)
-    var ranks = deg.select(col("src").as("node"), lit(scale / n).as("r"))
-      .localCheckpoint()
+        s"min=${st.getLong(1)} max=${st.getLong(2)}"))
+    if (m <= smallGraphCap) {
+      val rows = e.collect()
+      e.unpersist()
+      driverRank(spec, e, rows, iters, seeds)
+    } else distributedRank(spec, e, m, iters, seeds)
+  }
+
+  /** The teleport domain's size k (seeds) or N (nodes) fixes the initial
+    * score and the per-round teleport: S div k and (15·S) div (100·k);
+    * HITS starts its hubs at S and has no teleport. */
+  private def startAndTeleport(spec: RankSpec, k: Long): (Long, Long) =
+    if (spec.hits) (Scale, 0L) else (Scale / k, (15L * Scale) / (100L * k))
+
+  private def driverRank(spec: RankSpec, e: DataFrame,
+      rows: Array[org.apache.spark.sql.Row], iters: Int,
+      seeds: Option[(DataFrame, Long)]): DataFrame = {
+    val g = new DriverGraph(rows, spec.weighted)
+    if (!spec.hits) requireSymmetric(g.n == g.nSrc)
+    // seed VALUES are cohort-sized by the operator's contract; under the
+    // edge cap they are dwarfed by the edge collect anyway
+    val seedVals = seeds.map(_._1.collect().map(_.get(0)).toSet)
+    val isSeed = Array.tabulate(g.n)(j => seedVals.forall(_(g.keys(j))))
+    val (start, tp) = startAndTeleport(spec, seeds.fold(g.nSrc.toLong)(_._2))
+    val share: (Long, Int) => Long =
+      if (spec.hits) (r, _) => r
+      else if (spec.weighted)
+        (r, ei) => (((85L * r) / 100L) * g.w(ei)) / g.deg(g.srcIdx(ei))
+      else (r, ei) => (85L * r) / (100L * g.deg(g.srcIdx(ei)))
+    val teleport =
+      if (spec.hits) None else Some(isSeed.map(s => if (s) tp else 0L))
+    var fwd = Array.tabulate(g.n)(j =>
+      if (j < g.nSrc && isSeed(j)) start else 0L)
+    var fwdHas = Array.tabulate(g.n)(_ < g.nSrc)
+    var rev = fwd
+    var revHas = fwdHas
     var i = 0
     while (i < iters) {
       i += 1
-      ranks = ej.join(rankSide(ranks.withColumnRenamed("node", "src")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(expr("(((85 * r) div 100) * w) div wdeg")).as("contrib"))
-        .select(col("node"), (lit(teleport) + col("contrib")).as("r"))
-      if (i % 2 == 0 || i == iters) ranks = ranks.localCheckpoint()
+      val (r, rh) = driverPhase(g.n, g.srcIdx, g.dstIdx, fwd, fwdHas, share,
+        teleport)
+      rev = r; revHas = rh
+      if (spec.hits) {
+        val (h, hh) = driverPhase(g.n, g.dstIdx, g.srcIdx, rev, revHas,
+          share, None)
+        fwd = h; fwdHas = hh
+      } else { fwd = rev; fwdHas = revHas }
     }
-    ej.unpersist()
-    ranks.select(col("node"), col("r").as("rank_fp")).orderBy("node")
+    // rows and schema exactly as the distributed twin's final select
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    def scored(s: Array[Long], has: Array[Boolean]) =
+      (0 until g.n).iterator.filter(has).map(j => (g.keys(j), s(j)))
+    val (schema, out, order) =
+      if (spec.hits) (StructType(Seq(
+          StructField("kind", StringType, nullable = false),
+          StructField("node", e.schema("dst").dataType),
+          StructField("score_fp", LongType, nullable = false))),
+        scored(rev, revHas).map { case (k, v) => Row("auth", k, v) } ++
+          scored(fwd, fwdHas).map { case (k, v) => Row("hub", k, v) },
+        Seq("kind", "node"))
+      else (StructType(Seq(StructField("node", e.schema("src").dataType),
+          StructField("rank_fp", LongType, nullable = false))),
+        scored(fwd, fwdHas).map { case (k, v) => Row(k, v) }, Seq("node"))
+    e.sparkSession.createDataFrame(out.toSeq.asJava, schema)
+      .orderBy(order.map(col): _*)
   }
+
+  /** The distributed twin: a persisted, `src`-partitioned edge frame; each
+    * phase shuffles only the score frame into it, then one
+    * partial-aggregated reduction by `to`; `localCheckpoint` keeps the plan
+    * from growing with the round count. */
+  private def distributedRank(spec: RankSpec, e: DataFrame, m: Long,
+      iters: Int, seeds: Option[(DataFrame, Long)]): DataFrame = {
+    // parallelism from the measured edge count (~100k edges per task):
+    // every round pays |stages|·parts of task scheduling, so a session-wide
+    // partition count oversized for the graph is pure floor
+    val parts = math.max(1, math.min(
+      e.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      (m / 100000L).toInt + 1))
+    val ep = e.repartition(parts, col("src")).persist(Mem)
+    // MATERIALIZED before the edge caches drop: a lazy reference would
+    // re-run the caller's whole edge plan after the unpersist (measured
+    // 4x on the q38 gate before this was pinned)
+    val deg = ep.groupBy("src")
+      .agg((if (spec.weighted) sum(col("w")) else count(lit(1))).as("deg"))
+      .localCheckpoint()
+    val (fwdEdges, revEdges) =
+      if (spec.hits) {
+        // HITS's share needs no degree; its second phase runs over the
+        // edges partitioned on `dst`
+        val er = e.repartition(parts, col("dst")).persist(Mem)
+        er.count()
+        (ep, Some(er))
+      } else {
+        val ej = ep.join(deg, "src").repartition(parts, col("src")).persist(Mem)
+        ej.count()
+        // anti-join straight on the edge frame, limit(1): the check needs
+        // existence, not a census; no hint, so a billion-node deg frame
+        // shuffles instead of broadcasting
+        requireSymmetric(ep.select(col("dst"))
+          .join(deg.select(col("src").as("dst")), Seq("dst"), "left_anti")
+          .limit(1).count() == 0L)
+        ep.unpersist()
+        (ej, None)
+      }
+    e.unpersist()
+    val n = deg.count()
+    val side: DataFrame => DataFrame = rankBroadcastSide(revEdges.fold(n)(er =>
+      math.max(n, er.select(col("dst")).distinct().count())))
+    val (start, tp) = startAndTeleport(spec, seeds.fold(n)(_._2))
+    // node steps over a (node, raw) frame, both yielding (node, r)
+    def addTeleport(raw: DataFrame, v: Long): DataFrame = seeds match {
+      case None => raw.select(col("node"), (col("raw") + lit(v)).as("r"))
+      case Some((set, _)) => raw
+        .join(broadcast(set.withColumn("__seed", lit(1))), Seq("node"), "left")
+        .select(col("node"), (col("raw") +
+          when(col("__seed").isNotNull, lit(v)).otherwise(lit(0L))).as("r"))
+    }
+    def normalize(raw: DataFrame): DataFrame = {
+      // (raw·S) div max overflows BIGINT, so the product runs in
+      // DECIMAL(38,0), whose integral div matches DuckDB's HUGEINT `//`;
+      // the max rides a broadcast 1-row frame, no driver collect
+      val mx = raw.agg(max(col("raw")).as("mx"))
+      raw.crossJoin(broadcast(mx)).select(col("node"), expr(
+        s"CAST((CAST(raw AS DECIMAL(38,0)) * $Scale) div mx AS BIGINT)").as("r"))
+    }
+    val share =
+      if (spec.hits)
+        // HITS sums are not mass-bounded: r ≤ S summed over an in-degree
+        // past ~9.2M wraps Long, and a DECIMAL sum pays decimal math per
+        // row (~25% of the query). Split each term at 2²⁰ — the halves'
+        // BIGINT sums only wrap past 2⁴³ rows per group — and recombine
+        // in DECIMAL once per group: the oracle's HUGEINT values at
+        // Long speed.
+        sum(expr("r div 1048576")).cast("decimal(38,0)") * lit(1048576L) +
+          sum(expr("r % 1048576"))
+      else sum(expr(
+        if (spec.weighted) "(((85 * r) div 100) * w) div deg"
+        else "(85 * r) div (100 * deg)"))
+    def phase(edges: DataFrame, from: String, to: String,
+        scores: DataFrame): DataFrame = {
+      val raw = edges.join(side(scores.withColumnRenamed("node", from)), Seq(from))
+        .groupBy(col(to).as("node")).agg(share.as("raw"))
+      if (spec.hits) normalize(raw) else addTeleport(raw, tp)
+    }
+    var fwd = addTeleport(deg.select(col("src").as("node"), lit(0L).as("raw")),
+      start).localCheckpoint()
+    var rev = fwd
+    var i = 0
+    while (i < iters) {
+      i += 1
+      rev = phase(fwdEdges, "src", "dst", fwd)
+      revEdges match {
+        case Some(er) =>
+          // HITS checkpoints every phase EAGERLY: normalize reads its input
+          // twice (max + main lineage), so a lazy phase is re-evaluated
+          // under the next one (measured 94 → 146 CPU-s)
+          rev = rev.localCheckpoint()
+          fwd = phase(er, "dst", "src", rev).localCheckpoint()
+        case None =>
+          // every SECOND round (and the last): a 2-round plan is still
+          // bounded, and half the eager jobs shaves the per-round floor
+          fwd = if (i % 2 == 0 || i == iters) rev.localCheckpoint() else rev
+      }
+    }
+    fwdEdges.unpersist(); revEdges.foreach(_.unpersist())
+    if (spec.hits)
+      rev.select(lit("auth").as("kind"), col("node"), col("r").as("score_fp"))
+        .unionByName(fwd.select(lit("hub").as("kind"), col("node"),
+          col("r").as("score_fp")))
+        .orderBy("kind", "node")
+    else fwd.select(col("node"), col("r").as("rank_fp")).orderBy("node")
+  }
+
+  /** PageRank (Page et al. 1999), damping 0.85:
+    * r₀(v) = S div N; rₜ₊₁(v) = (15·S) div (100·N) +
+    * Σ_{u→v} (85·rₜ(u)) div (100·outdeg(u)).
+    * Input: (src, dst), any key type. Output: (node, rank_fp), by node.
+    * `assumeDistinct` skips the edge dedup — a full-width exchange, the
+    * largest phase of a gated rank query — for callers that PROVE their
+    * list duplicate-free at the call site; a wrong claim double-counts. */
+  def pageRank(edges: DataFrame, iters: Int = 8,
+      smallGraphCap: Long = DriverGates.RankGraphEdgeCap,
+      assumeDistinct: Boolean = false): DataFrame =
+    rank(RankSpec("pageRank"), edges, iters, smallGraphCap, assumeDistinct)
+
+  /** Weighted PageRank: rank mass flows along out-edges in proportion to
+    * their integer weight (co-purchase strength, link multiplicity):
+    * r₀(v) = S div N; rₜ₊₁(v) = (15·S) div (100·N) +
+    * Σ_{u→v} (((85·rₜ(u)) div 100)·w) div W(u),
+    * W(u) = Σ out-weights. The inner div runs FIRST, keeping the product
+    * ≤ 8.5·10¹¹·w. Duplicate (src, dst) rows sum their weights, which
+    * must then be integers in [1, 10⁷]. Input (src, dst, w). */
+  def weightedPageRank(edges: DataFrame, iters: Int = 8,
+      smallGraphCap: Long = DriverGates.RankGraphEdgeCap): DataFrame =
+    rank(RankSpec("weightedPageRank", weighted = true), edges, iters,
+      smallGraphCap)
+
+  /** Personalized PageRank (Haveliwala 2002): the random surfer restarts
+    * only at the k distinct `seeds` (column `node`), so rank measures
+    * affinity TO that cohort: r₀(v) = [v ∈ seeds]·(S div k);
+    * rₜ₊₁(v) = [v ∈ seeds]·((15·S) div (100·k)) + Σ_{u→v} (85·rₜ(u)) div (100·outdeg(u)).
+    * Seeds outside the graph forward no mass but still count in k. */
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
+      iters: Int = 8, smallGraphCap: Long = DriverGates.RankGraphEdgeCap,
+      assumeDistinct: Boolean = false): DataFrame =
+    rank(RankSpec("personalizedPageRank", seeds = Some(seeds)), edges, iters,
+      smallGraphCap, assumeDistinct)
+
+  /** HITS hubs and authorities (Kleinberg 1999), native to a BIPARTITE
+    * graph — no symmetrization, the two scores ARE the two node classes:
+    * hub₀ = S; per round auth(a) = norm(Σ_{h→a} hub(h)), then
+    * hub(h) = norm(Σ_{h→a} auth(a)), norm(x) = (x·S) div max x.
+    * Input: (hub, auth) directed edges. Output: (kind 'auth'|'hub', node,
+    * score_fp), by kind and node; an empty edge list gives no rows. */
+  def hits(edges: DataFrame, iters: Int = 8,
+      smallGraphCap: Long = DriverGates.RankGraphEdgeCap): DataFrame =
+    rank(RankSpec("hits", hits = true), edges, iters, smallGraphCap)
 
   /** Incremental connected components — maintain
     * [[graft.llm.TextDedup.dedupClusters]]' labels under STREAMING edge
@@ -552,68 +558,6 @@ object Graph {
     }
   }
 
-  /** Personalized PageRank (Haveliwala 2002): [[pageRank]] with the
-    * teleport restricted to a SEED cohort — the random surfer restarts
-    * only at seeds, so rank measures affinity TO that cohort (similar-
-    * customer discovery, cohort-conditioned recommendations) instead of
-    * global centrality. Same integer fixed point, same per-round
-    * join+reduce; the only deltas are the seed-conditional teleport term
-    * (one broadcast membership join per round — seed lists are
-    * cohort-sized) and a zero initial rank off-seed. Seeds outside the
-    * graph contribute no mass (they never receive or forward), but still
-    * count in the normalization — both faces of that choice are stated
-    * identically in the oracle. */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iters: Int = 8, smallGraphCap: Long = RankGraphEdgeCap,
-      assumeDistinct: Boolean = false): DataFrame = {
-    require(iters >= 1, s"personalizedPageRank needs iters >= 1, got $iters")
-    val seedSet = seeds.select(col("node")).distinct().localCheckpoint()
-    val k = seedSet.count()
-    require(k >= 1, "personalizedPageRank needs at least one seed")
-    val scale = 1000000000000L
-    val teleport = (15L * scale) / (100L * k)
-    val (e, small) = collectedEdges(edges, smallGraphCap, assumeDistinct)
-    small match {
-      case Some(rows) =>
-        // the seed VALUES are cohort-sized by the operator's contract
-        // (their count above is already a driver scalar); under the edge
-        // cap they are dwarfed by the edge collect anyway
-        val seedVals = seedSet.collect().map(_.get(0)).toSet
-        val g = driverGraph(rows, validateConf(e))
-        val init = (0 until g.nSrc).map { i =>
-          val nd = g.keys(i)
-          nd -> (if (seedVals(nd)) scale / k else 0L)
-        }
-        val ranks = driverRankLoop(g, init,
-          nd => if (seedVals(nd)) teleport else 0L, iters,
-          (r, ei) => (85L * r) / (100L * g.outdeg(g.srcIdx(ei))))
-        return rankDf(e, "src", ranks, "rank_fp")
-      case None => ()
-    }
-    val PreppedEdges(ej, deg, nNodes, _) = prepareEdges(e)
-    val flagged = seedSet.withColumn("__seed", lit(1))
-    // broadcast the round's score frame under the node cap (see pageRank)
-    val rankSide: DataFrame => DataFrame = rankBroadcastSide(nNodes)
-    var ranks = deg.select(col("src").as("node"))
-      .join(broadcast(flagged), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__seed").isNotNull, lit(scale / k)).otherwise(lit(0L)).as("r"))
-      .localCheckpoint()
-    var i = 0
-    while (i < iters) {
-      i += 1
-      ranks = ej.join(rankSide(ranks.withColumnRenamed("node", "src")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(expr("(85 * r) div (100 * outdeg)")).as("contrib"))
-        .join(broadcast(flagged), Seq("node"), "left")
-        .select(col("node"), (col("contrib") +
-          when(col("__seed").isNotNull, lit(teleport)).otherwise(lit(0L))).as("r"))
-      if (i % 2 == 0 || i == iters) ranks = ranks.localCheckpoint()
-    }
-    ej.unpersist()
-    ranks.select(col("node"), col("r").as("rank_fp")).orderBy("node")
-  }
-
   /** Triangle counting by the degree-ordered node-iterator (the
     * Schank/Wagner 2005 / GraphX algorithm) — the local-density signal
     * behind clustering coefficients and web-spam scoring (a link farm is
@@ -635,7 +579,7 @@ object Graph {
     * direction/multiplicity (normalized to distinct u<v here). Output:
     * (node, n_tri) per triangle-participating node, ordered by node. */
   def triangleCounts(edges: DataFrame,
-      smallGraphCap: Long = RankGraphEdgeCap): DataFrame = {
+      smallGraphCap: Long = DriverGates.RankGraphEdgeCap): DataFrame = {
     val e = edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
@@ -820,200 +764,6 @@ object Graph {
     out
   }
 
-  /** HITS hubs-and-authorities (Kleinberg 1999) — the OTHER classic link
-    * analysis, and the one that fits a BIPARTITE graph natively (PageRank
-    * needs symmetrization; HITS's two mutually-recursive scores ARE the
-    * two node classes): authority(a) = Σ hub scores pointing at it,
-    * hub(h) = Σ authority scores it points at, each vector max-normalized
-    * per round.
-    *
-    * Integer fixed point like [[pageRank]], with one extra trick: the
-    * normalization (raw · S) div max would overflow BIGINT (raw is up to
-    * maxdeg·S ≈ 10²⁸ after the multiply), so the product runs in
-    * DECIMAL(38,0), whose integral `div` is bit-identical to DuckDB's
-    * HUGEINT `//` (pinned by the oracle). The per-round max rides a
-    * broadcast 1-row frame — no driver collect in the loop, and sums are
-    * order-free exact integers throughout.
-    *
-    * Scale shape: two join+partial-agg passes per round over the cached
-    * edge frame (the pageRank shape, twice), plus two 1-row max
-    * aggregates. Input: (hub, auth) directed bipartite edges. Output:
-    * (kind 'auth'|'hub', node, score_fp) after `iters` full rounds,
-    * max-normalized so the top score is exactly S = 10¹². */
-  def hits(edges: DataFrame, iters: Int = 8,
-      smallGraphCap: Long = RankGraphEdgeCap): DataFrame = {
-    require(iters >= 1, s"hits needs iters >= 1, got $iters")
-    val e = edges.select("hub", "auth").distinct().persist(Mem)
-    val m = e.count()
-    if (m <= smallGraphCap) {
-      val pairs = e.collect()
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("kind",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("node",
-          e.schema("auth").dataType),
-        org.apache.spark.sql.types.StructField("score_fp",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      e.unpersist()
-      val sc = BigInt(1000000000000L)
-      // index-array phases (r16 optimization — the rank-family rewrite
-      // applied to the bipartite recurrence): hubs and auths index into
-      // separate dense int domains; each phase is one primitive pass over
-      // the pair arrays. Raw sums accumulate in Long via addExact — exact
-      // whenever they fit (scores ≤ 10¹², so any graph under ~9.2M edges
-      // per receiving node cannot wrap), with a per-phase BigInt fallback
-      // that reproduces the old arithmetic verbatim if one ever does.
-      // Normalization stays BigInt per NODE ((raw · S) div max, same
-      // floor), so every emitted value is bit-identical to the old
-      // all-BigInt phases.
-      val mP = pairs.length
-      val hubOf = new scala.collection.mutable.HashMap[Any, Int]()
-      val authOf = new scala.collection.mutable.HashMap[Any, Int]()
-      val hIdx = new Array[Int](mP)
-      val aIdx = new Array[Int](mP)
-      var pi = 0
-      while (pi < mP) {
-        hIdx(pi) = hubOf.getOrElseUpdate(pairs(pi).get(0), hubOf.size)
-        aIdx(pi) = authOf.getOrElseUpdate(pairs(pi).get(1), authOf.size)
-        pi += 1
-      }
-      val nHub = hubOf.size
-      val nAuth = authOf.size
-      var hubS = Array.fill(nHub)(1000000000000L)
-      var hubHas = Array.fill(nHub)(true)
-      var authS = new Array[Long](nAuth)
-      var authHas = new Array[Boolean](nAuth)
-      // one Long-exact phase: sum scoreOf over pairs into the out domain,
-      // then normalize by the max. Falls back to BigInt sums on overflow.
-      def phase(nOut: Int, outIdx: Array[Int], inIdx: Array[Int],
-          inS: Array[Long], inHas: Array[Boolean])
-          : (Array[Long], Array[Boolean]) = {
-        val has = new Array[Boolean](nOut)
-        val outV = new Array[Long](nOut)
-        def normalize(raw: Int => BigInt): Unit = {
-          var mx = BigInt(0)
-          var j = 0
-          while (j < nOut) {
-            if (has(j) && raw(j) > mx) mx = raw(j); j += 1 }
-          j = 0
-          while (j < nOut) {
-            if (has(j)) outV(j) = ((raw(j) * sc) / mx).toLong; j += 1 }
-        }
-        try {
-          val rawL = new Array[Long](nOut)
-          var e2 = 0
-          while (e2 < mP) {
-            val s = inIdx(e2)
-            if (inHas(s)) {
-              val d = outIdx(e2)
-              rawL(d) = Math.addExact(rawL(d), inS(s))
-              has(d) = true
-            }
-            e2 += 1
-          }
-          normalize(j => BigInt(rawL(j)))
-        } catch { case _: ArithmeticException =>
-          java.util.Arrays.fill(has, false)
-          val rawB = Array.fill(nOut)(BigInt(0))
-          var e2 = 0
-          while (e2 < mP) {
-            val s = inIdx(e2)
-            if (inHas(s)) {
-              val d = outIdx(e2)
-              rawB(d) += inS(s)
-              has(d) = true
-            }
-            e2 += 1
-          }
-          normalize(rawB)
-        }
-        (outV, has)
-      }
-      var i = 0
-      while (i < iters && mP > 0) {
-        i += 1
-        val (a, ah) = phase(nAuth, aIdx, hIdx, hubS, hubHas)
-        authS = a; authHas = ah
-        val (h, hh) = phase(nHub, hIdx, aIdx, authS, authHas)
-        hubS = h; hubHas = hh
-      }
-      import scala.jdk.CollectionConverters._
-      val authKeys = new Array[Any](nAuth)
-      authOf.foreach { case (k, j) => authKeys(j) = k }
-      val hubKeys = new Array[Any](nHub)
-      hubOf.foreach { case (k, j) => hubKeys(j) = k }
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        ((0 until nAuth).iterator.filter(authHas).map(j =>
-          org.apache.spark.sql.Row("auth", authKeys(j), authS(j))).toSeq ++
-         (0 until nHub).iterator.filter(hubHas).map(j =>
-          org.apache.spark.sql.Row("hub", hubKeys(j), hubS(j))).toSeq).asJava
-      return e.sparkSession.createDataFrame(rows, outSchema)
-        .orderBy("kind", "node")
-    }
-    val parts = sizedParts(e)
-    val eh = e.repartition(parts, col("hub")).persist(Mem)
-    val ea = e.repartition(parts, col("auth")).persist(Mem)
-    eh.count(); ea.count(); e.unpersist()
-    val scale = 1000000000000L
-    // broadcast each round's score frame under the node cap (see
-    // pageRank) — measured on the NODE counts, not m: at the ×100 probe
-    // the edge count (117M) dwarfed the cap while the score frames
-    // (1.6M nodes ≈ 26 MB) were exactly the broadcast-sized side the
-    // hint exists for, and an m-guard left all 16 phases as sort-merge
-    // joins (q42 = 128.6 s vs q43's 64.6 with the hint firing). Two
-    // one-off aggregates over the persisted edge frames buy 16 rounds
-    // of broadcast hash joins.
-    val nScore = math.max(eh.select(col("hub")).distinct().count(),
-      ea.select(col("auth")).distinct().count())
-    val scoreSide: DataFrame => DataFrame = rankBroadcastSide(nScore)
-    def renorm(raw: DataFrame): DataFrame = {
-      val mx = raw.agg(max(col("raw")).as("mx"))
-      raw.crossJoin(broadcast(mx))
-        .select(col("node"), expr(
-          s"CAST((CAST(raw AS DECIMAL(38,0)) * $scale) div mx AS BIGINT)")
-          .as("s"))
-    }
-    var hub = eh.select(col("hub").as("node")).distinct()
-      .select(col("node"), lit(scale).as("s"))
-      .localCheckpoint()
-    // Exact overflow-free sum at BIGINT speed: hits' raw sums are NOT
-    // mass-conserving (unlike pageRank's, which stay ≤ the 10¹² total
-    // mass), so s ≤ 10¹² summed over an in-degree above ~9.2M wraps
-    // Long. A straight DECIMAL(38,0) sum is safe but pays decimal
-    // arithmetic PER ROW in the hottest aggregate (measured ~25% of the
-    // query). Instead split each term at 2²⁰ — both halves are < 2²⁰,
-    // so their BIGINT sums only wrap past 2⁴³ rows per group (beyond
-    // any graph) — and recombine in DECIMAL once PER GROUP. Identical
-    // values to the oracle's HUGEINT arithmetic, Long-speed partials.
-    val rawSum = (sum(expr("s div 1048576")).cast("decimal(38,0)") *
-      lit(1048576L) + sum(expr("s % 1048576"))).as("raw")
-    var auth: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      i += 1
-      // auth is checkpointed EAGERLY each round: renorm references its
-      // input twice (the broadcast max + the main lineage), so a lazy
-      // auth subplan is re-evaluated under hub's renorm — measured
-      // 94 → 146 CPU-s when tried lazily (exchange reuse dedupes the
-      // shuffles but not the downstream aggregates/joins).
-      auth = renorm(eh.join(scoreSide(hub.withColumnRenamed("node", "hub")),
-          Seq("hub"))
-        .groupBy(col("auth").as("node"))
-        .agg(rawSum))
-        .localCheckpoint()
-      hub = renorm(ea.join(scoreSide(auth.withColumnRenamed("node", "auth")),
-          Seq("auth"))
-        .groupBy(col("hub").as("node"))
-        .agg(rawSum))
-        .localCheckpoint()
-    }
-    eh.unpersist(); ea.unpersist()
-    auth.select(lit("auth").as("kind"), col("node"), col("s").as("score_fp"))
-      .unionByName(hub.select(lit("hub").as("kind"), col("node"),
-        col("s").as("score_fp")))
-      .orderBy("kind", "node")
-  }
-
   /** Incremental triangle maintenance — [[triangleCounts]] under
     * STREAMING edge arrivals, the triangle sibling of
     * [[incrementalComponents]]. Per batch, every NEW triangle contains at
@@ -1036,7 +786,7 @@ object Graph {
     * batches — the m41 gate states that with q40's oracle verbatim, and
     * the sbt property test checks random graphs × random splits. */
   def incrTriangles(prev: Option[DataFrame], pairs: DataFrame,
-      smallGraphCap: Long = RankGraphEdgeCap): DataFrame =
+      smallGraphCap: Long = DriverGates.RankGraphEdgeCap): DataFrame =
     incrTrianglesDelta(prev, pairs, smallGraphCap)._1
 
   /** [[incrTriangles]] plus the batch's CHANGED-KEY frame — (u, v, node)
@@ -1046,7 +796,7 @@ object Graph {
     * (|ΔE| and the owned-wedge endpoints), so the bucketed state write
     * never rewrites the standing edge set or untouched counts. */
   def incrTrianglesDelta(prev: Option[DataFrame], pairs: DataFrame,
-      smallGraphCap: Long = RankGraphEdgeCap,
+      smallGraphCap: Long = DriverGates.RankGraphEdgeCap,
       wantChanged: Boolean = true): (DataFrame, Option[DataFrame]) = {
     val pN = pairs
       .select(least(col("doc_a"), col("doc_b")).as("u"),

@@ -790,11 +790,12 @@ object AnalyticsQueries {
         .orderBy("kind", "node")
     },
 
-    // Distributed-path oracle twins (_dist): the rank operators gate to a
-    // driver loop when the edge list is small (Graph.RankGraphEdgeCap),
-    // which is what verify-scale inputs take — so these four force
-    // `smallGraphCap = 0` and pin the DISTRIBUTED rounds against the SAME
-    // DuckDB oracles every round. Verify-only: Bench's default run skips
+    // Distributed-path oracle twins (_dist): the rank kernel gates to its
+    // driver twin when the edge list is small
+    // (DriverGates.RankGraphEdgeCap), which is what verify-scale inputs
+    // take — so these four force `smallGraphCap = 0` and pin the
+    // kernel's DISTRIBUTED twin against the SAME DuckDB oracles every
+    // round. Verify-only: Bench's default run skips
     // *_distpath names (same answers off the same plans as their siblings,
     // just with the round waves the gate exists to avoid — measuring them
     // twice would say nothing new; the sf1 bench graphs exceed the cap

@@ -404,7 +404,7 @@ class OperatorsSpec extends SparkSpec {
       // graphs are under the cap) and the distributed 3-join plan
       // (cap 0) must land on the identical one-shot counts, so the gate
       // can never let them drift
-      for (cap <- Seq(graft.operators.Graph.RankGraphEdgeCap, 0L)) {
+      for (cap <- Seq(graft.operators.DriverGates.RankGraphEdgeCap, 0L)) {
         val st = batches.foldLeft(Option.empty[org.apache.spark.sql.DataFrame]) {
           (st, b) => Some(graft.operators.Graph.incrTriangles(
             st, b.toDF("doc_a", "doc_b"), smallGraphCap = cap))
@@ -424,7 +424,7 @@ class OperatorsSpec extends SparkSpec {
     val clique = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
     val star = Seq((10L, 11L), (10L, 12L), (10L, 13L), (4L, 10L))
     // both paths (driver gate default, cap 0 = distributed node-iterator)
-    for (cap <- Seq(graft.operators.Graph.RankGraphEdgeCap, 0L)) {
+    for (cap <- Seq(graft.operators.DriverGates.RankGraphEdgeCap, 0L)) {
       val got = graft.operators.Graph
         .triangleCounts((clique ++ star).toDF("src", "dst"), smallGraphCap = cap)
         .as[(Long, Long)].collect().toMap
@@ -538,7 +538,7 @@ class OperatorsSpec extends SparkSpec {
       val iters = 1 + rnd.nextInt(3)
       // both paths per case (driver gate default, cap 0 = distributed) —
       // the gate must never let them drift
-      for (cap <- Seq(graft.operators.Graph.RankGraphEdgeCap, 0L)) {
+      for (cap <- Seq(graft.operators.DriverGates.RankGraphEdgeCap, 0L)) {
         val got = graft.operators.Graph.pageRank(edges.toDF("src", "dst"),
             iters, smallGraphCap = cap)
           .as[(String, Long)].collect().map { case (k2, v) => k2 -> BigInt(v) }.toMap
@@ -546,7 +546,7 @@ class OperatorsSpec extends SparkSpec {
       }
       val present = edges.map(_._1).distinct
       val seedSet = rnd.shuffle(present).take(1 + rnd.nextInt(present.size)).toSet
-      for (cap <- Seq(graft.operators.Graph.RankGraphEdgeCap, 0L)) {
+      for (cap <- Seq(graft.operators.DriverGates.RankGraphEdgeCap, 0L)) {
         val gotP = graft.operators.Graph.personalizedPageRank(
             edges.toDF("src", "dst"), seedSet.toSeq.toDF("node"), iters,
             smallGraphCap = cap)
@@ -592,7 +592,7 @@ class OperatorsSpec extends SparkSpec {
       }
       val edges = base ++ base.map(x => (x._2, x._1, x._3))
       val iters = 1 + rnd.nextInt(3)
-      for (cap <- Seq(graft.operators.Graph.RankGraphEdgeCap, 0L)) {
+      for (cap <- Seq(graft.operators.DriverGates.RankGraphEdgeCap, 0L)) {
         val got = graft.operators.Graph.weightedPageRank(
             edges.toDF("src", "dst", "w"), iters, smallGraphCap = cap)
           .as[(String, Long)].collect().map { case (k, v) => k -> BigInt(v) }.toMap
@@ -615,42 +615,79 @@ class OperatorsSpec extends SparkSpec {
       "c" -> 0L, "d" -> 0L, "e" -> 0L))
   }
 
+  /** A rank contract failure must carry the same message from both twins:
+    * cap 0 forces the distributed twin, the default cap takes the driver
+    * twin on these tiny graphs. */
+  private def assertRankFailure(op: String, want: String)(
+      run: Long => Any): Unit = {
+    val msgs = Seq(0L, graft.operators.DriverGates.RankGraphEdgeCap).map(cap =>
+      intercept[IllegalArgumentException](run(cap)).getMessage)
+    assert(msgs.forall(_.contains(want)), s"$op: $msgs")
+    assert(msgs.distinct.size == 1, s"$op: the twins disagree: $msgs")
+  }
+
   test("rank operators: asymmetric edge lists are rejected, not truncated") {
     import spark.implicits._
+    import graft.operators.Graph
     // c has an in-edge but no out-edges — the inner-join round would
     // silently drop it after round 1; the contract check must fail fast
     val dangling = Seq(("a", "b"), ("b", "a"), ("b", "c")).toDF("src", "dst")
-    val e1 = intercept[IllegalArgumentException] {
-      graft.operators.Graph.pageRank(dangling, iters = 1).collect()
-    }
-    assert(e1.getMessage.contains("dst-set"))
-    val e2 = intercept[IllegalArgumentException] {
-      graft.operators.Graph.weightedPageRank(
-        dangling.withColumn("w", org.apache.spark.sql.functions.lit(1L)),
-        iters = 1).collect()
-    }
-    assert(e2.getMessage.contains("dst-set"))
-    // the escape hatch: callers that proved symmetry upstream can skip
-    spark.conf.set("spark.graft.graph.validateEdges", "false")
-    try {
-      val out = graft.operators.Graph.pageRank(dangling, iters = 1).collect()
-      assert(out.nonEmpty) // truncated semantics, but explicitly opted into
-    } finally spark.conf.set("spark.graft.graph.validateEdges", "true")
+    assertRankFailure("pageRank", "dst-set")(cap =>
+      Graph.pageRank(dangling, iters = 1, smallGraphCap = cap).collect())
+    assertRankFailure("weightedPageRank", "dst-set")(cap =>
+      Graph.weightedPageRank(dangling.withColumn("w",
+        org.apache.spark.sql.functions.lit(1L)), iters = 1,
+        smallGraphCap = cap).collect())
+    assertRankFailure("personalizedPageRank", "dst-set")(cap =>
+      Graph.personalizedPageRank(dangling, Seq("a").toDF("node"), iters = 1,
+        smallGraphCap = cap).collect())
   }
 
   test("weightedPageRank: weight contract enforced (positive, <= 1e7)") {
     import spark.implicits._
     val zero = Seq(("a", "b", 0L), ("b", "a", 1L)).toDF("src", "dst", "w")
-    val eZ = intercept[IllegalArgumentException] {
-      graft.operators.Graph.weightedPageRank(zero, iters = 1).collect()
-    }
-    assert(eZ.getMessage.contains("min="))
+    assertRankFailure("weightedPageRank", "min=")(cap =>
+      graft.operators.Graph.weightedPageRank(zero, iters = 1,
+        smallGraphCap = cap).collect())
     val huge = Seq(("a", "b", 20000000L), ("b", "a", 1L))
       .toDF("src", "dst", "w")
-    val eH = intercept[IllegalArgumentException] {
-      graft.operators.Graph.weightedPageRank(huge, iters = 1).collect()
-    }
-    assert(eH.getMessage.contains("max="))
+    assertRankFailure("weightedPageRank", "max=")(cap =>
+      graft.operators.Graph.weightedPageRank(huge, iters = 1,
+        smallGraphCap = cap).collect())
+  }
+
+  test("rank operators: empty edges, empty seeds and iters = 0 fail alike on both twins") {
+    import spark.implicits._
+    import graft.operators.Graph
+    val sym = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
+    val weighted = sym.withColumn("w", org.apache.spark.sql.functions.lit(1L))
+    val seeds = Seq("a").toDF("node")
+    val bipartite = Seq(("h", "a")).toDF("hub", "auth")
+    assertRankFailure("pageRank", "non-empty edge list")(cap =>
+      Graph.pageRank(sym.filter("false"), smallGraphCap = cap).collect())
+    assertRankFailure("weightedPageRank", "non-empty edge list")(cap =>
+      Graph.weightedPageRank(weighted.filter("false"), smallGraphCap = cap)
+        .collect())
+    assertRankFailure("personalizedPageRank", "non-empty edge list")(cap =>
+      Graph.personalizedPageRank(sym.filter("false"), seeds,
+        smallGraphCap = cap).collect())
+    assertRankFailure("personalizedPageRank", "at least one seed")(cap =>
+      Graph.personalizedPageRank(sym, seeds.filter("false"),
+        smallGraphCap = cap).collect())
+    assertRankFailure("pageRank", "iters >= 1")(cap =>
+      Graph.pageRank(sym, iters = 0, smallGraphCap = cap).collect())
+    assertRankFailure("weightedPageRank", "iters >= 1")(cap =>
+      Graph.weightedPageRank(weighted, iters = 0, smallGraphCap = cap)
+        .collect())
+    assertRankFailure("personalizedPageRank", "iters >= 1")(cap =>
+      Graph.personalizedPageRank(sym, seeds, iters = 0, smallGraphCap = cap)
+        .collect())
+    assertRankFailure("hits", "iters >= 1")(cap =>
+      Graph.hits(bipartite, iters = 0, smallGraphCap = cap).collect())
+    // HITS has no symmetry contract: no edges, no scores
+    for (cap <- Seq(0L, graft.operators.DriverGates.RankGraphEdgeCap))
+      assert(Graph.hits(bipartite.filter("false"), smallGraphCap = cap)
+        .collect().isEmpty, s"hits cap $cap")
   }
 
   test("pageRank: a regular symmetric ring stays uniform across rounds") {
