@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   /** Every cause in the chain as `class: message`, outermost first — an
     * `ExceptionInInitializerError` has a null message of its own. */
-  private def causes(e: Throwable): String =
+  private[graft] def causes(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
       .map(c => s"${c.getClass.getName}: ${c.getMessage}").mkString(" <- caused by ")
 

@@ -543,7 +543,6 @@ object LlmQueries {
       TextDedup.minhashNearDup(Tables.documents(s, dir))
         .select("doc_a", "doc_b")
         .repartition(4).write.parquet(s"$base/src")
-      graft.Telemetry.recordPath("m41_incr_triangles", s"$base/src")
       val srcPq = s.read.parquet(s"$base/src")
       val schema = srcPq.schema
       // only the streaming fold runs at 8-way partitioning — the LSH
@@ -572,7 +571,6 @@ object LlmQueries {
       TextDedup.minhashNearDup(Tables.documents(s, dir))
         .select("doc_a", "doc_b")
         .repartition(4).write.parquet(s"$base/src")
-      graft.Telemetry.recordPath("m37_incr_components", s"$base/src")
       val srcPq = s.read.parquet(s"$base/src")
       val schema = srcPq.schema
       // streaming fold at 8-way partitioning when small (see m41's note)

@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
-"""Assemble committed scale artifacts from hunted attempt pools, pinning
-the selection rule INTO each selected row (VERDICT r15 #5: the ×1000
+"""Assemble committed StreamScaleProbe artifacts from hunted attempt pools,
+pinning the selection rule INTO each selected row (VERDICT r15 #5: the ×1000
 assembly switched from min-steal to min-wall because the r14 "< 2 s
 in-window steal" bar is unreachable at 100-430 s faces, and the rows
 carried no field saying which regime selected them — cross-decade
 tooling could silently mix the two).
 
-Two modes:
+Usage:
 
   assemble_probe.py faces <pool.jsonl> [--cap SEC]
      Per-face selection from a StreamScaleProbe attempt pool.
@@ -15,13 +15,8 @@ Two modes:
      min-wall row (rule=min-wall, an upper bound). Each selected row is
      emitted with "rule" and "steal_cap" stamped; output is JSONL on
      stdout, ready to append to stream_probe.json.
-
-  assemble_probe.py bench <bench.json> --rule min-steal|min-wall [--cap SEC]
-     Stamp a hunted Bench artifact (bench_full.json copy) with top-level
-     "assembly_rule" / "assembly_steal_cap" before committing it under a
-     scale name — the bench_x* header analogue of the row stamp.
 """
-import argparse, json, sys
+import argparse, json
 
 
 def faces(pool_path: str, cap: float) -> None:
@@ -51,25 +46,10 @@ def faces(pool_path: str, cap: float) -> None:
         print(json.dumps(win))
 
 
-def bench(path: str, rule: str, cap: float) -> None:
-    d = json.load(open(path))
-    d["assembly_rule"] = rule
-    d["assembly_steal_cap"] = cap
-    json.dump(d, open(path, "w"))
-    print(f"stamped {path}: assembly_rule={rule} steal_cap={cap}",
-          file=sys.stderr)
-
-
 if __name__ == "__main__":
     p = argparse.ArgumentParser()
-    p.add_argument("mode", choices=["faces", "bench"])
+    p.add_argument("mode", choices=["faces"])
     p.add_argument("path")
-    p.add_argument("--rule", choices=["min-steal", "min-wall"])
     p.add_argument("--cap", type=float, default=2.0)
     a = p.parse_args()
-    if a.mode == "faces":
-        faces(a.path, a.cap)
-    else:
-        if not a.rule:
-            p.error("bench mode requires --rule")
-        bench(a.path, a.rule, a.cap)
+    faces(a.path, a.cap)
