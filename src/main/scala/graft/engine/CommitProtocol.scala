@@ -50,7 +50,7 @@ trait StoreCommitProtocol {
   def recover(path: String): Boolean = false
 }
 
-private[engine] object FsUtil {
+private[graft] object FsUtil {
 
   /** Recursive copy. The walk stream is closed (try/finally — a leaked
     * stream is a file-handle leak per vacuum on large sidecars, ADVICE

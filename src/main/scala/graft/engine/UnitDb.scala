@@ -9,10 +9,14 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{ExpressionImplUtils, Predicate}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{NotTombstoned, TombstoneKeys, TombstoneSet, TopicMatches, TopicPartsMatches}
+import graft.functions.{ChaChaMacUtil, NotTombstoned, TombstoneKeys, TombstoneSet, TopicMatches, TopicPartsMatches}
 import graft.model.{Entry, Message, MessageId, Query, Tombstone, Topic, TopicKey, Varz}
+import graft.operators.DriverGates
 
 /** Embedded message-store facade — the Spark-native re-expression of the
   * reference `DB` API (db.go:50-482).
@@ -26,8 +30,11 @@ import graft.model.{Entry, Message, MessageId, Query, Tombstone, Topic, TopicKey
   *  - `put`/`putEntry` (db.go:339-387)  → buffer, then one atomic Parquet
   *    append per `sync()` (the reference tiny-log → WAL → block-sync
   *    pipeline collapses into Spark's file-commit protocol, SURVEY §3.2).
-  *  - `get`       (db.go:222-319)  → declarative filter + top-K; Catalyst
-  *    turns it into partition-pruned scan + TakeOrderedAndProject.
+  *  - `get`       (db.go:222-319)  → the candidate files of one store
+  *    generation, pruned on `(contract, wc, day)` and read on the driver
+  *    newest day first into a bounded top-K, with no Spark query; above a
+  *    byte gate, the same rules as a Spark filter + TakeOrderedAndProject
+  *    ([[UnitDb.getFrame]]).
   *  - `delete`    (db.go:392-425)  → tombstone in a `_tombstones` sidecar,
   *    resolved on the driver into a `not_tombstoned(seq, topic)` filter
   *    (the reference marks the index entry freed before any block read).
@@ -318,10 +325,10 @@ final class UnitDb private (
       case _ => ()
     }
     sync() // pending puts must be visible to the scan (and deletable)
-    val (matched, _) = matchedLive(q)
-    nGets.decrementAndGet() // matchedLive counted a read; a sweep is not one
+    val live = matched(readView(q))
+    nGets.decrementAndGet() // readView counted a read; a sweep is not one
     val obs = org.apache.spark.sql.Observation()
-    matched
+    live
       .select(col("seq"), col("contract"), col("topic"),
         lit(new Timestamp(clock())).as("ts"))
       .observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("n"))
@@ -422,25 +429,53 @@ final class UnitDb private (
 
   /** Core query (reference db.go:222-319): topics matching the pattern
     * under the contract, newer than the `?last=` cutoff, live (not deleted,
-    * not expired), newest-first, limited. Returns payloads newest-first. */
-  def get(q: Query): Array[Array[Byte]] = timed(getMeter) {
-    val rows = getFrame(q).select("payload").collect().map(_.getAs[Array[Byte]](0))
-    nEntriesRead.addAndGet(rows.length.toLong)
-    nBytesRead.addAndGet(rows.iterator.map(p => if (p == null) 0L else p.length.toLong).sum)
-    rows
-  }
+    * not expired), newest-first, limited. Returns payloads newest-first.
+    *
+    * Answered on the driver, with no Spark query, the way the reference
+    * walks each matched topic's time windows newest-first and stops at the
+    * limit (time_window.go:257-330):
+    *  - One consistent capture (see [[visEpoch]]) takes the store handle
+    *    (see [[snapshot]]), the tombstone keys and the unsynced rows.
+    *  - The handle's files are pruned on contract, on `wc` (a static
+    *    pattern reads `wc=0` by topic equality and `wc=1` by the stored-parts
+    *    match) and on the `?last=` cutoff day.
+    *  - Day groups are read newest first by Spark's parquet row reader,
+    *    built once per store, a group's files in parallel on one shared
+    *    pool; unsynced rows pass the same predicate on the driver.
+    *  - The read stops once the bounded heap holds `limit` rows after a
+    *    whole day group: `day` derives from `ts` in the session zone, so
+    *    no older group can hold a newer row.
+    *  - Keyed stores decrypt only the winners.
+    * Predicates and order are the [[GetRule]] that [[getFrame]] plans, so
+    * both paths give one answer. When the candidate files weigh more than
+    * [[graft.operators.DriverGates.GetDriverReadBytes]] (length plus
+    * `spark.sql.files.openCostInBytes` each), `get` is
+    * `getFrame(q).collect()`, the distributed path. */
+  def get(q: Query): Array[Array[Byte]] = get(q, DriverGates.GetDriverReadBytes)
+
+  /** [[get]] with its driver-read byte cap: 0 forces `getFrame`, ∞ the
+    * driver read. */
+  private[graft] def get(q0: Query, driverReadCap: Long): Array[Array[Byte]] =
+    timed(getMeter) {
+      val view = readView(q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract)))
+      val rows = driverRead(view, driverReadCap).getOrElse(
+        framed(view).select("payload").collect().map(_.getAs[Array[Byte]](0)))
+      nEntriesRead.addAndGet(rows.length.toLong)
+      nBytesRead.addAndGet(rows.iterator.map(p => if (p == null) 0L else p.length.toLong).sum)
+      rows
+    }
 
   /** Same as [[get]] but as a DataFrame of (seq, topic, ts, payload) —
     * composable with further Spark ops. Newest-first, clamped at the
     * reference's Default/MaxLimit (options.go:169-174). */
-  def getFrame(q: Query): DataFrame = {
-    val (matched, limit) = matchedLive(
-      q.copy(topic = authorize(q.topic, TopicKey.AllowRead, q.contract)))
-    matched
-      .orderBy(col("ts").desc, col("seq").desc)
-      .limit(limit)
+  def getFrame(q: Query): DataFrame =
+    framed(readView(q.copy(topic = authorize(q.topic, TopicKey.AllowRead, q.contract))))
+
+  private def framed(view: ReadView): DataFrame =
+    matched(view)
+      .orderBy(GetRule.newestFirstCols: _*)
+      .limit(view.rule.limit)
       .select("seq", "topic", "ts", "payload")
-  }
 
   /** The FULL matching live set as a DataFrame, with no result-count clamp
     * and no imposed ordering — the batch-pipeline read path (relay
@@ -452,13 +487,13 @@ final class UnitDb private (
     * — via the newest-first top-N. */
   def scanFrame(q0: Query): DataFrame = {
     val q = q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract))
-    val (matched, _) = matchedLive(q)
+    val live = matched(readView(q))
     Topic.parse(q.topic).last match {
       case Some(Left(count)) =>
-        matched.orderBy(col("ts").desc, col("seq").desc).limit(count)
+        live.orderBy(GetRule.newestFirstCols: _*).limit(count)
           .select("seq", "topic", "ts", "payload")
       case _ =>
-        matched.select("seq", "topic", "ts", "payload")
+        live.select("seq", "topic", "ts", "payload")
     }
   }
 
@@ -472,14 +507,14 @@ final class UnitDb private (
     * (product encoder, no Kryo). */
   def scanTyped(q0: Query): org.apache.spark.sql.Dataset[Message] = {
     val q = q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract))
-    val (matched, _) = matchedLive(q)
+    val live = matched(readView(q))
     val fields = Seq("seq", "contract", "topic", "topic_parts",
       "is_wildcard", "is_multi", "depth", "ts", "expires_at", "encrypted",
       "payload")
     val base = Topic.parse(q.topic).last match {
       case Some(Left(count)) =>
-        matched.orderBy(col("ts").desc, col("seq").desc).limit(count)
-      case _ => matched
+        live.orderBy(GetRule.newestFirstCols: _*).limit(count)
+      case _ => live
     }
     base.select(fields.map(col): _*).as(Encoders.product[Message])
   }
@@ -544,10 +579,11 @@ final class UnitDb private (
     matched.select("seq", "topic", "ts", "payload")
   }
 
-  /** Shared core of [[getFrame]]/[[scanFrame]]: the pattern-matched,
-    * contract-scoped, live (not expired, not tombstoned) row set plus the
-    * clamped result limit for the interactive path. */
-  private def matchedLive(q: Query): (DataFrame, Int) = {
+  /** Shared front of every pattern read ([[get]], [[getFrame]],
+    * [[scanFrame]], [[scanTyped]], [[deleteMatching]]): the query's rule,
+    * with the result limit clamped for the interactive path, over one
+    * consistent capture. */
+  private def readView(q: Query): ReadView = {
     ensureOpen()
     nGets.incrementAndGet()
     val t = Topic.parse(q.topic)
@@ -563,48 +599,76 @@ final class UnitDb private (
     val limit = lastCount
       .map(c => math.min(c, Query.MaxLimit))
       .getOrElse(q.effectiveLimit)
+    require(limit >= 0, s"?last=<count> must not be negative: ${q.topic}")
+    // the cutoff day must be computed in the SAME zone that derived the
+    // stored `day` strings (the session timezone, via date_format in
+    // withDerived) or rows near midnight would be wrongly pruned in
+    // non-UTC sessions (ADVICE r1)
+    val zone = sessionZone
+    val cutoff = cutoffMs.map(c => (c, dayOf(c, zone)))
 
-    // store listing and tombstone keys in one consistent capture
-    val (snap, live) = seqlockRead((snapshot(), notTombstoned(Some(q.contract))))
-    var pred: Column =
-      col("contract") === q.contract &&
-      (col("expires_at").isNull || col("expires_at") > lit(new Timestamp(nowMs)))
-    cutoffMs.foreach { c =>
-      // partition pruning on the day column: the cutoff day must be computed
-      // in the SAME zone that derived the stored `day` strings (the session
-      // timezone, via date_format in withDerived) or rows near midnight
-      // would be wrongly pruned in non-UTC sessions (ADVICE r1).
-      pred = pred && col("ts") >= lit(new Timestamp(c)) &&
-        col("day") >= lit(dayOf(c, sessionZone))
-    }
-    // last, so it probes only rows the cheaper conjuncts kept
-    pred = pred && live
-    // Static patterns: pushable equality over the static bucket, unioned
-    // with a bidirectional match over the (tiny) wildcard bucket — stored
-    // wildcard publishes still answer static queries (SURVEY §2.3 rule 1).
-    // Matching runs over the stored topic_parts/is_multi columns (parsed
-    // once at write) — no per-row string parse, no pattern-cache pressure
-    // at any topic cardinality.
-    val matched =
-      if (!t.isWildcard)
-        snap.filter(col("wc") === 0 && col("topic") === t.key && pred)
-          .unionByName(
-            snap.filter(col("wc") === 1 &&
-              TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred))
-      else
-        snap.filter(
-          TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred)
-
-    (matched, limit)
+    val (store, tombs, unsynced) = seqlockRead(
+      (storeHandle(), tombstoneSet(Some(q.contract)), unsyncedRows()))
+    ReadView(new GetRule(q.contract, t, nowMs, cutoff, limit, tombs), store, unsynced)
   }
+
+  /** The pattern-matched, contract-scoped, live (not expired, not
+    * tombstoned) rows of a view, as a Spark query: one filter per
+    * [[GetRule.branches]] bucket, unioned. */
+  private def matched(view: ReadView): DataFrame = {
+    val snap = snapshotOf(view.store, view.unsynced)
+    view.rule.branches.map(b => snap.filter(GraftBridge.column(b))).reduce(_ unionByName _)
+  }
+
+  /** The driver read behind [[get]], or None above the byte cap (or for a
+    * listing not partitioned as the store writes it). */
+  private def driverRead(view: ReadView, cap: Long): Option[Array[Array[Byte]]] = {
+    val files = view.store.map(_.files) match {
+      case Some(None)     => return None
+      case Some(Some(fs)) => fs
+      case None           => IndexedSeq.empty
+    }
+    val rule = view.rule
+    val onParts = rule.branches.map(DriverRead.partitionTest)
+    val onRows = rule.branches.map(b =>
+      Predicate.createInterpreted(DriverRead.bind(b, DriverRead.Layout)))
+    val candidates = files.flatMap { f =>
+      val b = onParts.indexWhere(_.eval(f.part))
+      if (b < 0) None else Some(f -> onRows(b))
+    }
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    if (candidates.iterator.map(_._1.length + openCost).sum > cap) return None
+    val zone = sessionZone
+    val kept = view.unsynced.iterator
+      .map(DriverRead.pendingRow(_, zone))
+      .filter(r => onRows.exists(_.eval(r))).toSeq
+    val hits = DriverRead.topK(candidates, kept, rule.limit, parquetReader, driverFilesRead)
+    Some(hits.map { h =>
+      val p = if (h.row.isNullAt(DriverRead.PayloadIdx)) null
+              else h.row.getBinary(DriverRead.PayloadIdx)
+      encryptionKey match {
+        case Some(k) if h.atRest && p != null && h.row.getBoolean(DriverRead.EncryptedIdx) =>
+          openPayload(p, k)
+        case _ => p
+      }
+    }.toArray)
+  }
+
+  /** Spark's parquet row reader for this store, built on first use. */
+  private lazy val parquetReader = DriverRead.reader(spark)
+
+  /** Files opened by driver reads, for the stop-rule pin. */
+  private[engine] val driverFilesRead = new AtomicLong(0L)
 
   /** Live-entry count over every contract (reference db.go:475-478): not
     * expired, not tombstoned. */
   def count(): Long = {
-    val (snap, live) = seqlockRead((snapshot(), notTombstoned(None)))
-    snap
+    val (store, unsynced, tombs) =
+      seqlockRead((storeHandle(), unsyncedRows(), tombstoneSet(None)))
+    snapshotOf(store, unsynced)
       .filter((col("expires_at").isNull ||
-        col("expires_at") > lit(new Timestamp(clock()))) && live)
+        col("expires_at") > lit(new Timestamp(clock()))) &&
+        NotTombstoned(col("seq"), col("topic"), tombs))
       .count()
   }
 
@@ -687,16 +751,26 @@ final class UnitDb private (
   /** Full snapshot (store + unsynced pending) with payloads decrypted when
     * a key is present, and the `day`/`wc` partition columns retained for
     * pruning. Tombstoned rows are NOT removed here — readers filter them
-    * with `not_tombstoned` (get/count do). */
-  def snapshot(): DataFrame = seqlockRead {
-    val pendingDf = synchronized {
-      val rows = (flushing ++ pending).toSeq
-      if (rows.isEmpty) None
-      else Some(withDerived(
-        spark.createDataset(rows)(Encoders.product[Message]).toDF()))
-    }
-    val store = if (storeExists) Some(decrypt(readStoreRaw())) else None
-    (store, pendingDf) match {
+    * with `not_tombstoned` (get/count do).
+    *
+    * The store side is the generation's [[StoreHandle]]: its relation, and
+    * so its file listing, is built once per `(visEpoch, dataPath)`.
+    * `sync`, `appendFrame`, `compact` and `vacuum` bump the epoch, and a
+    * manifest pointer swap changes the path, so no reader sees a stale
+    * listing and none re-lists an unchanged store. The store has one
+    * writer (this instance, as the reference's writer lock makes it,
+    * db.go:70): files another process appends to the live generation show
+    * after this instance's next mutation or a reopen. */
+  def snapshot(): DataFrame = {
+    val (store, unsynced) = seqlockRead((storeHandle(), unsyncedRows()))
+    snapshotOf(store, unsynced)
+  }
+
+  private def snapshotOf(store: Option[StoreHandle], unsynced: Seq[Message]): DataFrame = {
+    val pendingDf =
+      if (unsynced.isEmpty) None
+      else Some(withDerived(spark.createDataset(unsynced)(Encoders.product[Message]).toDF()))
+    (store.map(_.store), pendingDf) match {
       case (Some(s), Some(p)) => s.unionByName(p)
       case (Some(s), None)    => s
       case (None, Some(p))    => p
@@ -705,6 +779,28 @@ final class UnitDb private (
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storeSchema)
     }
   }
+
+  private def unsyncedRows(): Seq[Message] = synchronized((flushing ++ pending).toSeq)
+
+  @volatile private var handle: StoreHandle = null
+
+  /** The current generation's handle (None before the first write); call
+    * inside [[seqlockRead]]. A handle built while a mutation overlapped is
+    * keyed on an epoch that never recurs, so it is never reused. */
+  private def storeHandle(): Option[StoreHandle] =
+    if (!storeExists) None
+    else {
+      val e = visEpoch.get()
+      val dp = dataPath
+      val h = handle
+      if (h != null && h.epoch == e && h.dataPath == dp) Some(h)
+      else {
+        val raw = readStoreRaw(dp)
+        val fresh = new StoreHandle(e, dp, raw, decrypt(raw))
+        handle = fresh
+        Some(fresh)
+      }
+    }
 
   /** Optimistic consistent capture (see [[visEpoch]]): run `capture` with
     * no lock when no disk mutation overlapped it, else once more under
@@ -760,7 +856,10 @@ final class UnitDb private (
     * listing, so a concurrent flush shows its keys in one or both; callers
     * still capture under [[seqlockRead]] to pair the keys with the store
     * listing. */
-  private def notTombstoned(contract: Option[Long]): Column = {
+  private def notTombstoned(contract: Option[Long]): Column =
+    NotTombstoned(col("seq"), col("topic"), tombstoneSet(contract))
+
+  private def tombstoneSet(contract: Option[Long]): TombstoneSet = {
     val unsynced = synchronized {
       (flushingTombs ++ pendingTombs).filter(t => contract.forall(_ == t.contract)).toSeq
     }
@@ -769,8 +868,7 @@ final class UnitDb private (
         .filter(_.startsWith("contract=")).map(_.stripPrefix("contract=").toLong))
     val sidecar = contracts.map(sidecarFor)
     val u = TombstoneKeys(unsynced.iterator.map(t => (t.seq, t.topic)))
-    NotTombstoned(col("seq"), col("topic"), new TombstoneSet(
-      sidecar.flatMap(_.keys), u, sidecar.map(_.size.toLong).sum + u.size))
+    new TombstoneSet(sidecar.flatMap(_.keys), u, sidecar.map(_.size.toLong).sum + u.size)
   }
 
   // ---------------------------------------------------------- maintenance
@@ -1053,6 +1151,15 @@ final class UnitDb private (
     case None => df
   }
 
+  /** One at-rest payload decrypted on the driver, by the functions the
+    * [[decrypt]] column runs (`aes_decrypt`'s GCM defaults, or
+    * [[graft.functions.ChaChaOpen]]). */
+  private def openPayload(p: Array[Byte], k: Array[Byte]): Array[Byte] = cipher match {
+    case AesGcm => ExpressionImplUtils.aesDecrypt(p, k, UTF8String.fromString("GCM"),
+      UTF8String.fromString("DEFAULT"), Array.emptyByteArray)
+    case ChaCha20Poly1305 => ChaChaMacUtil.open(k, p)
+  }
+
   private def decrypt(df: DataFrame): DataFrame = encryptionKey match {
     case Some(k) => df.withColumn("payload",
       when(col("encrypted"), cipher match {
@@ -1155,8 +1262,8 @@ final class UnitDb private (
         "retained generations; the POSIX swap protocol keeps only the live tree)")
   }
 
-  private def readStoreRaw(): DataFrame =
-    spark.read.schema(storeSchema).parquet(dataPath)
+  private def readStoreRaw(dir: String = dataPath): DataFrame =
+    spark.read.schema(storeSchema).parquet(dir)
 
   private def tombsPath: String = path + "/_tombstones"
 
@@ -1210,6 +1317,12 @@ object UnitDb {
     StructField("topic", StringType, nullable = false),
     StructField("ts", TimestampType, nullable = false)))
 
+  /** What one read sees: its [[GetRule]], and from one consistent capture
+    * the store handle, the tombstone keys (inside the rule) and the
+    * unsynced rows. */
+  private final case class ReadView(rule: GetRule, store: Option[StoreHandle],
+      unsynced: Seq[Message])
+
   /** One contract's sidecar keys as read at one file set (path and
     * length per data file). No broadcast when the sidecar holds no key. */
   private final case class SidecarKeys(files: Seq[(String, Long)],
@@ -1219,7 +1332,7 @@ object UnitDb {
   private val tombKeySchema: StructType = StructType(tombSchema.fields.filter(f =>
     f.name == "seq" || f.name == "topic"))
 
-  private def dayOf(ms: Long, zone: java.time.ZoneId): String =
+  private[engine] def dayOf(ms: Long, zone: java.time.ZoneId): String =
     java.time.Instant.ofEpochMilli(ms).atZone(zone).toLocalDate.toString
 
   /** Open (or create) a store directory (reference db.go:50-210).

@@ -131,7 +131,7 @@ object LlmQueries {
         org.apache.spark.sql.streaming.Trigger) =>
         org.apache.spark.sql.streaming.StreamingQuery)(
       finish: String => DataFrame): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(s"graft_$label").toString
+    val base = stagingDir(label)
     val (srcRows, fpb) = stageSketchSrc(s, dir, base, label)
     withStreamPartsFor(s, 8, srcRows) {
       val schema = s.read.parquet(s"$base/src").schema
@@ -539,7 +539,7 @@ object LlmQueries {
     // re-walk), each triangle counted once at its minimal new edge.
     // Final counts answer q40's oracle verbatim.
     "m41_incr_triangles" -> { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_m41").toString
+      val base = stagingDir("m41")
       TextDedup.minhashNearDup(Tables.documents(s, dir))
         .select("doc_a", "doc_b")
         .repartition(4).write.parquet(s"$base/src")
@@ -567,7 +567,7 @@ object LlmQueries {
     // re-walk of all pairs seen), and the final labels must land
     // bit-identically on l22's one-shot oracle.
     "m37_incr_components" -> { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_m37").toString
+      val base = stagingDir("m37")
       TextDedup.minhashNearDup(Tables.documents(s, dir))
         .select("doc_a", "doc_b")
         .repartition(4).write.parquet(s"$base/src")
@@ -683,7 +683,7 @@ object LlmQueries {
     // (proving the filesystem round-trip preserved rows, shard
     // membership, and nothing else crept in)
     "c10_export_shards" -> { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_c10").toString
+      val base = stagingDir("c10")
       TextStats.exportShards(Tables.documents(s, dir), 8, s"$base/shards")
       s.read.parquet(s"$base/shards")
         .groupBy("shard")

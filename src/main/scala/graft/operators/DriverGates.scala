@@ -87,6 +87,19 @@ object DriverGates {
     * rows/batch under the 4-batch trigger split. */
   val StreamNarrowSourceRowCap: Long = 2000000L
 
+  /** Byte cap for `UnitDb.get`'s driver read, over the candidate files
+    * left after contract, `wc` and day pruning, each weighed as its length
+    * plus `spark.sql.files.openCostInBytes` (Spark's own split-packing
+    * weight). Bounding argument: BYTES decoded on the driver per get —
+    * 128 MB is Spark's default `maxPartitionBytes`, the input Spark itself
+    * packs into ONE scan task, so below it the driver read replaces at most
+    * one task's decode and gives up no parallelism a job would have had
+    * (its file fan-out still spreads the decode over the driver's cores).
+    * At the default 4 MB open cost it admits about 32 small files; a store
+    * whose hot partitions want [[graft.engine.UnitDb.compact]] falls back to
+    * `getFrame`. Rows held are bounded by the limit, never by bytes. */
+  val GetDriverReadBytes: Long = 128L << 20
+
   /** Row cap for INCREMENTAL driver state (incrTriangles' standing
     * edges + counts). Bounding argument: ROUND-TRIPS — unlike a one-shot
     * collect, maintained state crosses the driver EVERY batch (collect +

@@ -560,7 +560,7 @@ object AnalyticsQueries {
     // scan (BucketJoinSpec pins the plan) — the pay-the-shuffle-once
     // layout for repeatedly-joined fact tables at 100 TB
     "q26_bucket_join" -> { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_q26").toString
+      val base = stagingDir("q26")
       graft.operators.Bucketing.writeBucketed(
         Tables.orders(s, dir).withColumnRenamed("o_custkey", "custkey"),
         "graft_q26", "orders_b", "custkey", 8, base + "/db")
@@ -595,7 +595,7 @@ object AnalyticsQueries {
     // scan). The result is partition-layout-invariant, which is exactly
     // what the oracle states.
     "q28_dpp" -> { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft_q28").toString
+      val base = stagingDir("q28")
       val ev = Tables.events(s, dir).select(col("event_id"),
         col("event_type"), col("value"),
         expr("unix_timestamp(ts) div 86400").as("d"))

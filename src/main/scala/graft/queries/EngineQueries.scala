@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -26,7 +24,7 @@ object EngineQueries {
 
   val queries: Map[String, QFn] = Map(
     "s1_engine_roundtrip" -> { (s, dir) =>
-      val base = Files.createTempDirectory("graft_s1").toString
+      val base = stagingDir("s1")
       val db = UnitDb.open(s, base + "/store")
       // eventsStream adapts to the file's physical ts encoding (ns or µs
       // — see graft.Tables) and hands us a canonical µs TIMESTAMP
@@ -55,7 +53,7 @@ object EngineQueries {
     // the decrypting read path; the decrypted payloads must reproduce the
     // source rows bit-for-bit.
     "s2_engine_encrypted" -> { (s, dir) =>
-      val base = Files.createTempDirectory("graft_s2").toString
+      val base = stagingDir("s2")
       val db = UnitDb.open(s, base + "/store",
         encryptionKey = Some("0123456789abcdef".getBytes))
       val src = graft.Tables.eventsStream(s, dir)
@@ -79,7 +77,7 @@ object EngineQueries {
     // wire-compatible — see ChaChaMacUtil) instead of AES-GCM. Same
     // oracle: at-rest bytes differ, decrypted reads must not.
     "s2b_engine_chacha" -> { (s, dir) =>
-      val base = Files.createTempDirectory("graft_s2b").toString
+      val base = stagingDir("s2b")
       val db = UnitDb.open(s, base + "/store",
         encryptionKey = Some(("0123456789abcdef" * 2).getBytes),
         cipher = graft.engine.ChaCha20Poly1305)
@@ -109,7 +107,7 @@ object EngineQueries {
     // hash compare. This is the reference's actual usage shape: the
     // store is where the corpus lives; the pipeline reads FROM it.
     "s3_store_curate" -> { (s, dir) =>
-      val base = Files.createTempDirectory("graft_s3").toString
+      val base = stagingDir("s3")
       val db = UnitDb.open(s, base + "/store")
       val src = graft.Tables.stream(s, dir, "documents")
         .select(
@@ -137,7 +135,7 @@ object EngineQueries {
     // stream delivers exactly the store's live content — same topic
     // match, decrypt, and payload bytes as the batch scan path.
     "s4_store_tail" -> { (s, dir) =>
-      val base = Files.createTempDirectory("graft_s4").toString
+      val base = stagingDir("s4")
       val db = UnitDb.open(s, base + "/store")
       val src = graft.Tables.eventsStream(s, dir)
         .filter(col("event_type") === "view")
@@ -176,7 +174,7 @@ object EngineQueries {
     // even though they share the generation directory. A snapshot read
     // that leaked live files would surface the views and fail the hash.
     "s5_snapshot_read" -> { (s, dir) =>
-      val base = Files.createTempDirectory("graft_s5").toString
+      val base = stagingDir("s5")
       val db = UnitDb.open(s, base + "/store",
         commitProtocol = graft.engine.ManifestCommit.retained(3))
       def ingest(kind: String, ckpt: String) = {
@@ -211,7 +209,7 @@ object EngineQueries {
     // the read proves erasure survives the physical rewrite (the GDPR
     // requirement: data gone from storage, not just filtered).
     "s6_forget_sweep" -> { (s, dir) =>
-      val base = Files.createTempDirectory("graft_s6").toString
+      val base = stagingDir("s6")
       val db = UnitDb.open(s, base + "/store")
       val src = graft.Tables.eventsStream(s, dir)
         .filter(col("event_type") === "click")

@@ -36,6 +36,19 @@ object QUtil {
   def duckTsec(col: String): String =
     s"epoch_us(date_trunc('second', $col)) // 1000000"
 
+  /** A fresh staging directory for one registry run: its streamed inputs,
+    * checkpoints, state and stores. The DataFrame a query returns reads
+    * them lazily, so none is removed per query; every one lives under one
+    * per-JVM root, which a single shutdown hook deletes. */
+  def stagingDir(label: String): String =
+    java.nio.file.Files.createTempDirectory(stagingRoot, s"graft_$label").toString
+
+  private lazy val stagingRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_stage")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.engine.FsUtil.deleteTree(root)))
+    root
+  }
+
   /** Spread a narrow input across the cluster before a CPU-heavy per-row
     * kernel. A small parquet table arrives as one scan partition
     * (maxPartitionBytes ≫ file size), which serializes the kernel on one

@@ -696,7 +696,7 @@ object TimeSeriesQueries {
     // final committed generation and compared to the one-shot oracle.
     "m28_stream_rollup" -> { (s, dir) => QUtil.withStreamParts(s, 8) {
       import graft.operators.IncrementalAgg
-      val base = java.nio.file.Files.createTempDirectory("graft_m28").toString
+      val base = stagingDir("m28")
       Tables.events(s, dir).select("event_type", "ts", "value")
         .repartition(4).write.parquet(s"$base/src")
       val schema = s.read.parquet(s"$base/src").schema
@@ -723,7 +723,7 @@ object TimeSeriesQueries {
     // full-recompute oracle states.
     "m29_stream_upsert" -> { (s, dir) =>
       import graft.operators.KeyedUpsert
-      val base = java.nio.file.Files.createTempDirectory("graft_m29").toString
+      val base = stagingDir("m29")
       Tables.events(s, dir)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .repartition(4).write.parquet(s"$base/src")

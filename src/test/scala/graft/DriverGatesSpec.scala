@@ -50,6 +50,27 @@ class DriverGatesSpec extends SparkSpec {
       Graph.incrTrianglesFinalize(Graph.incrTriangles(Some(s1),
         h2.toDF("doc_a", "doc_b"), smallGraphCap = cap))
     })
+
+    // UnitDb.get: the driver read (cap ∞) against getFrame (cap 0)
+    var now = 1700000000000L
+    val db = graft.engine.UnitDb.open(spark,
+      java.nio.file.Files.createTempDirectory("gates_get").toString + "/store",
+      clock = () => now)
+    for (i <- 0 until 60) {
+      val id = db.put(s"g.t${rnd.nextInt(4)}", s"p$i".getBytes)
+      if (i % 9 == 0) db.delete(id, "g.t0")
+      if (i % 20 == 19) { db.put("g.*", s"w$i".getBytes); db.sync() }
+      now += 3600000L
+    }
+    db.put("g.t1", "pending".getBytes)
+    for (q <- Seq(graft.model.Query("g.t1"), graft.model.Query("g.*", limit = 7),
+        graft.model.Query("g...?last=30h"), graft.model.Query("g.t2?last=3"))) {
+      val drv = db.get(q, Long.MaxValue).map(new String(_)).toSeq
+      val dist = db.get(q, 0L).map(new String(_)).toSeq
+      assert(drv.nonEmpty, s"get $q produced nothing")
+      assert(drv == dist, s"get $q diverged between the gated paths")
+    }
+    db.close()
   }
 
   test("triangle twin-contraction: a replicated (clique-dense) graph lands " +

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import graft.engine.{ManifestCommit, UnitDb}
+import graft.engine.{AesGcm, ChaCha20Poly1305, EngineProbe, ManifestCommit, PayloadCipher,
+  PosixSwapCommit, StoreCommitProtocol, UnitDb}
 import graft.model.{Entry, Message, Query}
 
 /** Engine scenarios mirroring the reference test suite (SURVEY §5):
@@ -1085,7 +1086,7 @@ class UnitDbSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  test("get is one Spark job: tombstones resolve on the driver, no exchange or join") {
+  test("getFrame is one Spark job and a gated get none: tombstones resolve on the driver") {
     val (db, _, tick) = freshDb()
     for (i <- 1 to 12) { db.put(s"one.d${i % 3}.t", s"o.$i".getBytes); tick(1000) }
     db.put("one.*.t", "wild".getBytes) // stored wildcard: both union branches run
@@ -1099,16 +1100,24 @@ class UnitDbSpec extends SparkSpec {
     db.delete(seqOf("o.9"), "one.d0.t") // and one pending
     val static = Query("one.d0.t")
     val wild = Query("one.*.t", limit = 100)
+    def payloads(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => new String(r.getAs[Array[Byte]]("payload"))).toSeq
     // the first read after a sync re-reads the changed sidecar: one more job
-    val (first, firstJobs) = jobsOf(db.get(static))
+    val (first, firstJobs) = jobsOf(payloads(db.getFrame(static)))
     assert(firstJobs == 2, s"sidecar refresh + scan, got $firstJobs jobs")
-    assert(first.map(new String(_)).toSeq == Seq("wild", "o.12"))
-    val (got, staticJobs) = jobsOf(db.get(static))
-    assert(staticJobs == 1, s"static get ran $staticJobs jobs")
-    assert(got.map(new String(_)).toSeq == Seq("wild", "o.12"))
-    val (gotWild, wildJobs) = jobsOf(db.get(wild))
-    assert(wildJobs == 1, s"wildcard get ran $wildJobs jobs")
-    assert(gotWild.length == 10 && !gotWild.map(new String(_)).exists(Set("o.3", "o.6", "o.9")))
+    assert(first == Seq("wild", "o.12"))
+    val (got, staticJobs) = jobsOf(payloads(db.getFrame(static)))
+    assert(staticJobs == 1, s"static getFrame ran $staticJobs jobs")
+    assert(got == Seq("wild", "o.12"))
+    val (gotWild, wildJobs) = jobsOf(payloads(db.getFrame(wild)))
+    assert(wildJobs == 1, s"wildcard getFrame ran $wildJobs jobs")
+    assert(gotWild.length == 10 && !gotWild.exists(Set("o.3", "o.6", "o.9")))
+    // under the gate, with the sidecar keys cached, get runs no Spark job
+    for ((q, want) <- Seq(static -> got, wild -> gotWild)) {
+      val (driver, jobs) = jobsOf(db.get(q).map(new String(_)).toSeq)
+      assert(jobs == 0, s"gated get $q ran $jobs jobs")
+      assert(driver == want, s"gated get $q")
+    }
 
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.Exchange
@@ -1130,11 +1139,49 @@ class UnitDbSpec extends SparkSpec {
     }
   }
 
+  test("gated get stops after the newest day group that fills the limit") {
+    val (db, _, tick) = freshDb()
+    val DayMs = 86400000L
+    // three days, one sync each: one file per day
+    for (d <- 0 until 3) {
+      for (i <- 1 to 5) { db.put(s"stop.d$i.t", s"day$d.$i".getBytes); tick(1000) }
+      db.sync()
+      tick(DayMs)
+    }
+    val before = EngineProbe.driverFilesRead(db)
+    val got = db.get(Query("stop.*.t", limit = 4)).map(new String(_)).toSeq
+    assert(got == Seq("day2.5", "day2.4", "day2.3", "day2.2"))
+    assert(EngineProbe.driverFilesRead(db) - before == 1,
+      "the newest day holds the limit: only its file is opened")
+    // a limit past the newest day reads on into the next one, no further
+    val before2 = EngineProbe.driverFilesRead(db)
+    val got2 = db.get(Query("stop.*.t", limit = 7)).map(new String(_)).toSeq
+    assert(got2 == (5 to 1 by -1).map(i => s"day2.$i") ++ Seq("day1.5", "day1.4"))
+    assert(EngineProbe.driverFilesRead(db) - before2 == 2)
+    // a negative count is refused the same way on both paths
+    for (cap <- Seq(Long.MaxValue, 0L))
+      intercept[IllegalArgumentException](db.get(Query("stop.*.t?last=-1"), cap))
+  }
+
   test("tombstone key cache follows every store change (in-memory model)") {
+    // every check answers each query twice, with get forced onto the
+    // driver read (cap ∞) and onto getFrame (cap 0)
+    modelScenario("swap, plain", PosixSwapCommit, None, AesGcm)
+    modelScenario("manifest, AES-GCM", ManifestCommit,
+      Some(Array.tabulate[Byte](16)(i => (i * 7 + 1).toByte)), AesGcm)
+    modelScenario("swap, ChaCha20-Poly1305", PosixSwapCommit,
+      Some(Array.tabulate[Byte](32)(i => (i * 5 + 3).toByte)), ChaCha20Poly1305)
+  }
+
+  private def modelScenario(label: String, protocol: StoreCommitProtocol,
+      key: Option[Array[Byte]], cipher: PayloadCipher): Unit = {
     import scala.collection.mutable
     val dir = Files.createTempDirectory("graftdb_model").toString + "/store"
+    val DayMs = 86400000L
     var now = 1700000000000L
-    var db = UnitDb.open(spark, dir, clock = () => now)
+    def open() = UnitDb.open(spark, dir, clock = () => now, encryptionKey = key,
+      commitProtocol = protocol, cipher = cipher)
+    var db = open()
     final case class M(seq: Long, topic: String, contract: Long, ts: Long,
         expires: Option[Long], payload: String, var deleted: Boolean = false) {
       def live: Boolean = !deleted && expires.forall(_ > now)
@@ -1146,24 +1193,42 @@ class UnitDbSpec extends SparkSpec {
         ttl: Option[Long] = None): M = {
       k += 1
       val p = s"v$k"
-      val id = db.putEntry(Entry(topic, p.getBytes, contract, ttl))
+      val id = db.putEntry(Entry(topic, p.getBytes, contract, ttl, encrypt = key.isDefined))
       val m = M(graft.model.MessageId.decode(id)._3, topic, contract, now,
         ttl.map(now + _), p)
       model += m; now += 1000; m
     }
-    def matches(m: M, pattern: String) =
-      if (pattern.endsWith(".*")) m.topic.startsWith(pattern.dropRight(1))
-      else m.topic == pattern
+    // an independent statement of the bidirectional match: `*` is one
+    // level, a trailing `...` any number of remaining levels
+    def parts(t: String): (Seq[String], Boolean) =
+      if (t.endsWith("...")) (t.dropRight(3).split('.').toSeq.filter(_.nonEmpty), true)
+      else (t.split('.').toSeq, false)
+    def matches(m: M, pattern: String) = {
+      val (a, am) = parts(m.topic); val (b, bm) = parts(pattern)
+      a.zip(b).forall { case (x, y) => x == y || x == "*" || y == "*" } &&
+        (a.length == b.length || (a.length < b.length && am) || (b.length < a.length && bm))
+    }
+    val queries = Seq("mdl.a" -> 0, "mdl.b" -> 0, "mdl.*" -> 0, "mdl.*" -> 3,
+      "mdl.*" -> 4, "mdl.a?last=2" -> 0, "mdl...?last=30h" -> 0)
     def check(step: String): Unit = {
-      for (c <- Seq(Message.MasterContract, C2);
-           (pattern, limit) <- Seq("mdl.a" -> 0, "mdl.b" -> 0, "mdl.*" -> 0, "mdl.*" -> 3)) {
-        val want = model.filter(m => m.contract == c && matches(m, pattern) && m.live)
-          .sortBy(m => (-m.ts, -m.seq)).take(if (limit > 0) limit else 1000)
-          .map(_.payload).toSeq
-        val got = db.get(Query(pattern, c, limit)).map(new String(_)).toSeq
-        assert(got == want, s"$step: get($pattern, $c, $limit)")
+      for (c <- Seq(Message.MasterContract, C2); (q, limit) <- queries) {
+        val (pattern, last) = q.split('?') match {
+          case Array(p)    => (p, None)
+          case Array(p, o) => (p, Some(o.stripPrefix("last=")))
+        }
+        val cutoff = last.filter(_.endsWith("h"))
+          .map(h => now - h.dropRight(1).toLong * 3600000L).getOrElse(Long.MinValue)
+        val n = last.filterNot(_.endsWith("h")).map(_.toInt)
+          .getOrElse(if (limit > 0) limit else 1000)
+        val want = model.filter(m => m.contract == c && matches(m, pattern) && m.live &&
+            m.ts >= cutoff)
+          .sortBy(m => (-m.ts, -m.seq)).take(n).map(_.payload).toSeq
+        for (cap <- Seq(Long.MaxValue, 0L)) {
+          val got = db.get(Query(q, c, limit), cap).map(new String(_)).toSeq
+          assert(got == want, s"$label $step: get($q, $c, $limit) with cap $cap")
+        }
       }
-      assert(db.count() == model.count(_.live), s"$step: count")
+      assert(db.count() == model.count(_.live), s"$label $step: count")
     }
 
     for (i <- 1 to 6) put(if (i % 2 == 0) "mdl.a" else "mdl.b")
@@ -1171,6 +1236,11 @@ class UnitDbSpec extends SparkSpec {
     put("mdl.a", C2); put("mdl.b", C2)
     db.sync()
     check("synced")
+    // unsynced rows beside synced ones, a stored wildcard among them
+    put("mdl.b"); put("mdl.*"); put("mdl.a", C2)
+    check("unsynced beside synced")
+    db.sync()
+    check("stored wildcard synced")
     // a pending delete of a pending put, and of a synced row
     val fresh = put("mdl.a")
     db.delete(fresh.seq, "mdl.a"); fresh.deleted = true
@@ -1191,14 +1261,40 @@ class UnitDbSpec extends SparkSpec {
     db.sync()
     check("second contract delete")
     val swept = db.deleteMatching(Query("mdl.b"))
+    // a static sweep takes the stored wildcard publishes it matches too
     val sweptModel = model.filter(m => m.contract == Message.MasterContract &&
-      m.topic == "mdl.b" && m.live)
+      matches(m, "mdl.b") && m.live)
     sweptModel.foreach(_.deleted = true)
     assert(swept == sweptModel.size.toLong)
     check("deleteMatching")
     now += 60000L // the TTL row expires
     check("expiry")
-    for (_ <- 1 to 3) { put("mdl.a"); db.sync() }
+    // three more days, one sync each: limits straddle day boundaries and
+    // the `?last=30h` cutoff falls inside the store
+    for (d <- 1 to 3) {
+      now += DayMs
+      put("mdl.a"); put("mdl.b"); put("mdl.*"); put("mdl.a", C2)
+      db.sync()
+    }
+    check("three more days")
+    put("mdl.b"); put("mdl.a", C2)
+    check("unsynced on the newest day")
+    // a distributed append bumps the handle like a sync
+    val appended = {
+      val base = db.reserveSeqRange(2)
+      (1 to 2).map { i =>
+        k += 1
+        val m = M(base + i, "mdl.a", Message.MasterContract, now, None, s"v$k")
+        now += 1000; m
+      }
+    }
+    db.appendFrame(spark.createDataset(appended.map(m => Message(m.seq, m.contract,
+      m.topic, graft.model.Topic.parse(m.topic).parts, false, false,
+      graft.model.Topic.parse(m.topic).depth, new java.sql.Timestamp(m.ts), None,
+      key.isDefined, m.payload.getBytes)))(org.apache.spark.sql.Encoders.product[Message]).toDF())
+    model ++= appended
+    check("appendFrame")
+    db.sync()
     assert(db.compact(minFiles = 2) > 0)
     assert(Files.exists(java.nio.file.Paths.get(dir, "_tombstones")))
     check("compact keeps the sidecar")
@@ -1210,10 +1306,11 @@ class UnitDbSpec extends SparkSpec {
     db.sync()
     check("delete after vacuum")
     db.close()
-    db = UnitDb.open(spark, dir, clock = () => now)
+    db = open()
     check("reopened")
     put("mdl.b"); db.sync()
     check("reopened, written")
+    assert(EngineProbe.driverFilesRead(db) > 0, s"$label: no driver read ran")
     db.close()
   }
 }

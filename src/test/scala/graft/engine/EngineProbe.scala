@@ -1,0 +1,7 @@
+package graft.engine
+
+/** Test-side reads of engine-private counters. */
+object EngineProbe {
+  /** Files the store's driver reads have opened so far. */
+  def driverFilesRead(db: UnitDb): Long = db.driverFilesRead.get
+}
