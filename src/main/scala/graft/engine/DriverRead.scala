@@ -124,9 +124,9 @@ private[engine] object DriverRead {
       PartSchema, DataSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       spark.sessionState.newHadoopConf())
 
-  /** One file-reading pool for every store in the JVM, one daemon thread
-    * per core. */
-  private lazy val pool: ExecutorService =
+  /** One file pool for every store in the JVM, one daemon thread per core:
+    * driver reads, and [[DriverWriter]]'s writes. */
+  private[engine] lazy val pool: ExecutorService =
     Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors, { r =>
       val t = new Thread(r, "graft-driver-read"); t.setDaemon(true); t
     })

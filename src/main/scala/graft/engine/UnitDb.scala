@@ -9,7 +9,9 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{ExpressionImplUtils, Predicate}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpressionImplUtils, GenericInternalRow, Predicate}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,9 +29,11 @@ import graft.operators.DriverGates
   * moral equivalent of the reference memdb read-through,
   * db_internal.go:196-212).
   *
-  *  - `put`/`putEntry` (db.go:339-387)  → buffer, then one atomic Parquet
-  *    append per `sync()` (the reference tiny-log → WAL → block-sync
-  *    pipeline collapses into Spark's file-commit protocol, SURVEY §3.2).
+  *  - `put`/`putEntry` (db.go:339-387)  → buffer, then per `sync()` one
+  *    Parquet file per touched `(contract, wc, day)`, written on the driver
+  *    by Spark's own parquet writer and published together (the reference
+  *    tiny-log → WAL → block-sync pipeline collapses into one sequential
+  *    driver-side write, as its block sync is, SURVEY §3.2).
   *  - `get`       (db.go:222-319)  → the candidate files of one store
   *    generation, pruned on `(contract, wc, day)` and read on the driver
   *    newest day first into a bounded top-K, with no Spark query; above a
@@ -59,7 +63,7 @@ import graft.operators.DriverGates
   * of the wildcard bucket — no OR with a non-pushable side (VERDICT r1 #3).
   *
   * Durability contract: the pending buffer is volatile — rows are durable
-  * from `sync()` (one atomic parquet commit), where the reference's WAL
+  * from `sync()` (its files are published together), where the reference's WAL
   * makes every accepted put replayable (wal/wal.go). An embedded caller
   * holding data it cannot lose should sync per batch; a durable
   * low-latency feed should ingest through
@@ -333,7 +337,7 @@ final class UnitDb private (
         lit(new Timestamp(clock())).as("ts"))
       .observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("n"))
       .write.mode(SaveMode.Append)
-      .partitionBy("contract").option("compression", "snappy")
+      .partitionBy("contract").options(TombWriteOptions)
       .parquet(tombsPath)
     val n = obs.get("n").asInstanceOf[Long]
     nDeletes.addAndGet(n) // cumulative varz counter — NOT the return value
@@ -382,12 +386,21 @@ final class UnitDb private (
       Topic.parse(authorize(topic, TopicKey.AllowWrite, contract)).key,
       new Timestamp(clock()))
 
-  /** Flush the pending buffers as atomic Parquet appends (reference
-    * DB.Sync, db.go:452-472): entries to the main table, delete markers to
-    * the `_tombstones` sidecar. */
+  /** Flush the pending buffers as Parquet appends (reference DB.Sync,
+    * db.go:452-472, and its sequential block writer, db_sync.go:212-303):
+    * entries to the main table, delete markers to the `_tombstones`
+    * sidecar. The rows already live on the driver, so they are written
+    * there, with no Spark job: Spark's own parquet writer
+    * ([[DriverWriter]], the writer options of [[configureWriter]]) writes
+    * one file per `(contract, wc, day)` (per salt bucket too, see
+    * [[UnitDb.open]]'s `writeSaltBuckets`), rows sorted by `(topic, ts)`,
+    * payloads sealed by the functions [[encrypt]] runs, files in parallel
+    * on the driver pool. A sync's files become visible together, after all
+    * of them closed; on a failure none does, and the rows stay buffered for
+    * the next sync. */
   def sync(): Unit = flushLock.synchronized { timed(syncMeter) {
     // snapshot the buffers under the (inner) monitor, write OUTSIDE it:
-    // writers keep appending to `pending` while the parquet jobs run,
+    // writers keep appending to `pending` while the files are written,
     // and readers' seqlock capture (see visEpoch) never sees a row in
     // both a buffer and a fresh file.
     val (tombs, msgs) = synchronized {
@@ -396,34 +409,64 @@ final class UnitDb private (
       (flushingTombs.toSeq, flushing.toSeq)
     }
     if (tombs.isEmpty && msgs.isEmpty) return
+    val failAt = failFileWrite.getAndSet(0)
     enterDiskMutation()
     try {
       // Tombstones flush FIRST: the two appends are not atomic together,
       // and a crash between them must only ever under-apply the batch. A
       // tombstone whose message never landed is a harmless no-op; the
       // reverse order would expose batch puts with their deletes lost.
-      if (tombs.nonEmpty) {
-        val ds = spark.createDataset(tombs)(Encoders.product[Tombstone])
-        ds.toDF().repartition(1).write.mode(SaveMode.Append)
-          .partitionBy("contract").option("compression", "snappy")
-          .parquet(tombsPath)
+      val tombFiles = tombstoneFiles(tombs)
+      if (tombFiles.nonEmpty) {
+        tombWriter.write(tombsPath, tombFiles, failAt)
         synchronized { flushingTombs.clear() }
       }
       if (msgs.nonEmpty) {
-        // large flushes: ship rows as an RDD so the InternalRow encode
-        // distributes across cores instead of running single-threaded in
-        // LocalRelation materialization (measured ~25% on 1M-row
-        // flushes); small flushes keep the cheaper local path
-        val ds = if (msgs.length >= 100000)
-          spark.createDataset(spark.sparkContext.parallelize(msgs,
-            math.min(16, 1 + msgs.length / 65536)))(Encoders.product[Message])
-        else spark.createDataset(msgs)(Encoders.product[Message])
-        writeStore(ds.toDF())
+        storeWriter.write(dataPath, messageFiles(msgs), failAt - tombFiles.size)
         synchronized { flushing.clear(); storeExists = true }
       }
       nSyncs.incrementAndGet(): Unit
     } finally exitDiskMutation()
   } }
+
+  /** Test seam: the 1-based file of the next sync whose write fails (its
+    * tombstone files count first); 0 for none. Cleared by that sync. */
+  private[engine] val failFileWrite = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  private lazy val storeWriter = new DriverWriter(spark, StoreWriteOptions, MessageFileSchema)
+  private lazy val tombWriter = new DriverWriter(spark, TombWriteOptions, TombFileSchema)
+
+  /** A sync's messages as files: one per `(contract, wc, day)`, and per
+    * `pmod(seq, writeSaltBuckets)` on a salted store, each file's rows in
+    * at-rest form sorted by `(topic, ts)` in Spark's (UTF-8 byte) order.
+    * `day` derives as [[DriverRead.pendingRow]] derives it. */
+  private def messageFiles(msgs: Seq[Message]): Seq[(String, () => Iterator[InternalRow])] = {
+    val zone = sessionZone
+    val seal: Array[Byte] => Array[Byte] = encryptionKey match {
+      case None => identity
+      case Some(k) => cipher match {
+        case AesGcm => p => ExpressionImplUtils.aesEncrypt(p, k, UTF8String.fromString("GCM"),
+          UTF8String.fromString("DEFAULT"), Array.emptyByteArray, Array.emptyByteArray)
+        case ChaCha20Poly1305 => p => ChaChaMacUtil.seal(k, p)
+      }
+    }
+    msgs.groupBy(m => (m.contract, m.is_wildcard, dayOf(m.ts.getTime, zone),
+        if (writeSaltBuckets > 1) java.lang.Math.floorMod(m.seq, writeSaltBuckets.toLong) else 0L))
+      .toSeq.map { case ((c, wild, day, _), group) =>
+        (s"contract=$c/wc=${if (wild) 1 else 0}/day=$day", () => {
+          val rows = group.iterator.map(m => atRestRow(m, seal)).toArray
+          java.util.Arrays.sort(rows, TopicTsOrder)
+          rows.iterator
+        })
+      }
+  }
+
+  /** A sync's tombstones as files: one per contract. */
+  private def tombstoneFiles(tombs: Seq[Tombstone]): Seq[(String, () => Iterator[InternalRow])] =
+    tombs.groupBy(_.contract).toSeq.map { case (c, group) =>
+      (s"contract=$c", () => group.iterator.map(t => InternalRow(t.seq,
+        UTF8String.fromString(t.topic), DateTimeUtils.fromJavaTimestamp(t.ts))))
+    }
 
   // ----------------------------------------------------------------- read
 
@@ -1019,12 +1062,13 @@ final class UnitDb private (
 
   /** Streaming-ingest hook (graft.streaming.StreamIngest): append
     * pre-formed Message rows distributively — the at-rest transforms
-    * (derive partitions, encrypt, sort, bloom) are applied by writeStore
-    * exactly as for API puts. Synchronized with [[sync]]: two concurrent
-    * appends to one parquet path would race in the shared `_temporary`
-    * staging directory, so all writes to a store serialize on this
-    * object (single-writer discipline, same as the reference's writer
-    * lock, db.go:70). */
+    * (derive partitions, encrypt, sort, bloom) are applied by writeStore,
+    * giving the layout [[sync]] writes for API puts. Synchronized with
+    * [[sync]] and the rewrites: two concurrent Spark appends to one
+    * parquet path would race in the shared `_temporary` staging
+    * directory, so all writes to a store serialize on this object
+    * (single-writer discipline, same as the reference's writer lock,
+    * db.go:70). */
   private[graft] def appendFrame(df: DataFrame): Unit =
     flushLock.synchronized {
       enterDiskMutation()
@@ -1170,25 +1214,27 @@ final class UnitDb private (
     case None => df
   }
 
-  /** One file per (contract, wc, day) per sync (writeSaltBuckets = 1):
-    * repartitioning on the partition columns before the partitioned write
-    * prevents the every-input-task-writes-every-partition small-files
-    * explosion (a 1000-task batch over 30 days would otherwise cut 30k
-    * files). Sorting by (topic, ts) inside each file keeps row-group
-    * stats selective.
+  /** The distributed store write, for rows already on executors
+    * ([[appendFrame]]'s micro-batches): one file per (contract, wc, day)
+    * per write (writeSaltBuckets = 1). Repartitioning on the partition
+    * columns before the partitioned write prevents the
+    * every-input-task-writes-every-partition small-files explosion (a
+    * 1000-task batch over 30 days would otherwise cut 30k files). Sorting
+    * by (topic, ts) inside each file keeps row-group stats selective.
+    * [[sync]] writes the same layout from the driver.
     *
     * At extreme skew (one day = most of a huge batch) a single-bucket
     * repartition serializes that day into one writer task — opening the
     * store with `writeSaltBuckets` = k splits every (contract, wc, day)
     * across k deterministic seq-keyed buckets: the hot day writes from k
-    * tasks at the price of ≤ k files per partition per sync. Readers are
+    * tasks at the price of ≤ k files per partition per write. Readers are
     * unaffected (the salt is a shuffle key, never a stored column). */
   private def writeStore(df: DataFrame): Unit = {
     val prepared = encrypt(withDerived(df))
     val shuffled =
       if (writeSaltBuckets > 1)
         // explicit partition count: AQE would otherwise coalesce the
-        // salted splits of a small sync back into one task, defeating
+        // salted splits of a small write back into one task, defeating
         // the salt exactly when testing it (it respects user-specified
         // counts; at real hot-day sizes it wouldn't coalesce anyway)
         prepared.repartition(spark.sessionState.conf.numShufflePartitions,
@@ -1206,19 +1252,11 @@ final class UnitDb private (
     configureWriter(df.sortWithinPartitions("topic", "ts")
       .write.mode(SaveMode.Overwrite)).parquet(target)
 
-  /** Shared writer config: snappy at rest (reference db_internal.go:292) and
-    * Parquet bloom filters on `seq` + `topic` — the Spark-native form of the
-    * reference's per-seq bloom consulted before delete/expiry reads
-    * (filter.go:33-45, SURVEY §1.3). Row-group min/max stats on the sorted
-    * `topic` column do the positive-lookup pruning; the blooms kill negative
-    * point lookups without touching pages. */
+  /** A Spark write of store rows: partitioned by `(contract, wc, day)`,
+    * with [[UnitDb.StoreWriteOptions]], the options [[sync]]'s driver
+    * writer is built with. */
   private def configureWriter(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) =
-    w.partitionBy("contract", "wc", "day")
-      .option("compression", "snappy")
-      .option("parquet.bloom.filter.enabled#seq", "true")
-      .option("parquet.bloom.filter.expected.ndv#seq", "100000")
-      .option("parquet.bloom.filter.enabled#topic", "true")
-      .option("parquet.bloom.filter.expected.ndv#topic", "10000")
+    w.partitionBy("contract", "wc", "day").options(StoreWriteOptions)
 
   /** The live data directory — resolved through the commit protocol (the
     * store path itself under [[PosixSwapCommit]]; the pointer-named
@@ -1328,6 +1366,54 @@ object UnitDb {
   private final case class SidecarKeys(files: Seq[(String, Long)],
       keys: Option[Broadcast[TombstoneKeys]], size: Int)
 
+  /** Every store write's parquet options: snappy at rest (reference
+    * db_internal.go:292) and Parquet bloom filters on `seq` + `topic` — the
+    * Spark-native form of the reference's per-seq bloom consulted before
+    * delete/expiry reads (filter.go:33-45, SURVEY §1.3). Row-group min/max
+    * stats on the sorted `topic` column do the positive-lookup pruning; the
+    * blooms kill negative point lookups without touching pages. */
+  private val StoreWriteOptions: Map[String, String] = Map(
+    "compression" -> "snappy",
+    "parquet.bloom.filter.enabled#seq" -> "true",
+    "parquet.bloom.filter.expected.ndv#seq" -> "100000",
+    "parquet.bloom.filter.enabled#topic" -> "true",
+    "parquet.bloom.filter.expected.ndv#topic" -> "10000")
+
+  /** The `_tombstones` sidecar's parquet options. */
+  private val TombWriteOptions: Map[String, String] = Map("compression" -> "snappy")
+
+  /** The file schema of the rows [[UnitDb.sync]] writes: the encoder's
+    * schema without the partition columns (`contract`; `wc` and `day` are
+    * derived, not encoded), as a Spark write of a
+    * `Dataset[Message]` (or `Dataset[Tombstone]`) stores it, nullability
+    * included. */
+  private def fileSchema(s: StructType): StructType = StructType(s.filterNot(_.name == "contract"))
+  private val MessageFileSchema = fileSchema(Encoders.product[Message].schema)
+  private val TombFileSchema = fileSchema(Encoders.product[Tombstone].schema)
+  require(MessageFileSchema.fieldNames.toSeq == Seq("seq", "topic", "topic_parts",
+    "is_wildcard", "is_multi", "depth", "ts", "expires_at", "encrypted", "payload"),
+    "atRestRow's field order")
+
+  /** A message as a [[MessageFileSchema]] row, its payload sealed when
+    * flagged `encrypted`. */
+  private def atRestRow(m: Message, seal: Array[Byte] => Array[Byte]): InternalRow = {
+    val parts = new Array[Any](m.topic_parts.length)
+    var i = 0
+    m.topic_parts.foreach { p => parts(i) = UTF8String.fromString(p); i += 1 }
+    new GenericInternalRow(Array[Any](m.seq, UTF8String.fromString(m.topic),
+      new GenericArrayData(parts), m.is_wildcard, m.is_multi, m.depth,
+      DateTimeUtils.fromJavaTimestamp(m.ts),
+      m.expires_at.map(t => DateTimeUtils.fromJavaTimestamp(t): Any).orNull,
+      m.encrypted, if (m.encrypted && m.payload != null) seal(m.payload) else m.payload))
+  }
+
+  /** `(topic, ts)` over [[MessageFileSchema]] rows, in Spark's sort order:
+    * `topic` by UTF-8 bytes, not by `String.compareTo`'s UTF-16 units. */
+  private val TopicTsOrder: java.util.Comparator[InternalRow] = { (a, b) =>
+    val c = a.getUTF8String(1).compareTo(b.getUTF8String(1))
+    if (c != 0) c else java.lang.Long.compare(a.getLong(6), b.getLong(6))
+  }
+
   /** The two tombstone columns readers match on. */
   private val tombKeySchema: StructType = StructType(tombSchema.fields.filter(f =>
     f.name == "seq" || f.name == "topic"))
@@ -1338,10 +1424,11 @@ object UnitDb {
   /** Open (or create) a store directory (reference db.go:50-210).
     * `encryptionKey` (16/24/32 bytes) enables per-entry at-rest encryption
     * (reference WithEncryption, options.go). `writeSaltBuckets` > 1
-    * splits each (contract, wc, day) write partition across that many
-    * seq-keyed writer tasks — for ingest where one hot day dominates a
-    * sync (see `writeStore`); the default writes one file per partition
-    * per sync. */
+    * splits each (contract, wc, day) of a write across that many
+    * seq-keyed files, written in parallel (by Spark tasks in `writeStore`,
+    * on the driver pool in `sync`) — for ingest where one hot day
+    * dominates a write; the default writes one file per partition per
+    * write. */
   def open(
       spark: SparkSession,
       path: String,

@@ -30,6 +30,10 @@ import graft.streaming.{UtpCodec => C}
   * engine — one driver-side listener feeding the store's pending buffer,
   * exactly how the embedded `put` face is used, with durability on sync
   * cadence (`syncEveryPuts`) plus a final sync per connection close. A
+  * publisher whose put fills the store's buffer (`autoFlushRows`) syncs
+  * inline; a sync writes the buffer's parquet files on the driver, with
+  * no Spark job ([[UnitDb.sync]]), so that wait is a parquet encode, not
+  * a scheduled write job. A
   * production deployment fronts many of these (or the reference server
   * itself) and lets the Spark side do what it scales at: the store's
   * partitioned parquet is the meeting point. Secure mode needs no extra

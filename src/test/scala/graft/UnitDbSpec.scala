@@ -1313,4 +1313,217 @@ class UnitDbSpec extends SparkSpec {
     assert(EngineProbe.driverFilesRead(db) > 0, s"$label: no driver read ran")
     db.close()
   }
+
+  import scala.jdk.CollectionConverters._
+
+  /** Visible data files under `root` by partition directory (relative
+    * path), the `_` sidecars skipped. */
+  private def partitionFiles(root: String): Map[String, Seq[java.io.File]] = {
+    val base = java.nio.file.Paths.get(root)
+    val b = scala.collection.mutable.Map[String, Seq[java.io.File]]()
+    val walk = Files.walk(base)
+    try walk.forEach { p =>
+      val rel = base.relativize(p).toString
+      if (Files.isDirectory(p) && p.getFileName.toString.startsWith("day=") &&
+          !rel.startsWith("_"))
+        b += rel -> Option(p.toFile.listFiles).toSeq.flatten
+          .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+          .sortBy(_.getName)
+    } finally walk.close()
+    b.toMap
+  }
+
+  private def hiddenFiles(root: String): Seq[String] = {
+    val walk = Files.walk(java.nio.file.Paths.get(root))
+    try walk.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".inprogress")).toSeq
+    finally walk.close()
+  }
+
+  private def footer(f: java.io.File) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f.getAbsolutePath), new org.apache.hadoop.conf.Configuration()))
+    try r.getFooter finally r.close()
+  }
+
+  test("sync writes the layout the distributed write does: plain, AES-GCM, ChaCha20-Poly1305, salted") {
+    layoutScenario("plain", None, AesGcm, 1)
+    layoutScenario("AES-GCM", Some(Array.tabulate[Byte](16)(i => (i * 3 + 1).toByte)), AesGcm, 1)
+    layoutScenario("ChaCha20-Poly1305",
+      Some(Array.tabulate[Byte](32)(i => (i * 5 + 2).toByte)), ChaCha20Poly1305, 1)
+    layoutScenario("salted", None, AesGcm, 4)
+  }
+
+  /** One buffer, synced into one store and `appendFrame`d (the
+    * distributed `writeStore`) into another: the two must agree per
+    * partition directory on rows, footer schema, metadata keys, blooms,
+    * compression and `(topic, ts)` byte order. */
+  private def layoutScenario(label: String, key: Option[Array[Byte]],
+      cipher: PayloadCipher, salt: Int): Unit = {
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.unsafe.types.UTF8String
+    val base = Files.createTempDirectory("graftdb_layout").toString
+    val DayMs = 86400000L
+    var now = 1700000000000L
+    def open(name: String) = UnitDb.open(spark, s"$base/$name", clock = () => now,
+      encryptionKey = key, cipher = cipher, writeSaltBuckets = salt)
+    val synced = open("synced")
+    val appended = open("appended")
+    // "a.｡" sorts before "a.😀" in UTF-8 bytes and after it in UTF-16 units
+    val topics = Seq("a.😀", "a.｡", "a.b", "a.b.c", "a.*", "a...")
+    val C2 = 77L
+    for (day <- 0 until 3) {
+      for (r <- 1 to 4; c <- Seq(Message.MasterContract, C2); t <- topics) {
+        synced.putEntry(Entry(t, s"$label.$day.$r.$c.$t".getBytes("UTF-8"), c,
+          ttlMillis = if (r == 2) Some(DayMs + DayMs / 2) else None,
+          encrypt = key.isDefined && r != 3))
+        now += 1000
+      }
+      now += DayMs
+    }
+    val cols = UnitDb.storeSchema.fieldNames.filterNot(Set("day", "wc")).map(col).toSeq
+    val msgs = synced.snapshot().select(cols: _*)
+      .as(org.apache.spark.sql.Encoders.product[Message]).collect().toSeq
+    assert(msgs.length == 3 * 4 * 2 * topics.length)
+    synced.sync()
+    appended.appendFrame(spark.createDataset(msgs)(
+      org.apache.spark.sql.Encoders.product[Message]).toDF())
+
+    // equal rows, read through the store (decrypted) and through get
+    def rows(db: UnitDb) = db.snapshot().collect().map(r => r.toSeq.map {
+      case b: Array[Byte] => new String(b, "UTF-8")
+      case s: scala.collection.Seq[_] => s.mkString("/")
+      case o => o
+    }).toSet
+    assert(rows(synced) == rows(appended), s"$label: stored rows differ")
+    assert(rows(synced).size == msgs.length)
+    for (c <- Seq(Message.MasterContract, C2); q <- Seq("a.b", "a.*", "a...", "a.😀?last=3")) {
+      val query = Query(q, contract = c, limit = 500)
+      def got(db: UnitDb) = db.get(query).map(new String(_, "UTF-8")).toSeq
+      assert(got(synced) == got(appended), s"$label: get $q differs")
+      def scanned(db: UnitDb) = db.scanFrame(query).collect()
+        .map(r => (r.getLong(0), new String(r.getAs[Array[Byte]](3), "UTF-8"))).toSet
+      assert(scanned(synced) == scanned(appended), s"$label: scanFrame $q differs")
+    }
+    if (key.isDefined) {
+      val atRest = spark.read.parquet(s"$base/synced").filter(col("encrypted"))
+        .select("payload").collect().map(r => new String(r.getAs[Array[Byte]](0), "UTF-8"))
+      assert(atRest.nonEmpty && !atRest.exists(_.startsWith(label)),
+        s"$label: plaintext at rest")
+    }
+
+    val mine = partitionFiles(s"$base/synced")
+    val theirs = partitionFiles(s"$base/appended")
+    assert(mine.keySet == theirs.keySet && mine.size == 2 * 2 * 3,
+      s"$label: partition dirs ${mine.keySet} vs ${theirs.keySet}")
+    val reference = footer(theirs.values.head.head).getFileMetaData
+    for ((dir, files) <- mine) {
+      if (salt == 1) assert(files.size == 1, s"$label: $dir holds ${files.size} files")
+      else assert(files.size > 1 && files.size <= salt, s"$label: $dir holds ${files.size} files")
+      assert(theirs(dir).size <= salt)
+      for (f <- files) {
+        val meta = footer(f)
+        assert(meta.getFileMetaData.getSchema == reference.getSchema,
+          s"$label: footer schema\n${meta.getFileMetaData.getSchema}\nvs\n${reference.getSchema}")
+        assert(meta.getFileMetaData.getKeyValueMetaData.keySet ==
+          reference.getKeyValueMetaData.keySet, s"$label: footer metadata keys")
+        assert(meta.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata") ==
+          reference.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        for (block <- meta.getBlocks.asScala) {
+          val byName = block.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
+          assert(byName("seq").getBloomFilterOffset >= 0, s"$label: $dir seq bloom missing")
+          val topic = byName("topic")
+          assert(topic.getBloomFilterOffset >= 0 ||
+            (topic.getEncodingStats != null &&
+              !topic.getEncodingStats.hasNonDictionaryEncodedPages),
+            s"$label: $dir topic has neither bloom nor full dictionary encoding")
+          assert(block.getColumns.asScala.forall(_.getCodec == CompressionCodecName.SNAPPY),
+            s"$label: $dir not snappy")
+        }
+        // one file read by one task keeps the file's row order
+        val inFile = spark.read.parquet(f.getAbsolutePath).select("topic", "ts").collect()
+          .map(r => (UTF8String.fromString(r.getString(0)), r.getTimestamp(1).getTime))
+        assert(inFile.nonEmpty)
+        inFile.sliding(2).foreach {
+          case Array((t1, ts1), (t2, ts2)) =>
+            val c = t1.compareTo(t2)
+            assert(c < 0 || (c == 0 && ts1 <= ts2),
+              s"$label: $dir rows out of (topic, ts) byte order: $t1 $ts1, $t2 $ts2")
+          case _ => ()
+        }
+      }
+    }
+    synced.close(); appended.close()
+  }
+
+  test("sync runs no Spark job; a failed file write publishes nothing and is retried whole") {
+    val dir = Files.createTempDirectory("graftdb_nojob").toString + "/store"
+    val DayMs = 86400000L
+    val t0 = 1700000000000L
+    var now = t0
+    val db = UnitDb.open(spark, dir, clock = () => now)
+    // every put lands on one of three days, whatever the clock
+    val payloads = scala.collection.mutable.LinkedHashMap[Long, String]()
+    var puts = 0
+    def put(d: Int, p: String): Unit = {
+      val id = db.putEntry(Entry(s"nj.d$d.t", p.getBytes, tsMillis = Some(t0 + d * DayMs + puts)))
+      payloads(graft.model.MessageId.decode(id)._3) = p; puts += 1; now += 1000
+    }
+    def model(q: String) = db.get(Query(q, limit = 1000)).map(new String(_)).toSet
+    val (_, jobs) = jobsOf {
+      for (d <- 0 until 3; i <- 1 to 4) put(d, s"p$d.$i")
+      db.delete(payloads.head._1, "nj.d0.t")
+      db.sync()
+    }
+    assert(jobs == 0, s"puts, a delete and sync ran $jobs Spark jobs")
+    payloads.remove(payloads.head._1)
+    assert(model("nj.*.t") == payloads.values.toSet)
+
+    // a failed message file: nothing becomes visible, nothing stays hidden,
+    // and the rows still answer from the buffer
+    val before = partitionFiles(dir)
+    for (d <- 0 until 3; i <- 5 to 6) put(d, s"p$d.$i")
+    EngineProbe.failFileWrite(db, 2)
+    intercept[java.io.IOException](db.sync())
+    assert(partitionFiles(dir) == before, "a failed sync published files")
+    assert(hiddenFiles(dir).isEmpty, s"hidden files left: ${hiddenFiles(dir)}")
+    assert(db.count() == payloads.size)
+    assert(model("nj.*.t") == payloads.values.toSet)
+    // a failed tombstone file: the delete stays buffered and still applies
+    val gone = payloads.keys.toSeq(1)
+    db.delete(gone, "nj.d0.t")
+    EngineProbe.failFileWrite(db, 1)
+    intercept[java.io.IOException](db.sync())
+    assert(partitionFiles(dir) == before && hiddenFiles(dir).isEmpty)
+    payloads.remove(gone)
+    assert(db.count() == payloads.size)
+    assert(model("nj.*.t") == payloads.values.toSet)
+
+    // the retry writes every buffered row exactly once
+    db.sync()
+    val seqs = db.snapshot().select("seq").collect().map(_.getLong(0))
+    assert(seqs.length == puts && seqs.distinct.length == puts,
+      "every seq once (deleted rows stay stored until vacuum)")
+    assert(db.count() == payloads.size)
+    assert(UnitDb.open(spark, dir, clock = () => now).count() == payloads.size)
+
+    // a planted in-progress file is no store file: a copy of a real one,
+    // which any reader that listed it would count twice
+    val (day, files) = partitionFiles(dir).maxBy(_._2.size)
+    val planted = java.nio.file.Paths.get(dir, day, ".part-x.parquet.inprogress")
+    Files.copy(files.head.toPath, planted)
+    assert(db.count() == payloads.size)
+    assert(model("nj.*.t") == payloads.values.toSet)
+    assert(partitionFiles(dir).values.map(_.size).toSeq == Seq(2, 2, 2))
+    assert(db.compact(minFiles = 2) == 3)
+    assert(db.count() == payloads.size && model("nj.*.t") == payloads.values.toSet)
+    Files.copy(partitionFiles(dir).head._2.head.toPath,
+      java.nio.file.Paths.get(dir, partitionFiles(dir).head._1, ".part-y.parquet.inprogress"))
+    db.vacuum()
+    assert(db.count() == payloads.size && model("nj.*.t") == payloads.values.toSet)
+    db.close()
+  }
 }
