@@ -42,7 +42,9 @@ private[engine] final class DriverWriter(spark: SparkSession, opts: Map[String, 
     * Every file is written under a hidden name (`.part-….inprogress`, which
     * no listing reads). Only once all of them closed are they renamed into
     * place; on any failure every file this call wrote, hidden or placed, is
-    * deleted and the failure rethrown, leaving `dir` as it was.
+    * deleted, and so is every directory it created (Hadoop's `create` makes
+    * a file's missing parents) that is left empty; then the failure is
+    * rethrown, leaving `dir` as it was.
     *
     * @param files  (partition path relative to `dir`, the file's rows in
     *               write order) per file; the rows are built on the pool
@@ -58,6 +60,9 @@ private[engine] final class DriverWriter(spark: SparkSession, opts: Map[String, 
       val parent = new Path(dir, files(i)._1)
       (new Path(parent, s".$name.inprogress"), new Path(parent, name))
     }
+    val made = targets.map(_._1.getParent).distinct.flatMap(p =>
+      Iterator.iterate(p)(_.getParent).takeWhile(d => d != null && !fs.exists(d)))
+      .distinct.sortBy(-_.depth)
     val tasks = files.indices.map { i =>
       (() => {
         val w = factory.newInstance(targets(i)._1.toString, dataSchema, context(i))
@@ -87,6 +92,10 @@ private[engine] final class DriverWriter(spark: SparkSession, opts: Map[String, 
       case e: Throwable =>
         (placed ++ targets.map(_._1)).foreach { p =>
           try fs.delete(p, false) catch { case NonFatal(s) => e.addSuppressed(s) }
+        }
+        made.foreach { d =>
+          try if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
+          catch { case NonFatal(s) => e.addSuppressed(s) }
         }
         throw e
     }

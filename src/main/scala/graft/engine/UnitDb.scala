@@ -10,10 +10,12 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpressionImplUtils, GenericInternalRow, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{ExpressionImplUtils, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{ChaChaMacUtil, NotTombstoned, TombstoneKeys, TombstoneSet, TopicMatches, TopicPartsMatches}
@@ -482,12 +484,15 @@ final class UnitDb private (
     *  - The handle's files are pruned on contract, on `wc` (a static
     *    pattern reads `wc=0` by topic equality and `wc=1` by the stored-parts
     *    match) and on the `?last=` cutoff day.
-    *  - Day groups are read newest first by Spark's parquet row reader,
-    *    built once per store, a group's files in parallel on one shared
-    *    pool; unsynced rows pass the same predicate on the driver.
-    *  - The read stops once the bounded heap holds `limit` rows after a
-    *    whole day group: `day` derives from `ts` in the session zone, so
-    *    no older group can hold a newer row.
+    *  - Every candidate file is queued at once on one shared pool, newest
+    *    day first, and read by Spark's parquet row reader, one per store
+    *    and column set: each bucket reads only the columns it tests plus
+    *    `ts`, `seq`, `encrypted` and `payload`. Unsynced rows pass the
+    *    same predicate on the driver.
+    *  - Results merge in day order, and the read stops once the bounded
+    *    heap holds `limit` rows after a whole day: `day` derives from `ts`
+    *    in the session zone, so no older day can hold a newer row. Files
+    *    not merged by then are cancelled; their failures fail no `get`.
     *  - Keyed stores decrypt only the winners.
     * Predicates and order are the [[GetRule]] that [[getFrame]] plans, so
     * both paths give one answer. When the candidate files weigh more than
@@ -673,19 +678,17 @@ final class UnitDb private (
     }
     val rule = view.rule
     val onParts = rule.branches.map(DriverRead.partitionTest)
-    val onRows = rule.branches.map(b =>
-      Predicate.createInterpreted(DriverRead.bind(b, DriverRead.Layout)))
+    val reads = rule.branches.map(new BranchRead(_, parquetReader))
     val candidates = files.flatMap { f =>
       val b = onParts.indexWhere(_.eval(f.part))
-      if (b < 0) None else Some(f -> onRows(b))
+      if (b < 0) None else Some(f -> reads(b))
     }
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
     if (candidates.iterator.map(_._1.length + openCost).sum > cap) return None
     val zone = sessionZone
-    val kept = view.unsynced.iterator
-      .map(DriverRead.pendingRow(_, zone))
-      .filter(r => onRows.exists(_.eval(r))).toSeq
-    val hits = DriverRead.topK(candidates, kept, rule.limit, parquetReader, driverFilesRead)
+    val kept = DriverRead.keptPending(
+      view.unsynced.iterator.map(DriverRead.pendingRow(_, zone)), reads)
+    val hits = DriverRead.topK(candidates, kept, rule.limit, driverFilesRead, driverFilesMerged)
     Some(hits.map { h =>
       val p = if (h.row.isNullAt(DriverRead.PayloadIdx)) null
               else h.row.getBinary(DriverRead.PayloadIdx)
@@ -697,11 +700,17 @@ final class UnitDb private (
     }.toArray)
   }
 
-  /** Spark's parquet row reader for this store, built on first use. */
-  private lazy val parquetReader = DriverRead.reader(spark)
+  /** Spark's parquet row readers for this store, one per column set, each
+    * built on first use. */
+  private val parquetReaders =
+    new ConcurrentHashMap[StructType, PartitionedFile => Iterator[InternalRow]]()
+  private def parquetReader(columns: StructType): PartitionedFile => Iterator[InternalRow] =
+    parquetReaders.computeIfAbsent(columns, DriverRead.reader(spark, _))
 
-  /** Files opened by driver reads, for the stop-rule pin. */
+  /** Files opened by driver reads, and those merged into their answers
+    * (the stop-rule pin). */
   private[engine] val driverFilesRead = new AtomicLong(0L)
+  private[engine] val driverFilesMerged = new AtomicLong(0L)
 
   /** Live-entry count over every contract (reference db.go:475-478): not
     * expired, not tombstoned. */

@@ -1139,6 +1139,16 @@ class UnitDbSpec extends SparkSpec {
     }
   }
 
+  test("each driver-read branch reads only the columns it tests or returns") {
+    // both read ts, seq, encrypted and payload; the static `wc=0` branch
+    // none of topic_parts, is_wildcard, is_multi or depth
+    val Seq(static, matched) = EngineProbe.branchColumns("cols.a.b")
+    assert(static == Seq("seq", "topic", "ts", "expires_at", "encrypted", "payload"))
+    assert(matched == Seq("seq", "topic", "topic_parts", "is_multi", "ts", "expires_at",
+      "encrypted", "payload"))
+    assert(EngineProbe.branchColumns("cols.*.b") == Seq(matched))
+  }
+
   test("gated get stops after the newest day group that fills the limit") {
     val (db, _, tick) = freshDb()
     val DayMs = 86400000L
@@ -1148,19 +1158,48 @@ class UnitDbSpec extends SparkSpec {
       db.sync()
       tick(DayMs)
     }
-    val before = EngineProbe.driverFilesRead(db)
+    // every candidate file is queued up front, so the pin counts the files
+    // merged into the answer, not those opened
+    val before = EngineProbe.driverFilesMerged(db)
     val got = db.get(Query("stop.*.t", limit = 4)).map(new String(_)).toSeq
     assert(got == Seq("day2.5", "day2.4", "day2.3", "day2.2"))
-    assert(EngineProbe.driverFilesRead(db) - before == 1,
-      "the newest day holds the limit: only its file is opened")
+    assert(EngineProbe.driverFilesMerged(db) - before == 1,
+      "the newest day holds the limit: only its file is merged")
     // a limit past the newest day reads on into the next one, no further
-    val before2 = EngineProbe.driverFilesRead(db)
+    val before2 = EngineProbe.driverFilesMerged(db)
     val got2 = db.get(Query("stop.*.t", limit = 7)).map(new String(_)).toSeq
     assert(got2 == (5 to 1 by -1).map(i => s"day2.$i") ++ Seq("day1.5", "day1.4"))
-    assert(EngineProbe.driverFilesRead(db) - before2 == 2)
+    assert(EngineProbe.driverFilesMerged(db) - before2 == 2)
     // a negative count is refused the same way on both paths
     for (cap <- Seq(Long.MaxValue, 0L))
       intercept[IllegalArgumentException](db.get(Query("stop.*.t?last=-1"), cap))
+  }
+
+  test("an unreadable file of an older day fails only a get that needs that day") {
+    val dir = Files.createTempDirectory("graftdb_corrupt").toString + "/store"
+    val DayMs = 86400000L
+    var now = 1700000000000L
+    val db = UnitDb.open(spark, dir, clock = () => now)
+    for (d <- 0 until 3) {
+      // a file that is no parquet file, beside the oldest day's data file;
+      // the last sync makes the store list it anew (a reopen would fail
+      // on it: its seq recovery reads every file)
+      if (d == 2) Files.write(java.nio.file.Paths.get(dir, partitionFiles(dir).keys.min,
+        "part-corrupt.parquet"), "not a parquet file".getBytes)
+      for (i <- 1 to 5) { db.put(s"bad.d$i.t", s"day$d.$i".getBytes); now += 1000 }
+      db.sync()
+      now += DayMs
+    }
+    try {
+      val got = db.get(Query("bad.*.t", limit = 4)).map(new String(_)).toSeq
+      assert(got == Seq("day2.5", "day2.4", "day2.3", "day2.2"))
+      val e = intercept[Exception](db.get(Query("bad.*.t", limit = 12)))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => s"${t.getClass.getName}: ${t.getMessage}").toSeq
+      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException] &&
+        chain.exists(_.contains("part-corrupt.parquet")),
+        s"the failure names the unreadable file: ${chain.mkString(" <- ")}")
+    } finally db.close()
   }
 
   test("tombstone key cache follows every store change (in-memory model)") {
@@ -1337,6 +1376,15 @@ class UnitDbSpec extends SparkSpec {
     val walk = Files.walk(java.nio.file.Paths.get(root))
     try walk.iterator().asScala.map(_.getFileName.toString)
       .filter(_.endsWith(".inprogress")).toSeq
+    finally walk.close()
+  }
+
+  /** Directories under `root` (not `root` itself) that hold nothing. */
+  private def emptyDirs(root: String): Seq[String] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator().asScala.filter(p => p != base && Files.isDirectory(p) &&
+        Option(p.toFile.list).forall(_.isEmpty)).map(base.relativize(_).toString).toSeq
     finally walk.close()
   }
 
@@ -1525,5 +1573,30 @@ class UnitDbSpec extends SparkSpec {
     db.vacuum()
     assert(db.count() == payloads.size && model("nj.*.t") == payloads.values.toSet)
     db.close()
+
+    // a failed first sync leaves no directory behind: a reopen finds no
+    // store and no sidecar, so it runs no recovery job
+    val fresh = Files.createTempDirectory("graftdb_nojob").toString + "/store"
+    val db2 = UnitDb.open(spark, fresh, clock = () => now)
+    val baseline = emptyDirs(fresh)
+    def failedSyncLeavesNothing(k: Int, what: String): Unit = {
+      EngineProbe.failFileWrite(db2, k)
+      intercept[java.io.IOException](db2.sync())
+      assert(emptyDirs(fresh) == baseline, s"a failed $what write left empty directories")
+      val (reopened, openJobs) = jobsOf(UnitDb.open(spark, fresh, clock = () => now))
+      assert(openJobs == 0, s"a reopen after a failed $what write ran $openJobs jobs")
+      assert(reopened.count() == 0)
+      reopened.close()
+    }
+    for (d <- 0 until 3) db2.putEntry(Entry(s"nj.d$d.t", s"f$d".getBytes, tsMillis = Some(t0 + d * DayMs)))
+    failedSyncLeavesNothing(2, "message file")
+    val id = db2.putEntry(Entry("nj.d0.t", "gone".getBytes, tsMillis = Some(t0)))
+    db2.delete(graft.model.MessageId.decode(id)._3, "nj.d0.t")
+    failedSyncLeavesNothing(1, "tombstone file")
+    db2.sync()
+    val synced = UnitDb.open(spark, fresh, clock = () => now)
+    assert(synced.count() == 3)
+    synced.close()
+    db2.close()
   }
 }
