@@ -2,22 +2,26 @@ package graft.engine
 
 import java.sql.Timestamp
 import java.time.ZoneId
-import java.util.concurrent.{Callable, ExecutionException, Executors, ExecutorService}
+import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors,
+  ExecutorService, Future}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.JobConf
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{NotTombstoned, TombstoneSet, TopicPartsMatches}
@@ -48,7 +52,10 @@ private[engine] final class GetRule(contract: Long, pattern: Topic, nowMs: Long,
     * on [[UnitDb.getFrame]]'s Spark scan. The driver read's parquet readers
     * are built with no filters: a reader bakes its filters in when it is
     * built, so pushing the topic would cost a reader build, and a
-    * Hadoop-conf broadcast, per `get`. */
+    * Hadoop-conf broadcast, per `get`. The driver read instead prunes whole
+    * files on each branch's topic conjunct ([[DriverRead.topicTest]]): the
+    * `wc=0` equality against the file's topic hashes, the `wc=1` match
+    * against its distinct stored patterns ([[TopicIndex]]). */
   val branches: Seq[Expression] = {
     val live = Seq(
       EqualTo(c("contract"), Literal(contract)),
@@ -83,17 +90,23 @@ private[engine] object GetRule {
 private[engine] final case class StoreFile(part: InternalRow, path: Path,
     length: Long, modTime: Long) {
   def day: String = part.getUTF8String(DriverRead.PartDayIdx).toString
+  def wc: Int = part.getInt(DriverRead.PartWcIdx)
+  /** A data file is never rewritten in place, so a file by this key holds
+    * the same rows for as long as it is listed. */
+  def key: (Path, Long, Long) = (path, length, modTime)
 }
 
 /** A store generation as readers see it, built once per `(visEpoch,
   * dataPath)`: the relation with its `InMemoryFileIndex` listing (`raw`),
-  * its decrypted form (`store`), and the listed files for the driver read.
-  * Every DataFrame derived from `raw` reuses the listing. */
+  * its decrypted form (`store`), the listed files for the driver read and
+  * their [[TopicIndex]], which keeps `prior`'s entries for the files this
+  * listing still lists. Every DataFrame derived from `raw` reuses the
+  * listing. */
 private[engine] final class StoreHandle(val epoch: Long, val dataPath: String,
-    val raw: DataFrame, val store: DataFrame) {
+    val raw: DataFrame, val store: DataFrame, prior: Option[TopicIndex]) {
   /** The listed data files, or None when the listing is not partitioned by
     * `(contract, wc, day)` (the driver read then declines). */
-  lazy val files: Option[IndexedSeq[StoreFile]] =
+  val files: Option[IndexedSeq[StoreFile]] =
     raw.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
       .collect { case r: HadoopFsRelation
           if r.partitionSchema.map(f => (f.name, f.dataType)) ==
@@ -102,6 +115,101 @@ private[engine] final class StoreHandle(val epoch: Long, val dataPath: String,
           StoreFile(d.values.copy(), f.getPath, f.getLen, f.getModificationTime)))
           .toIndexedSeq
       }
+
+  val topics: TopicIndex = new TopicIndex(files.getOrElse(Nil), prior)
+}
+
+/** What one file's rows hold of the `topic` columns, read once per
+  * immutable file: enough to prove that no row of the file passes a
+  * branch's topic conjunct. */
+private[engine] sealed trait FileTopics
+
+/** A `wc=0` file: the sorted [[DriverRead.topicHash]]es of its distinct
+  * topics, 8 B per topic. */
+private[engine] final case class TopicHashes(sorted: Array[Long]) extends FileTopics
+
+/** A `wc=1` file: its distinct `(topic_parts, is_multi)` rows. Stored
+  * wildcards are few, so the rows themselves are kept. */
+private[engine] final case class StoredPatterns(rows: IndexedSeq[(ArrayData, Boolean)])
+    extends FileTopics
+
+/** A branch's topic conjunct as a test of a file's [[FileTopics]]: the
+  * static branch's `topic = <literal>` as the literal's hash, the match
+  * branch's own [[TopicPartsMatches]]. */
+private[engine] final class TopicTest(hash: Option[Long], matched: Option[TopicPartsMatches]) {
+  /** Whether the summary a `wc` bucket's file gets can refute this test:
+    * hashes for `wc=0`, stored patterns for `wc=1`. The match branch over
+    * a `wc=0` file has none, and that file is always read. */
+  def uses(wc: Int): Boolean = if (wc == 0) hash.isDefined else matched.isDefined
+
+  /** False only when `s` proves no row of its file passes the test. */
+  def mayHold(s: FileTopics): Boolean = s match {
+    case TopicHashes(h)    => hash.forall(x => java.util.Arrays.binarySearch(h, x) >= 0)
+    case StoredPatterns(r) => matched.forall(m => r.exists { case (p, multi) => m.matchStored(p, multi) })
+  }
+}
+
+/** The reference's per-topic summary (trie.go:78-81) for one store
+  * generation's data files, by `(path, length, modTime)`. The driver read
+  * opens a candidate file only when its [[FileTopics]] may hold the
+  * branch's topic.
+  *
+  * An entry is read on [[DriverRead.pool]] the first time a `get`
+  * considers its file, through the store's parquet reader over just the
+  * columns it keeps, and concurrent `get`s share that one read. A file
+  * whose summary read fails has no summary and is always opened, so a
+  * corrupt file still fails only the reads that need its day. A new
+  * [[StoreHandle]] takes over `carried`'s entries for the files it lists
+  * and no others. */
+private[engine] final class TopicIndex(listed: Seq[StoreFile], carried: Option[TopicIndex]) {
+  private val entries = new ConcurrentHashMap[(Path, Long, Long), Future[Option[FileTopics]]]()
+  for (c <- carried; f <- listed) {
+    val e = c.entries.get(f.key)
+    if (e != null) entries.put(f.key, e)
+  }
+
+  /** The files with an entry, read or in flight. */
+  def indexed: Set[Path] = entries.keySet.asScala.map(_._1).toSet
+
+  /** The `candidates` whose summary may hold their branch's topic, in
+    * order; `read` is the store's parquet reader for a column set. */
+  def mayHold(candidates: Seq[(StoreFile, BranchRead)],
+      read: StructType => PartitionedFile => Iterator[InternalRow]): Seq[(StoreFile, BranchRead)] = {
+    val summaries = candidates.map { case (f, b) =>
+      if (!b.topics.uses(f.wc)) None
+      else Some(entries.computeIfAbsent(f.key, _ =>
+        DriverRead.pool.submit((() => summarize(f, read)): Callable[Option[FileTopics]])))
+    }
+    candidates.iterator.zip(summaries).collect {
+      case (c @ (_, b), s) if s.forall(_.get.forall(b.topics.mayHold)) => c
+    }.toSeq
+  }
+
+  /** `f`'s summary, read with only the columns it keeps. */
+  private def summarize(f: StoreFile,
+      read: StructType => PartitionedFile => Iterator[InternalRow]): Option[FileTopics] =
+    try Some(
+      if (f.wc == 0) {
+        val hashes = mutable.ArrayBuilder.make[Long]
+        DriverRead.withRows(f, read(TopicIndex.TopicColumn))(_.foreach(r =>
+          hashes += DriverRead.topicHash(r.getUTF8String(0))))
+        TopicHashes(hashes.result().sorted.distinct)
+      } else {
+        val seen = mutable.HashSet[(Seq[String], Boolean)]()
+        DriverRead.withRows(f, read(TopicIndex.PartsColumns))(_.foreach(r =>
+          if (!r.isNullAt(0))
+            seen += ((r.getArray(0).toSeq[UTF8String](StringType).map(_.toString), r.getBoolean(1)))))
+        StoredPatterns(seen.toIndexedSeq.map { case (parts, multi) =>
+          (new GenericArrayData(parts.map(UTF8String.fromString).toArray[Any]), multi) })
+      })
+    catch { case NonFatal(_) => None }
+}
+
+private[engine] object TopicIndex {
+  /** The data columns a summary reads, for `wc=0` and for `wc=1` files;
+    * a reader's rows hold them first, in this order. */
+  val TopicColumn: StructType = StructType(Seq(UnitDb.storeSchema("topic")))
+  val PartsColumns: StructType = StructType(Seq("topic_parts", "is_multi").map(UnitDb.storeSchema(_)))
 }
 
 /** One [[GetRule.branches]] bucket as the driver read evaluates it: the
@@ -113,6 +221,7 @@ private[engine] final class BranchRead(branch: Expression,
     read: StructType => PartitionedFile => Iterator[InternalRow]) {
   import DriverRead._
   private val columns = requiredColumns(branch)
+  val topics: TopicTest = topicTest(branch)
   /** The reader's output: the columns read, then the partition columns. */
   private val layout = StructType(columns ++ PartSchema)
   val pred: BasePredicate = Predicate.createInterpreted(bind(branch, layout))
@@ -136,6 +245,7 @@ private[engine] object DriverRead {
   private val PartNames = Seq("contract", "wc", "day")
   val PartSchema: StructType = StructType(PartNames.map(UnitDb.storeSchema(_)))
   val PartDayIdx: Int = PartSchema.fieldIndex("day")
+  val PartWcIdx: Int = PartSchema.fieldIndex("wc")
   val DataSchema: StructType =
     StructType(UnitDb.storeSchema.filterNot(f => PartNames.contains(f.name)))
   /** Every column of a stored row, data columns then partition columns:
@@ -162,11 +272,20 @@ private[engine] object DriverRead {
 
   /** Spark's parquet reader for the store layout's `columns`: rows, not
     * columnar batches, and one Hadoop-conf broadcast for its lifetime. A
-    * store keeps one per column set. */
+    * store keeps one per column set.
+    *
+    * The conf is a `JobConf` over the session's Hadoop conf (every
+    * `spark.hadoop.*` setting included), so the `TaskAttemptContextImpl`
+    * the reader builds per file shares it instead of copying it, as
+    * [[DriverWriter]]'s contexts do. Sharing it across the pool threads is
+    * safe because nothing writes to it after the broadcast: the reader sets
+    * its keys before broadcasting, it sets a filter predicate only for
+    * pushed filters (a driver reader pushes none), and the row reader's
+    * `initialize` only reads the context's conf. */
   def reader(spark: SparkSession, columns: StructType): PartitionedFile => Iterator[InternalRow] =
     new ParquetFileFormat().buildReaderWithPartitionValues(spark, DataSchema,
       PartSchema, columns, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
+      new JobConf(spark.sessionState.newHadoopConf()))
 
   /** One file pool for every store in the JVM, one daemon thread per core:
     * driver reads, and [[DriverWriter]]'s writes. */
@@ -182,19 +301,39 @@ private[engine] object DriverRead {
       BoundReference(i, schema(i).dataType, schema(i).nullable)
   }
 
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(a, b) => conjuncts(a) ++ conjuncts(b)
+    case o         => Seq(o)
+  }
+
   /** The conjuncts of `branch` over partition columns only, as a test of a
     * file's partition values — Spark's own partition pruning, on the
     * driver. */
   def partitionTest(branch: Expression): BasePredicate = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(a, b) => conjuncts(a) ++ conjuncts(b)
-      case o         => Seq(o)
-    }
     val onParts = conjuncts(branch).filter(
       _.collect { case a: UnresolvedAttribute => a.name }.forall(PartNames.contains))
     Predicate.createInterpreted(
       bind(onParts.reduceOption(And).getOrElse(Literal.TrueLiteral), PartSchema))
   }
+
+  /** The topic conjuncts of `branch` as a test of a file's [[FileTopics]]:
+    * its `topic = <literal>` and its [[TopicPartsMatches]] over the stored
+    * columns, each if present. */
+  def topicTest(branch: Expression): TopicTest = {
+    def named(e: Expression, name: String) = e match {
+      case a: UnresolvedAttribute => a.name == name
+      case _                      => false
+    }
+    val cs = conjuncts(branch)
+    new TopicTest(
+      cs.collectFirst { case EqualTo(t, Literal(v: UTF8String, StringType)) if named(t, "topic") =>
+        topicHash(v) },
+      cs.collectFirst { case m @ TopicPartsMatches(p, mu, _)
+          if named(p, "topic_parts") && named(mu, "is_multi") => m })
+  }
+
+  /** The 64-bit hash a [[TopicHashes]] keeps per topic. */
+  def topicHash(topic: UTF8String): Long = XXH64.hashUTF8String(topic, 42L)
 
   /** An unsynced message as a [[Layout]] row, its partition values derived
     * as the store's writer derives them. Each field is converted only when
@@ -319,15 +458,25 @@ private[engine] object DriverRead {
       order: Ordering[InternalRow], stop: AtomicBoolean): TopK = {
     val local = new TopK(limit, order)
     val answer = b.answerView()
-    val it = b.reader(PartitionedFile(f.part, SparkPath.fromPath(f.path), 0L, f.length,
+    withRows(f, b.reader) { it =>
+      while (!stop.get && it.hasNext) {
+        val r = it.next()
+        if (b.pred.eval(r)) { answer.project(r); local.offer(answer, atRest = true) }
+      }
+    }
+    local
+  }
+
+  /** `use` over `f`'s rows read by `reader` (which reuses its row
+    * buffers); the file is closed when `use` returns or throws. */
+  def withRows[A](f: StoreFile, reader: PartitionedFile => Iterator[InternalRow])(
+      use: Iterator[InternalRow] => A): A = {
+    val it = reader(PartitionedFile(f.part, SparkPath.fromPath(f.path), 0L, f.length,
       Array.empty[String], f.modTime, f.length))
-    try while (!stop.get && it.hasNext) {
-      val r = it.next()
-      if (b.pred.eval(r)) { answer.project(r); local.offer(answer, atRest = true) }
-    } finally it match {
+    try use(it)
+    finally it match {
       case c: java.io.Closeable => c.close()
       case _                    => ()
     }
-    local
   }
 }

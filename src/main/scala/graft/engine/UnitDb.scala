@@ -199,8 +199,11 @@ final class UnitDb private (
       val row = readStoreRaw().agg(max("seq")).head()
       if (!row.isNullAt(0)) m = math.max(m, row.getLong(0))
     }
-    if (hasTombs) {
-      val row = readTombs().agg(max("seq")).head()
+    // the sidecar's data files by name: Spark warns "All paths were
+    // ignored" for a read of the `_`-named sidecar root itself
+    val tombFiles = sidecarContracts.flatMap(sidecarFiles).map(_._1)
+    if (tombFiles.nonEmpty) {
+      val row = spark.read.schema(tombKeySchema).parquet(tombFiles: _*).agg(max("seq")).head()
       if (!row.isNullAt(0)) m = math.max(m, row.getLong(0))
     }
     val hwmFile = Paths.get(path, "_seq_hwm", "hwm")
@@ -484,7 +487,14 @@ final class UnitDb private (
     *  - The handle's files are pruned on contract, on `wc` (a static
     *    pattern reads `wc=0` by topic equality and `wc=1` by the stored-parts
     *    match) and on the `?last=` cutoff day.
-    *  - Every candidate file is queued at once on one shared pool, newest
+    *  - Then on topic, by the handle's [[TopicIndex]], the way the
+    *    reference's topic summary answers existence before any window is
+    *    read (trie.go:78-81): a `wc=0` file is opened for a static topic
+    *    only when its distinct topics' hashes hold the topic's, and a
+    *    `wc=1` file only when one of its distinct stored wildcards matches
+    *    the pattern. A wildcard pattern reads every `wc=0` file. Each
+    *    file's entry is read once, the first time a `get` considers it.
+    *  - Every remaining file is queued at once on one shared pool, newest
     *    day first, and read by Spark's parquet row reader, one per store
     *    and column set: each bucket reads only the columns it tests plus
     *    `ts`, `seq`, `encrypted` and `payload`. Unsynced rows pass the
@@ -685,10 +695,11 @@ final class UnitDb private (
     }
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
     if (candidates.iterator.map(_._1.length + openCost).sum > cap) return None
+    val opened = view.store.map(_.topics.mayHold(candidates, parquetReader)).getOrElse(candidates)
     val zone = sessionZone
     val kept = DriverRead.keptPending(
       view.unsynced.iterator.map(DriverRead.pendingRow(_, zone)), reads)
-    val hits = DriverRead.topK(candidates, kept, rule.limit, driverFilesRead, driverFilesMerged)
+    val hits = DriverRead.topK(opened, kept, rule.limit, driverFilesRead, driverFilesMerged)
     Some(hits.map { h =>
       val p = if (h.row.isNullAt(DriverRead.PayloadIdx)) null
               else h.row.getBinary(DriverRead.PayloadIdx)
@@ -711,6 +722,11 @@ final class UnitDb private (
     * (the stop-rule pin). */
   private[engine] val driverFilesRead = new AtomicLong(0L)
   private[engine] val driverFilesMerged = new AtomicLong(0L)
+
+  /** The data files the latest store handle's topic index holds an entry
+    * for. */
+  private[engine] def indexedFiles: Set[org.apache.hadoop.fs.Path] =
+    Option(handle).map(_.topics.indexed).getOrElse(Set.empty)
 
   /** Live-entry count over every contract (reference db.go:475-478): not
     * expired, not tombstoned. */
@@ -848,7 +864,7 @@ final class UnitDb private (
       if (h != null && h.epoch == e && h.dataPath == dp) Some(h)
       else {
         val raw = readStoreRaw(dp)
-        val fresh = new StoreHandle(e, dp, raw, decrypt(raw))
+        val fresh = new StoreHandle(e, dp, raw, decrypt(raw), Option(h).map(_.topics))
         handle = fresh
         Some(fresh)
       }
@@ -868,6 +884,11 @@ final class UnitDb private (
   }
 
   private val sidecarKeys = new ConcurrentHashMap[Long, SidecarKeys]()
+
+  /** The contracts with a `_tombstones/contract=<c>` directory. */
+  private def sidecarContracts: Seq[Long] =
+    listDir(Paths.get(tombsPath)).map(_.getName)
+      .filter(_.startsWith("contract=")).map(_.stripPrefix("contract=").toLong)
 
   /** Data files under `_tombstones/contract=<c>`, sorted: the cache key. */
   private def sidecarFiles(contract: Long): Seq[(String, Long)] =
@@ -915,9 +936,7 @@ final class UnitDb private (
     val unsynced = synchronized {
       (flushingTombs ++ pendingTombs).filter(t => contract.forall(_ == t.contract)).toSeq
     }
-    val contracts = contract.map(Seq(_)).getOrElse(
-      listDir(Paths.get(tombsPath)).map(_.getName)
-        .filter(_.startsWith("contract=")).map(_.stripPrefix("contract=").toLong))
+    val contracts = contract.map(Seq(_)).getOrElse(sidecarContracts)
     val sidecar = contracts.map(sidecarFor)
     val u = TombstoneKeys(unsynced.iterator.map(t => (t.seq, t.topic)))
     new TombstoneSet(sidecar.flatMap(_.keys), u, sidecar.map(_.size.toLong).sum + u.size)
@@ -1314,19 +1333,8 @@ final class UnitDb private (
 
   private def tombsPath: String = path + "/_tombstones"
 
-  private def readTombs(): DataFrame =
-    spark.read.schema(tombSchema).parquet(tombsPath)
-
   private def hasStore: Boolean = {
     val f = Paths.get(dataPath)
-    Files.exists(f) && Files.isDirectory(f) &&
-      f.toFile.listFiles != null && f.toFile.listFiles.exists { d =>
-        d.getName.startsWith("contract=") || d.getName.endsWith(".parquet")
-      }
-  }
-
-  private def hasTombs: Boolean = {
-    val f = Paths.get(tombsPath)
     Files.exists(f) && Files.isDirectory(f) &&
       f.toFile.listFiles != null && f.toFile.listFiles.exists { d =>
         d.getName.startsWith("contract=") || d.getName.endsWith(".parquet")

@@ -481,7 +481,6 @@ final class UtpServer(db: UnitDb, port: Int = 0, syncEveryPuts: Int = 256,
               val relay = C.decodeRelay(body)
               relay.requests.foreach { req =>
                 if (req.last != null && req.last.nonEmpty) {
-                  db.sync() // serve read-your-writes across connections
                   val sep = if (req.topic.contains('?')) "&" else "?"
                   // per-REQUEST authorization, as on the PUBLISH path:
                   // an unauthorized topic skips that one request (the

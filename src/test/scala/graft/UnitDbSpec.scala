@@ -1202,6 +1202,124 @@ class UnitDbSpec extends SparkSpec {
     } finally db.close()
   }
 
+  /** An independent statement of the bidirectional match: `*` is one
+    * level, a trailing `...` any number of remaining levels. */
+  private def modelMatch(topic: String, pattern: String): Boolean = {
+    def parts(t: String): (Seq[String], Boolean) =
+      if (t.endsWith("...")) (t.dropRight(3).split('.').toSeq.filter(_.nonEmpty), true)
+      else (t.split('.').toSeq, false)
+    val (a, am) = parts(topic); val (b, bm) = parts(pattern)
+    a.zip(b).forall { case (x, y) => x == y || x == "*" || y == "*" } &&
+      (a.length == b.length || (a.length < b.length && am) || (b.length < a.length && bm))
+  }
+
+  /** Files opened by the driver read of `q`, and its payloads. */
+  private def opened(db: UnitDb, q: Query): (Long, Seq[String]) = {
+    val before = EngineProbe.driverFilesRead(db)
+    val got = db.get(q, Long.MaxValue).map(new String(_)).toSeq
+    (EngineProbe.driverFilesRead(db) - before, got)
+  }
+
+  test("topic index: a static get opens only the files that can hold its topic") {
+    val (db, _, tick) = freshDb()
+    // four syncs on one day: four `wc=0` files, each with its own topics,
+    // and two `wc=1` files, one stored wildcard each
+    for (s <- 0 until 4) {
+      db.put(s"idx.t$s.a", s"t$s.a".getBytes); tick(1000)
+      db.put(s"idx.t$s.b", s"t$s.b".getBytes); tick(1000)
+      if (s == 1) { db.put("idx.*.a", "wild.a".getBytes); tick(1000) }
+      if (s == 2) { db.put("far.*", "far".getBytes); tick(1000) }
+      db.sync()
+    }
+    def same(q: Query, files: Long, want: Seq[String]): Unit = {
+      // twice: the first read builds the entries, the second only uses them
+      for (_ <- 1 to 2) assert(opened(db, q) == (files, want), q)
+      assert(db.get(q, 0L).map(new String(_)).toSeq == want, s"getFrame $q")
+    }
+    // one of the four `wc=0` files holds the topic
+    same(Query("idx.t0.b"), 1, Seq("t0.b"))
+    // the stored wildcard `idx.*.a` answers the static query from its
+    // `wc=1` file; the `far.*` file is not opened
+    same(Query("idx.t2.a"), 2, Seq("t2.a", "wild.a"))
+    // no `wc=0` file holds `far.x`; only the `far.*` file can answer it
+    same(Query("far.x"), 1, Seq("far"))
+    // a wildcard reads every `wc=0` file, and of the `wc=1` files the
+    // one whose stored wildcard it matches
+    same(Query("idx.*.a"), 5, Seq("t3.a", "t2.a", "wild.a", "t1.a", "t0.a"))
+    same(Query("nowhere.*"), 4, Nil)
+    db.close()
+  }
+
+  test("topic index: compact and vacuum leave entries only for listed files") {
+    val (db, _, tick) = freshDb()
+    for (s <- 0 until 3) {
+      db.put(s"ix.t$s", s"v$s".getBytes); tick(1000)
+      db.put("ix.*", s"w$s".getBytes); tick(1000)
+      db.sync()
+    }
+    val dir = db.path
+    def listed = partitionFiles(dir).values.flatten.map(_.getAbsolutePath).toSet
+    def check(step: String, files: Long): Unit = {
+      assert(opened(db, Query("ix.t1")) == (files, Seq("w2", "w1", "v1", "w0")), step)
+      val indexed = EngineProbe.indexedFiles(db)
+      assert(indexed.nonEmpty && indexed.subsetOf(listed), s"$step: $indexed not in $listed")
+    }
+    check("three syncs", 4) // one `wc=0` file and all three `wc=1` files
+    val before = EngineProbe.indexedFiles(db)
+    assert(db.compact(minFiles = 2) > 0)
+    check("compacted", 2)
+    assert(EngineProbe.indexedFiles(db).intersect(before).isEmpty, "compact rewrote every file")
+    db.delete(db.scanFrame(Query("ix.t1")).collect()
+      .find(_.getAs[String]("topic") == "ix.t1").get.getAs[Long]("seq"), "ix.t1")
+    db.vacuum()
+    // the one `wc=0` file left no longer holds the deleted topic
+    assert(opened(db, Query("ix.t1")) == (1, Seq("w2", "w1", "w0")), "vacuumed")
+    val indexed = EngineProbe.indexedFiles(db)
+    assert(indexed.size == 2 && indexed == listed, s"vacuumed: $indexed, listed $listed")
+    db.close()
+  }
+
+  test("concurrent gets share one reader conf and one topic index, every answer the model's") {
+    val dir = Files.createTempDirectory("graftdb_conc").toString + "/store"
+    val DayMs = 86400000L
+    var now = 1700000000000L
+    val db = UnitDb.open(spark, dir, clock = () => now)
+    val model = scala.collection.mutable.ArrayBuffer[(String, Long, String)]()
+    var k = 0
+    // three days, two syncs each; a stored wildcard now and then
+    for (d <- 0 until 3; _ <- 0 until 2) {
+      for (i <- 0 until 40) {
+        k += 1
+        val t = if (k % 17 == 0) s"cc.s${i % 3}.*" else s"cc.s${i % 3}.d${(i + k) % 5}"
+        db.put(t, s"p$k".getBytes); model += ((t, now, s"p$k")); now += 1000
+      }
+      db.sync()
+      if (d < 2) now += DayMs / 2
+    }
+    // static and wildcard patterns: both column sets, both buckets
+    val queries = Seq(Query("cc.s1.d2"), Query("cc.s0.d4", limit = 5), Query("cc.s2.*"),
+      Query("cc.*.d3", limit = 20), Query("cc..."), Query("cc.s1.d0", limit = 3))
+    def want(q: Query): Seq[String] = {
+      val p = q.topic
+      model.filter(m => modelMatch(m._1, p)).sortBy(-_._2).take(if (q.limit > 0) q.limit else 1000)
+        .map(_._3).toSeq
+    }
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = (0 until 4).map { t =>
+      new Thread(() => for (i <- 0 until 30) {
+        val q = queries((t + i) % queries.size)
+        try {
+          val got = db.get(q, Long.MaxValue).map(new String(_)).toSeq
+          if (got != want(q)) errors.add(s"$q: $got")
+        } catch { case e: Throwable => errors.add(s"$q: $e") }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errors.isEmpty, errors.toArray.take(3).mkString("\n"))
+    assert(EngineProbe.driverFilesRead(db) > 0)
+    db.close()
+  }
+
   test("tombstone key cache follows every store change (in-memory model)") {
     // every check answers each query twice, with get forced onto the
     // driver read (cap ∞) and onto getFrame (cap 0)
@@ -1237,16 +1355,7 @@ class UnitDbSpec extends SparkSpec {
         ttl.map(now + _), p)
       model += m; now += 1000; m
     }
-    // an independent statement of the bidirectional match: `*` is one
-    // level, a trailing `...` any number of remaining levels
-    def parts(t: String): (Seq[String], Boolean) =
-      if (t.endsWith("...")) (t.dropRight(3).split('.').toSeq.filter(_.nonEmpty), true)
-      else (t.split('.').toSeq, false)
-    def matches(m: M, pattern: String) = {
-      val (a, am) = parts(m.topic); val (b, bm) = parts(pattern)
-      a.zip(b).forall { case (x, y) => x == y || x == "*" || y == "*" } &&
-        (a.length == b.length || (a.length < b.length && am) || (b.length < a.length && bm))
-    }
+    def matches(m: M, pattern: String) = modelMatch(m.topic, pattern)
     val queries = Seq("mdl.a" -> 0, "mdl.b" -> 0, "mdl.*" -> 0, "mdl.*" -> 3,
       "mdl.*" -> 4, "mdl.a?last=2" -> 0, "mdl...?last=30h" -> 0)
     def check(step: String): Unit = {

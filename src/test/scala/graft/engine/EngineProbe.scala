@@ -11,6 +11,10 @@ object EngineProbe {
   /** Files the store's driver reads have merged into their answers so far. */
   def driverFilesMerged(db: UnitDb): Long = db.driverFilesMerged.get
 
+  /** The absolute paths of the data files the store's topic index holds
+    * an entry for. */
+  def indexedFiles(db: UnitDb): Set[String] = db.indexedFiles.map(_.toUri.getPath)
+
   /** Make the `k`-th file write of `db`'s next sync fail. */
   def failFileWrite(db: UnitDb, k: Int): Unit = db.failFileWrite.set(k)
 

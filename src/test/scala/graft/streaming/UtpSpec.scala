@@ -3,6 +3,8 @@ package graft.streaming
 import java.net.Socket
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.{SparkSpec, Tables}
 import graft.engine.UnitDb
 import graft.model.Query
@@ -406,6 +408,32 @@ class UtpSpec extends SparkSpec {
       assert(relayed.map(new String(_)) == Seq("hello"))
       pubCli.ping()
       pubCli.close(); subCli.close()
+    } finally {
+      srv.close()
+      db.close()
+    }
+  }
+
+  test("server: a RELAY returns another connection's acked, unsynced publish") {
+    val dir = Files.createTempDirectory("graft_utp_ryw").toString + "/store"
+    val db = UnitDb.open(spark, dir)
+    val srv = new UtpServer(db, port = 0)
+    def dataFiles = {
+      val walk = Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+      finally walk.close()
+    }
+    try {
+      val a = new UtpClient("127.0.0.1", srv.actualPort)
+      val b = new UtpClient("127.0.0.1", srv.actualPort)
+      assert(a.connect("writer") > 0 && b.connect("reader") > 0)
+      a.publish(("ryw.a.x", "acked".getBytes))
+      // one publish is far below the server's sync cadence: the message
+      // is in the store's put buffer, which `get` reads, and no RELAY
+      // has to sync it to see it
+      assert(b.relay("ryw.a.x", "1h").map(new String(_)) == Seq("acked"))
+      assert(dataFiles == 0, "the RELAY synced the store")
+      a.close(); b.close()
     } finally {
       srv.close()
       db.close()
