@@ -27,15 +27,19 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{NotTombstoned, TombstoneSet, TopicPartsMatches}
 import graft.model.{Message, Topic}
 
-/** What a `get` keeps and in what order (reference db.go:222-319), stated
-  * once as Catalyst expressions over the store's named columns.
-  * [[UnitDb.getFrame]] plans them as Spark filters; the driver read binds
-  * the very same trees to its row layout ([[DriverRead.bind]]) and
-  * evaluates them per row, so the two paths cannot drift apart.
+/** What a pattern read keeps and in what order (reference db.go:222-319),
+  * stated once as Catalyst expressions over the store's named columns.
+  * [[UnitDb.getFrame]], the batch scans and [[UnitDb.tail]]'s stream plan
+  * them as Spark filters; the driver read binds the very same trees to its
+  * row layout ([[DriverRead.bind]]) and evaluates them per row, so no two
+  * paths can drift apart.
   *
+  * @param now    the instant expiry is judged at: the read's captured
+  *               clock as a literal, or `current_timestamp()` for a
+  *               stream, which binds it per micro-batch
   * @param cutoff the `?last=<duration>` cutoff: epoch ms and its day in
   *               the zone that derived the stored `day` values */
-private[engine] final class GetRule(contract: Long, pattern: Topic, nowMs: Long,
+private[engine] final class GetRule(contract: Long, pattern: Topic, now: Expression,
     cutoff: Option[(Long, String)], val limit: Int, tombs: TombstoneSet) {
   import GetRule.c
 
@@ -45,8 +49,6 @@ private[engine] final class GetRule(contract: Long, pattern: Topic, nowMs: Long,
     * still answer static queries (SURVEY §2.3 rule 1); a wildcard pattern
     * reads both buckets by the match. The match runs over the stored
     * `topic_parts`/`is_multi` columns, parsed once at write.
-    * `not_tombstoned` comes last, so it probes only rows the cheaper
-    * conjuncts kept.
     *
     * The topic equality is pushed down, to row-group stats and blooms, only
     * on [[UnitDb.getFrame]]'s Spark scan. The driver read's parquet readers
@@ -57,26 +59,29 @@ private[engine] final class GetRule(contract: Long, pattern: Topic, nowMs: Long,
     * `wc=0` equality against the file's topic hashes, the `wc=1` match
     * against its distinct stored patterns ([[TopicIndex]]). */
   val branches: Seq[Expression] = {
-    val live = Seq(
-      EqualTo(c("contract"), Literal(contract)),
-      Or(IsNull(c("expires_at")),
-        GreaterThan(c("expires_at"), Literal(new Timestamp(nowMs))))) ++
-      cutoff.toSeq.flatMap { case (ms, day) => Seq(
+    val scope = EqualTo(c("contract"), Literal(contract)) +:
+      GetRule.live(now, tombs, cutoff.toSeq.flatMap { case (ms, day) => Seq(
         GreaterThanOrEqual(c("ts"), Literal(new Timestamp(ms))),
-        GreaterThanOrEqual(c("day"), Literal(day))) } :+
-      NotTombstoned(c("seq"), c("topic"), tombs)
+        GreaterThanOrEqual(c("day"), Literal(day))) })
     val matched = TopicPartsMatches(c("topic_parts"), c("is_multi"), pattern.key)
     val heads =
       if (pattern.isWildcard) Seq(Seq(matched))
       else Seq(
         Seq(EqualTo(c("wc"), Literal(0)), EqualTo(c("topic"), Literal(pattern.key))),
         Seq(EqualTo(c("wc"), Literal(1)), matched))
-    heads.map(h => (h ++ live).reduceLeft(And))
+    heads.map(h => (h ++ scope).reduceLeft(And))
   }
 }
 
 private[engine] object GetRule {
   private def c(name: String): Expression = UnresolvedAttribute.quoted(name)
+
+  /** What keeps a stored row alive at `now`, as conjuncts: not expired,
+    * within the caller's `bounds`, and not tombstoned. `not_tombstoned`
+    * comes last, so it probes only rows the cheaper conjuncts kept. */
+  def live(now: Expression, tombs: TombstoneSet, bounds: Seq[Expression] = Nil): Seq[Expression] =
+    (Or(IsNull(c("expires_at")), GreaterThan(c("expires_at"), now)) +: bounds) :+
+      NotTombstoned(c("seq"), c("topic"), tombs)
 
   /** The result order of every newest-first read: `(ts desc, seq desc)`. */
   val newestFirst: Seq[SortOrder] =
@@ -421,9 +426,9 @@ private[engine] object DriverRead {
     * as the `?last=` day pruning (ADVICE r1). The files not merged by then
     * are cancelled: the queued ones never open, the running ones stop at
     * their next row, and their results are never awaited, so an older
-    * file's failure fails only a read that needs its day. How many files may be queued is bounded by the caller's byte
-    * gate. `opened` counts the files read, `merged` those merged into the
-    * answer. */
+    * file's failure fails only a read that needs its day. How many files
+    * may be queued is bounded by the caller's byte gate. `opened` counts
+    * the files read, `merged` those merged into the answer. */
   def topK(files: Seq[(StoreFile, BranchRead)], kept: Seq[(String, InternalRow)],
       limit: Int, opened: AtomicLong, merged: AtomicLong): Seq[Hit] = {
     val order = new InterpretedOrdering(

@@ -10,7 +10,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpressionImplUtils, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{And, CurrentTimestamp, Expression,
+  ExpressionImplUtils, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions._
@@ -18,7 +19,7 @@ import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{ChaChaMacUtil, NotTombstoned, TombstoneKeys, TombstoneSet, TopicMatches, TopicPartsMatches}
+import graft.functions.{ChaChaMacUtil, TombstoneKeys, TombstoneSet, TopicMatches}
 import graft.model.{Entry, Message, MessageId, Query, Tombstone, Topic, TopicKey, Varz}
 import graft.operators.DriverGates
 
@@ -91,7 +92,6 @@ final class UnitDb private (
     autoFlushRows: Int,
     encryptionKey: Option[Array[Byte]],
     commitProtocol: StoreCommitProtocol,
-    writeSaltBuckets: Int,
     val secureMode: Boolean,
     cipher: PayloadCipher) {
 
@@ -325,17 +325,10 @@ final class UnitDb private (
     // effect (sync flushes state) — authorize precedes everything else,
     // as on every other write face
     val q = q0.copy(topic = authorize(q0.topic, TopicKey.AllowWrite, q0.contract))
-    // `?last=<duration>` scopes the sweep in time; a COUNT has no stable
-    // meaning as a delete scope (top-N depends on read order) — reject
-    // loudly, as `tail` does for streams
-    Topic.parse(q.topic).last.foreach {
-      case Left(_) => throw new IllegalArgumentException(
-        s"?last=<count> is not a deletable scope; use a duration: ${q.topic}")
-      case _ => ()
-    }
     sync() // pending puts must be visible to the scan (and deletable)
-    val live = matched(readView(q))
-    nGets.decrementAndGet() // readView counted a read; a sweep is not one
+    // `?last=<duration>` scopes the sweep in time; a COUNT has no stable
+    // meaning as a delete scope (top-N depends on read order)
+    val live = matched(readView(q, noCount = Some("a deletable scope; use a duration")))
     val obs = org.apache.spark.sql.Observation()
     live
       .select(col("seq"), col("contract"), col("topic"),
@@ -397,8 +390,7 @@ final class UnitDb private (
     * sidecar. The rows already live on the driver, so they are written
     * there, with no Spark job: Spark's own parquet writer
     * ([[DriverWriter]], the writer options of [[configureWriter]]) writes
-    * one file per `(contract, wc, day)` (per salt bucket too, see
-    * [[UnitDb.open]]'s `writeSaltBuckets`), rows sorted by `(topic, ts)`,
+    * one file per `(contract, wc, day)`, rows sorted by `(topic, ts)`,
     * payloads sealed by the functions [[encrypt]] runs, files in parallel
     * on the driver pool. A sync's files become visible together, after all
     * of them closed; on a failure none does, and the rows stay buffered for
@@ -441,10 +433,9 @@ final class UnitDb private (
   private lazy val storeWriter = new DriverWriter(spark, StoreWriteOptions, MessageFileSchema)
   private lazy val tombWriter = new DriverWriter(spark, TombWriteOptions, TombFileSchema)
 
-  /** A sync's messages as files: one per `(contract, wc, day)`, and per
-    * `pmod(seq, writeSaltBuckets)` on a salted store, each file's rows in
-    * at-rest form sorted by `(topic, ts)` in Spark's (UTF-8 byte) order.
-    * `day` derives as [[DriverRead.pendingRow]] derives it. */
+  /** A sync's messages as files: one per `(contract, wc, day)`, each
+    * file's rows in at-rest form sorted by `(topic, ts)` in Spark's (UTF-8
+    * byte) order. `day` derives as [[DriverRead.pendingRow]] derives it. */
   private def messageFiles(msgs: Seq[Message]): Seq[(String, () => Iterator[InternalRow])] = {
     val zone = sessionZone
     val seal: Array[Byte] => Array[Byte] = encryptionKey match {
@@ -455,9 +446,8 @@ final class UnitDb private (
         case ChaCha20Poly1305 => p => ChaChaMacUtil.seal(k, p)
       }
     }
-    msgs.groupBy(m => (m.contract, m.is_wildcard, dayOf(m.ts.getTime, zone),
-        if (writeSaltBuckets > 1) java.lang.Math.floorMod(m.seq, writeSaltBuckets.toLong) else 0L))
-      .toSeq.map { case ((c, wild, day, _), group) =>
+    msgs.groupBy(m => (m.contract, m.is_wildcard, dayOf(m.ts.getTime, zone)))
+      .toSeq.map { case ((c, wild, day), group) =>
         (s"contract=$c/wc=${if (wild) 1 else 0}/day=$day", () => {
           val rows = group.iterator.map(m => atRestRow(m, seal)).toArray
           java.util.Arrays.sort(rows, TopicTsOrder)
@@ -513,9 +503,9 @@ final class UnitDb private (
 
   /** [[get]] with its driver-read byte cap: 0 forces `getFrame`, ∞ the
     * driver read. */
-  private[graft] def get(q0: Query, driverReadCap: Long): Array[Array[Byte]] =
+  private[graft] def get(q: Query, driverReadCap: Long): Array[Array[Byte]] =
     timed(getMeter) {
-      val view = readView(q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract)))
+      val view = readFace(q)
       val rows = driverRead(view, driverReadCap).getOrElse(
         framed(view).select("payload").collect().map(_.getAs[Array[Byte]](0)))
       nEntriesRead.addAndGet(rows.length.toLong)
@@ -526,14 +516,10 @@ final class UnitDb private (
   /** Same as [[get]] but as a DataFrame of (seq, topic, ts, payload) —
     * composable with further Spark ops. Newest-first, clamped at the
     * reference's Default/MaxLimit (options.go:169-174). */
-  def getFrame(q: Query): DataFrame =
-    framed(readView(q.copy(topic = authorize(q.topic, TopicKey.AllowRead, q.contract))))
+  def getFrame(q: Query): DataFrame = framed(readFace(q))
 
   private def framed(view: ReadView): DataFrame =
-    matched(view)
-      .orderBy(GetRule.newestFirstCols: _*)
-      .limit(view.rule.limit)
-      .select("seq", "topic", "ts", "payload")
+    newest(matched(view), view.rule.limit).select("seq", "topic", "ts", "payload")
 
   /** The FULL matching live set as a DataFrame, with no result-count clamp
     * and no imposed ordering — the batch-pipeline read path (relay
@@ -543,17 +529,8 @@ final class UnitDb private (
     * not be silently truncated at 100k rows (r3 VERDICT #4). A `?last=N`
     * count in the pattern is still honored — that is an explicit request
     * — via the newest-first top-N. */
-  def scanFrame(q0: Query): DataFrame = {
-    val q = q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract))
-    val live = matched(readView(q))
-    Topic.parse(q.topic).last match {
-      case Some(Left(count)) =>
-        live.orderBy(GetRule.newestFirstCols: _*).limit(count)
-          .select("seq", "topic", "ts", "payload")
-      case _ =>
-        live.select("seq", "topic", "ts", "payload")
-    }
-  }
+  def scanFrame(q: Query): DataFrame =
+    scanned(readFace(q)).select("seq", "topic", "ts", "payload")
 
   /** Typed face of the batch scan (SURVEY §1.4: `Dataset[Message]` as the
     * type-safe core API next to the DataFrame faces): identical match /
@@ -563,19 +540,23 @@ final class UnitDb private (
     * so downstream pipelines compose with lambdas and pattern matches
     * under compile-time checking while staying whole-stage-codegen'd
     * (product encoder, no Kryo). */
-  def scanTyped(q0: Query): org.apache.spark.sql.Dataset[Message] = {
-    val q = q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract))
-    val live = matched(readView(q))
+  def scanTyped(q: Query): org.apache.spark.sql.Dataset[Message] = {
     val fields = Seq("seq", "contract", "topic", "topic_parts",
       "is_wildcard", "is_multi", "depth", "ts", "expires_at", "encrypted",
       "payload")
-    val base = Topic.parse(q.topic).last match {
-      case Some(Left(count)) =>
-        live.orderBy(GetRule.newestFirstCols: _*).limit(count)
-      case _ => live
-    }
-    base.select(fields.map(col): _*).as(Encoders.product[Message])
+    scanned(readFace(q)).select(fields.map(col): _*).as(Encoders.product[Message])
   }
+
+  /** What a batch scan keeps: every match, or the newest-first top-N of a
+    * `?last=<count>`. */
+  private def scanned(view: ReadView): DataFrame = {
+    val live = matched(view)
+    view.count.fold(live)(newest(live, _))
+  }
+
+  /** The first `n` rows of `df` in [[GetRule.newestFirst]] order. */
+  private def newest(df: DataFrame, n: Int): DataFrame =
+    df.orderBy(GetRule.newestFirstCols: _*).limit(n)
 
   /** The store as a STREAMING SOURCE — the continuous face of S3 RELAY
     * (reference hdl_conn.go:349-381 replays history, then follows live):
@@ -585,76 +566,68 @@ final class UnitDb private (
     * ANOTHER PROCESS with no coupling to its ingest stream —
     * change-data-capture over the store layout itself.
     *
-    * Read-path parity: the same pattern match, contract scope, `?last=`
-    * duration cutoff, and at-rest decrypt as [[scanFrame]]. Liveness
-    * necessarily differs in two ways: TTL expiry is evaluated at each
-    * micro-batch's processing instant (`current_timestamp`), and the
-    * `not_tombstoned` filter binds the tombstone keys at PLAN time (the
-    * stream keeps the broadcast it was planned with) — deletes issued
-    * after the stream starts do not retract rows already emitted (an
-    * append-only stream cannot un-emit; the reference's live SUBSCRIBE
-    * has the same semantics — a delete never recalls a delivered
-    * message). A `?last=N` COUNT is rejected: global top-N has no
-    * meaning over an unbounded stream.
+    * Read-path parity: the stream is filtered by the same [[GetRule]]
+    * branches as [[scanFrame]] (pattern match, contract scope, `?last=`
+    * duration cutoff, expiry, `not_tombstoned`), after the same at-rest
+    * decrypt. Liveness necessarily differs in two ways: TTL expiry is
+    * evaluated at each micro-batch's processing instant
+    * (`current_timestamp`), and the `not_tombstoned` filter binds the
+    * tombstone keys at PLAN time (the stream keeps the broadcast it was
+    * planned with) — deletes issued after the stream starts do not retract
+    * rows already emitted (an append-only stream cannot un-emit; the
+    * reference's live SUBSCRIBE has the same semantics — a delete never
+    * recalls a delivered message). A `?last=N` COUNT is rejected: global
+    * top-N has no meaning over an unbounded stream.
     *
     * Scale: file-source discovery cost is proportional to the directory
     * listing — pair a long-running tail with [[compact]]'s bounded file
     * counts (see `StreamIngest.startWithMaintenance`); `maxFilesPerTrigger`
     * bounds each micro-batch for backfill-sized stores. Partition-dir
     * pruning on `(contract, wc, day)` applies as in the batch scan. */
-  def tail(q0: Query, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    ensureOpen()
-    nGets.incrementAndGet()
-    val q = q0.copy(topic = authorize(q0.topic, TopicKey.AllowRead, q0.contract))
-    val t = Topic.parse(q.topic)
-    val cutoffMs = t.last match {
-      case Some(Right(durMs)) => Some(clock() - durMs)
-      case Some(Left(_)) =>
-        throw new IllegalArgumentException(
-          s"?last=<count> is not streamable (no global top-N over an unbounded stream): ${q.topic}")
-      case None => None
-    }
+  def tail(q: Query, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val view = readFace(q, streaming = true,
+      noCount = Some("streamable (no global top-N over an unbounded stream)"))
     var reader = spark.readStream.schema(storeSchema)
     maxFilesPerTrigger.foreach(n =>
       reader = reader.option("maxFilesPerTrigger", n.toString))
     val src = decrypt(reader.option("basePath", dataPath).parquet(dataPath))
-    var pred: Column = col("contract") === q.contract &&
-      (col("expires_at").isNull || col("expires_at") > current_timestamp())
-    cutoffMs.foreach { c =>
-      pred = pred && col("ts") >= lit(new Timestamp(c)) &&
-        col("day") >= lit(dayOf(c, sessionZone))
-    }
-    pred = pred && seqlockRead(notTombstoned(Some(q.contract)))
-    val matched =
-      if (!t.isWildcard)
-        src.filter(col("wc") === 0 && col("topic") === t.key && pred)
-          .unionByName(
-            src.filter(col("wc") === 1 &&
-              TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred))
-      else
-        src.filter(
-          TopicPartsMatches(col("topic_parts"), col("is_multi"), t.key) && pred)
-    matched.select("seq", "topic", "ts", "payload")
+    kept(src, view.rule).select("seq", "topic", "ts", "payload")
+  }
+
+  /** A read face's view of `q`: authorized for reading, counted as one
+    * get. */
+  private def readFace(q: Query, streaming: Boolean = false,
+      noCount: Option[String] = None): ReadView = {
+    val view = readView(q.copy(topic = authorize(q.topic, TopicKey.AllowRead, q.contract)),
+      streaming, noCount)
+    nGets.incrementAndGet()
+    view
   }
 
   /** Shared front of every pattern read ([[get]], [[getFrame]],
-    * [[scanFrame]], [[scanTyped]], [[deleteMatching]]): the query's rule,
-    * with the result limit clamped for the interactive path, over one
-    * consistent capture. */
-  private def readView(q: Query): ReadView = {
+    * [[scanFrame]], [[scanTyped]], [[tail]], [[deleteMatching]]): the
+    * query's rule, with the result limit clamped for the interactive path,
+    * and its `?last=<count>` if it gave one, over one consistent capture.
+    * A `streaming` view judges expiry at each micro-batch's
+    * `current_timestamp()` and captures only the tombstone keys: the stream
+    * lists the store's files itself. A read that cannot honor a count
+    * names why in `noCount`, and is refused one. */
+  private def readView(q: Query, streaming: Boolean = false,
+      noCount: Option[String] = None): ReadView = {
     ensureOpen()
-    nGets.incrementAndGet()
     val t = Topic.parse(q.topic)
     val nowMs = clock()
 
     // ?last= : duration ⇒ time cutoff; integer ⇒ result-count limit
     // (reference query.go:72-88, message/topic.go:119-133)
-    val (cutoffMs, lastCount) = t.last match {
+    val (cutoffMs, count) = t.last match {
       case Some(Right(durMs)) => (Some(nowMs - durMs), None)
-      case Some(Left(count))  => (None, Some(count))
+      case Some(Left(n))      => (None, Some(n))
       case None               => (None, None)
     }
-    val limit = lastCount
+    for (why <- noCount if count.isDefined)
+      throw new IllegalArgumentException(s"?last=<count> is not $why: ${q.topic}")
+    val limit = count
       .map(c => math.min(c, Query.MaxLimit))
       .getOrElse(q.effectiveLimit)
     require(limit >= 0, s"?last=<count> must not be negative: ${q.topic}")
@@ -664,19 +637,28 @@ final class UnitDb private (
     // non-UTC sessions (ADVICE r1)
     val zone = sessionZone
     val cutoff = cutoffMs.map(c => (c, dayOf(c, zone)))
+    def rule(now: Expression, tombs: TombstoneSet) =
+      new GetRule(q.contract, t, now, cutoff, limit, tombs)
 
-    val (store, tombs, unsynced) = seqlockRead(
-      (storeHandle(), tombstoneSet(Some(q.contract)), unsyncedRows()))
-    ReadView(new GetRule(q.contract, t, nowMs, cutoff, limit, tombs), store, unsynced)
+    if (streaming)
+      ReadView(rule(CurrentTimestamp(), seqlockRead(tombstoneSet(Some(q.contract)))),
+        count, None, Nil)
+    else {
+      val (store, tombs, unsynced) = seqlockRead(
+        (storeHandle(), tombstoneSet(Some(q.contract)), unsyncedRows()))
+      ReadView(rule(Literal(new Timestamp(nowMs)), tombs), count, store, unsynced)
+    }
   }
 
   /** The pattern-matched, contract-scoped, live (not expired, not
-    * tombstoned) rows of a view, as a Spark query: one filter per
-    * [[GetRule.branches]] bucket, unioned. */
-  private def matched(view: ReadView): DataFrame = {
-    val snap = snapshotOf(view.store, view.unsynced)
-    view.rule.branches.map(b => snap.filter(GraftBridge.column(b))).reduce(_ unionByName _)
-  }
+    * tombstoned) rows of a view, as a Spark query. */
+  private def matched(view: ReadView): DataFrame =
+    kept(snapshotOf(view.store, view.unsynced), view.rule)
+
+  /** The `rows` `rule` keeps: one filter per [[GetRule.branches]] bucket,
+    * unioned. */
+  private def kept(rows: DataFrame, rule: GetRule): DataFrame =
+    rule.branches.map(b => rows.filter(GraftBridge.column(b))).reduce(_ unionByName _)
 
   /** The driver read behind [[get]], or None above the byte cap (or for a
     * listing not partitioned as the store writes it). */
@@ -733,12 +715,14 @@ final class UnitDb private (
   def count(): Long = {
     val (store, unsynced, tombs) =
       seqlockRead((storeHandle(), unsyncedRows(), tombstoneSet(None)))
-    snapshotOf(store, unsynced)
-      .filter((col("expires_at").isNull ||
-        col("expires_at") > lit(new Timestamp(clock()))) &&
-        NotTombstoned(col("seq"), col("topic"), tombs))
-      .count()
+    snapshotOf(store, unsynced).filter(liveAt(clock(), tombs)).count()
   }
+
+  /** [[GetRule.live]] at the store-clock instant `nowMs`, narrowed by
+    * `bounds`, as one Spark filter. */
+  private def liveAt(nowMs: Long, tombs: TombstoneSet, bounds: Seq[Column] = Nil): Column =
+    GraftBridge.column(GetRule.live(Literal(new Timestamp(nowMs)), tombs,
+      bounds.map(GraftBridge.expression)).reduceLeft(And))
 
   /** Flush and close (reference DB.Close, db.go:213-219): pending writes
     * are synced, then every further operation throws. Idempotent.
@@ -920,18 +904,15 @@ final class UnitDb private (
     }
   }
 
-  /** The delete-liveness filter `not_tombstoned(seq, topic)` for rows of
-    * `contract` (of every contract when None): cached sidecar keys plus
-    * the unsynced tombstones. Readers match on BOTH keys — a delete whose
-    * topic does not match the stored message is a no-op, as in the
+  /** The tombstone keys `not_tombstoned(seq, topic)` tests rows of
+    * `contract` (of every contract when None) against: cached sidecar keys
+    * plus the unsynced tombstones. Readers match on BOTH keys — a delete
+    * whose topic does not match the stored message is a no-op, as in the
     * reference (Delete validates the topic before freeing the block,
     * db.go:392-425; ADVICE r2). The buffers are captured before the
     * listing, so a concurrent flush shows its keys in one or both; callers
     * still capture under [[seqlockRead]] to pair the keys with the store
     * listing. */
-  private def notTombstoned(contract: Option[Long]): Column =
-    NotTombstoned(col("seq"), col("topic"), tombstoneSet(contract))
-
   private def tombstoneSet(contract: Option[Long]): TombstoneSet = {
     val unsynced = synchronized {
       (flushingTombs ++ pendingTombs).filter(t => contract.forall(_ == t.contract)).toSeq
@@ -969,13 +950,9 @@ final class UnitDb private (
     ensureOpen()
     sync()
     if (!storeExists) return
-    val nowTs = clock()
-    var livePred: Column =
-      col("expires_at").isNull || col("expires_at") > lit(new Timestamp(nowTs))
-    retentionMs.foreach { r =>
-      livePred = livePred && col("ts") >= lit(new Timestamp(nowTs - r))
-    }
-    val live = readStoreRaw().filter(livePred && notTombstoned(None))
+    val now = clock()
+    val retained = retentionMs.map(r => col("ts") >= lit(new Timestamp(now - r)))
+    val live = readStoreRaw().filter(liveAt(now, tombstoneSet(None), retained.toSeq))
     val tmp = commitProtocol.rewriteTarget(path)
     writeStoreTo(live, tmp)
     // every `_` sidecar except the consumed tombstones (and write-staging
@@ -1024,10 +1001,8 @@ final class UnitDb private (
     * predicate is applied and the `_tombstones` sidecar is preserved, not
     * consumed — reads return byte-identical results before and after. The
     * commit rides the same [[StoreCommitProtocol]] swap as vacuum (same
-    * staging names, same crash recovery at open). Single-file-per-
-    * partition is deliberate even for salted stores: compaction is where
-    * the salt's extra files get folded back together. Returns the number
-    * of partitions compacted. */
+    * staging names, same crash recovery at open). Returns the number of
+    * partitions compacted. */
   def compact(minFiles: Int = 8): Int = flushLock.synchronized {
     ensureOpen()
     require(minFiles >= 2, s"minFiles must be >= 2, got $minFiles")
@@ -1244,36 +1219,17 @@ final class UnitDb private (
 
   /** The distributed store write, for rows already on executors
     * ([[appendFrame]]'s micro-batches): one file per (contract, wc, day)
-    * per write (writeSaltBuckets = 1). Repartitioning on the partition
-    * columns before the partitioned write prevents the
-    * every-input-task-writes-every-partition small-files explosion (a
-    * 1000-task batch over 30 days would otherwise cut 30k files). Sorting
-    * by (topic, ts) inside each file keeps row-group stats selective.
-    * [[sync]] writes the same layout from the driver.
-    *
-    * At extreme skew (one day = most of a huge batch) a single-bucket
-    * repartition serializes that day into one writer task — opening the
-    * store with `writeSaltBuckets` = k splits every (contract, wc, day)
-    * across k deterministic seq-keyed buckets: the hot day writes from k
-    * tasks at the price of ≤ k files per partition per write. Readers are
-    * unaffected (the salt is a shuffle key, never a stored column). */
-  private def writeStore(df: DataFrame): Unit = {
-    val prepared = encrypt(withDerived(df))
-    val shuffled =
-      if (writeSaltBuckets > 1)
-        // explicit partition count: AQE would otherwise coalesce the
-        // salted splits of a small write back into one task, defeating
-        // the salt exactly when testing it (it respects user-specified
-        // counts; at real hot-day sizes it wouldn't coalesce anyway)
-        prepared.repartition(spark.sessionState.conf.numShufflePartitions,
-          col("contract"), col("wc"), col("day"),
-          pmod(col("seq"), lit(writeSaltBuckets)))
-      else
-        prepared.repartition(col("contract"), col("wc"), col("day"))
-    configureWriter(
-      shuffled.sortWithinPartitions("topic", "ts")
-        .write.mode(SaveMode.Append)).parquet(dataPath)
-  }
+    * per write. Repartitioning on the partition columns before the
+    * partitioned write prevents the every-input-task-writes-every-partition
+    * small-files explosion (a 1000-task batch over 30 days would otherwise
+    * cut 30k files). Sorting by (topic, ts) inside each file keeps
+    * row-group stats selective. [[sync]] writes the same layout from the
+    * driver. */
+  private def writeStore(df: DataFrame): Unit =
+    configureWriter(encrypt(withDerived(df))
+      .repartition(col("contract"), col("wc"), col("day"))
+      .sortWithinPartitions("topic", "ts")
+      .write.mode(SaveMode.Append)).parquet(dataPath)
 
   /** Vacuum rewrite — rows are already in at-rest form (no crypto pass). */
   private def writeStoreTo(df: DataFrame, target: String): Unit =
@@ -1372,11 +1328,11 @@ object UnitDb {
     StructField("topic", StringType, nullable = false),
     StructField("ts", TimestampType, nullable = false)))
 
-  /** What one read sees: its [[GetRule]], and from one consistent capture
-    * the store handle, the tombstone keys (inside the rule) and the
-    * unsynced rows. */
-  private final case class ReadView(rule: GetRule, store: Option[StoreHandle],
-      unsynced: Seq[Message])
+  /** What one read sees: its [[GetRule]], the pattern's `?last=<count>`
+    * if it gave one, and from one consistent capture the store handle, the
+    * tombstone keys (inside the rule) and the unsynced rows. */
+  private final case class ReadView(rule: GetRule, count: Option[Int],
+      store: Option[StoreHandle], unsynced: Seq[Message])
 
   /** One contract's sidecar keys as read at one file set (path and
     * length per data file). No broadcast when the sidecar holds no key. */
@@ -1440,12 +1396,8 @@ object UnitDb {
 
   /** Open (or create) a store directory (reference db.go:50-210).
     * `encryptionKey` (16/24/32 bytes) enables per-entry at-rest encryption
-    * (reference WithEncryption, options.go). `writeSaltBuckets` > 1
-    * splits each (contract, wc, day) of a write across that many
-    * seq-keyed files, written in parallel (by Spark tasks in `writeStore`,
-    * on the driver pool in `sync`) — for ingest where one hot day
-    * dominates a write; the default writes one file per partition per
-    * write. */
+    * (reference WithEncryption, options.go). Every write cuts one file
+    * per `(contract, wc, day)` it touches. */
   def open(
       spark: SparkSession,
       path: String,
@@ -1453,7 +1405,6 @@ object UnitDb {
       autoFlushRows: Int = 100000,
       encryptionKey: Option[Array[Byte]] = None,
       commitProtocol: StoreCommitProtocol = PosixSwapCommit,
-      writeSaltBuckets: Int = 1,
       secureMode: Boolean = false,
       cipher: PayloadCipher = AesGcm): UnitDb = {
     encryptionKey.foreach(k => cipher match {
@@ -1462,7 +1413,6 @@ object UnitDb {
       case ChaCha20Poly1305 => require(k.length == 32,
         s"ChaCha20-Poly1305 key must be 32 bytes, got ${k.length}")
     })
-    require(writeSaltBuckets >= 1, s"writeSaltBuckets must be >= 1")
     TopicMatches.register(spark)
     // repair any crash leftovers of an interrupted vacuum commit BEFORE
     // creating/reading anything — a crash between the swap protocol's two
@@ -1471,7 +1421,7 @@ object UnitDb {
     val repaired = commitProtocol.recover(path)
     Files.createDirectories(Paths.get(path))
     val db = new UnitDb(spark, path, clock, autoFlushRows, encryptionKey,
-      commitProtocol, writeSaltBuckets, secureMode, cipher)
+      commitProtocol, secureMode, cipher)
     db.recoveredAtOpen = repaired
     db
   }

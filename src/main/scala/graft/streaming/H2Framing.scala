@@ -33,6 +33,7 @@ import io.netty.handler.codec.http2.{DefaultHttp2Headers, DefaultHttp2HeadersDec
   * so [[UtpCodec.readPacket]] and the server's packet loop run unchanged
   * on top — gRPC is a transport detail, not a protocol branch. */
 object H2Framing {
+  import UtpCodec.readFully
 
   /** gRPC path of the reference's one rpc (unitdb.proto: package
     * unitdb.schema, service Unitdb, rpc Stream). */
@@ -70,17 +71,6 @@ object H2Framing {
     ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
       ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
 
-  private def readFully(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val k = in.read(buf, off, n - off)
-      if (k < 0) throw new EOFException("stream closed mid-frame")
-      off += k
-    }
-    buf
-  }
-
   // ------------------------------------------------------- Packet proto
   // message Packet { bytes data = 1; } — the only protobuf on this wire.
 
@@ -97,32 +87,12 @@ object H2Framing {
 
   /** Decode Packet.data, tolerating unknown fields (proto3 contract). */
   def packetData(msg: Array[Byte]): Array[Byte] = {
-    var pos = 0
-    def varint(): Long = {
-      var shift = 0; var v = 0L
-      while (shift < 64) {
-        val x = msg(pos); pos += 1
-        v |= (x & 0x7fL) << shift
-        if ((x & 0x80) == 0) return v
-        shift += 7
-      }
-      throw new IllegalArgumentException("malformed varint in Packet")
-    }
+    val r = new UtpCodec.Reader(msg)
     var data = Empty
-    while (pos < msg.length) {
-      val tag = varint()
+    while (r.hasMore) {
+      val tag = r.varint()
       val wt = (tag & 7).toInt
-      if ((tag >>> 3) == 1 && wt == 2) {
-        val n = varint().toInt
-        require(n >= 0 && pos + n <= msg.length, "Packet.data overruns buffer")
-        data = java.util.Arrays.copyOfRange(msg, pos, pos + n); pos += n
-      } else wt match {
-        case 0 => varint(): Unit
-        case 1 => pos += 8
-        case 2 => val n = varint().toInt; pos += n
-        case 5 => pos += 4
-        case w => throw new IllegalArgumentException(s"Packet wire type $w")
-      }
+      if ((tag >>> 3) == 1 && wt == 2) data = r.bytes() else r.skip(wt)
     }
     data
   }

@@ -59,7 +59,9 @@ object UtpCodec {
 
   // ------------------------------------------------------------ proto3 io
 
-  private final class Reader(b: Array[Byte]) {
+  /** The proto3 wire reader every message decoder on the wire shares
+    * (the gRPC `Packet` included, [[H2Framing.packetData]]). */
+  private[streaming] final class Reader(b: Array[Byte]) {
     private var pos = 0
     def hasMore: Boolean = pos < b.length
     def varint(): Long = {
@@ -415,12 +417,14 @@ object UtpCodec {
   private val MaxHeaderLen = 1 << 12
   private val MaxBodyLen = 1 << 26
 
-  private def readFully(in: InputStream, n: Int): Array[Byte] = {
+  /** Exactly `n` bytes of `in`, blocking; an EOF before the last one is
+    * an `EOFException` (every framing layer on the wire reads this way). */
+  private[streaming] def readFully(in: InputStream, n: Int): Array[Byte] = {
     val buf = new Array[Byte](n)
     var off = 0
     while (off < n) {
       val k = in.read(buf, off, n - off)
-      if (k < 0) throw new EOFException("stream closed mid-packet")
+      if (k < 0) throw new EOFException("stream closed mid-frame")
       off += k
     }
     buf

@@ -28,8 +28,8 @@ import graft.streaming.{UtpCodec => C}
   *
   * Scale/role note: this adapter is the INGEST EDGE, not the query
   * engine — one driver-side listener feeding the store's pending buffer,
-  * exactly how the embedded `put` face is used, with durability on sync
-  * cadence (`syncEveryPuts`) plus a final sync per connection close. A
+  * exactly how the embedded `put` face is used, with durability on a
+  * sync every 256 accepted puts plus a final sync per connection close. A
   * publisher whose put fills the store's buffer (`autoFlushRows`) syncs
   * inline; a sync writes the buffer's parquet files on the driver, with
   * no Spark job ([[UnitDb.sync]]), so that wait is a parquet encode, not
@@ -69,7 +69,7 @@ import graft.streaming.{UtpCodec => C}
   * face stays cleartext BY NAME (that is what the "c" means): it is the
   * documented twin of the reference's grpc-go `WithInsecure` default
   * (hdl_grpc.go:74-76 — its TLS path swaps creds, not framing). */
-final class UtpServer(db: UnitDb, port: Int = 0, syncEveryPuts: Int = 256,
+final class UtpServer(db: UnitDb, port: Int = 0,
     wsPort: Int = -1, grpcPort: Int = -1,
     tls: Option[javax.net.ssl.SSLContext] = None) {
 
@@ -99,6 +99,8 @@ final class UtpServer(db: UnitDb, port: Int = 0, syncEveryPuts: Int = 256,
   private val running = new AtomicBoolean(true)
   private val connIds = new AtomicInteger(0)
   private val putsSinceSync = new AtomicLong(0)
+  /** Accepted puts between the background syncs PUBLISH requests. */
+  private val SyncEveryPuts = 256
 
   /** Every live connection on any face, for the varz wire snapshot —
     * [[liveSubs]] only holds connections WITH subscriptions, and a
@@ -452,8 +454,8 @@ final class UtpServer(db: UnitDb, port: Int = 0, syncEveryPuts: Int = 256,
                 Entry(topic, m.payload)
               })
               if (putsSinceSync.addAndGet(authorized.size.toLong) >=
-                  syncEveryPuts) {
-                putsSinceSync.addAndGet(-syncEveryPuts.toLong)
+                  SyncEveryPuts) {
+                putsSinceSync.addAndGet(-SyncEveryPuts.toLong)
                 requestFlush()
               }
               authorized.foreach(fanoutLive)

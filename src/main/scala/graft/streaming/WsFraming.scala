@@ -23,6 +23,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * [[UtpCodec.readPacket]] and the server's packet loop run unchanged on
   * top — WS is a transport detail, not a protocol branch. */
 object WsFraming {
+  import UtpCodec.readFully
 
   private val Guid = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
@@ -132,17 +133,6 @@ object WsFraming {
       require(headerValue(lines, "Sec-WebSocket-Protocol").contains(p),
         s"server did not confirm subprotocol $p")
     }
-  }
-
-  private def readFully(in: InputStream, n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val k = in.read(buf, off, n - off)
-      if (k < 0) throw new EOFException("stream closed mid-frame")
-      off += k
-    }
-    buf
   }
 
   /** Serialized frame writer over one raw stream — data frames and the

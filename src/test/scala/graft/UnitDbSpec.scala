@@ -227,25 +227,6 @@ class UnitDbSpec extends SparkSpec {
     ()
   }
 
-  test("writeSaltBuckets fans a hot day across multiple files; reads unchanged") {
-    import java.nio.file.Paths
-    val dir = Files.createTempDirectory("graftdb_salt").toString + "/store"
-    val now = 1700000000000L // all puts land on ONE (contract, wc, day)
-    val db = UnitDb.open(spark, dir, clock = () => now, writeSaltBuckets = 4)
-    for (i <- 1 to 200) db.put("salt.t", s"v$i".getBytes)
-    db.sync()
-    val dayDir = Paths.get(dir).toFile.listFiles
-      .find(_.getName.startsWith("contract=")).get
-      .listFiles.find(_.getName.startsWith("wc=")).get
-      .listFiles.find(_.getName.startsWith("day=")).get
-    val files = dayDir.listFiles.count(_.getName.endsWith(".parquet"))
-    assert(files > 1 && files <= 4,
-      s"hot day should write from up to 4 tasks, got $files files")
-    // the salt is a shuffle key, not a stored column: full read-back intact
-    assert(db.get(Query("salt.t")).map(new String(_)).toSet ==
-      (1 to 200).map(i => s"v$i").toSet)
-  }
-
   test("open repairs a vacuum crash between the swap moves (recover)") {
     import java.nio.file.{Paths, StandardCopyOption}
     val dir = Files.createTempDirectory("graftdb_crash").toString + "/store"
@@ -737,24 +718,6 @@ class UnitDbSpec extends SparkSpec {
     val db2 = UnitDb.open(spark, dir, clock = () => now)
     assert(db2.get(Query("c.hot")).map(new String(_)).toSeq ==
       hotRows.filterNot(_ == "h1"))
-  }
-
-  test("compact folds a salted store's fan-out files back to one per partition") {
-    val dir = Files.createTempDirectory("graftdb_compact_s").toString + "/store"
-    var now = 1700000000000L
-    val db = UnitDb.open(spark, dir, clock = () => now, writeSaltBuckets = 4)
-    for (i <- 1 to 3) {
-      for (j <- 1 to 8) db.put("s.hot", s"v$i-$j".getBytes)
-      db.sync() // salt spreads each sync across up to 4 files
-    }
-    val before = dayDirFiles(dir)
-    assert(before.values.head.size > 3,
-      s"salt should fan out the writes, got ${before.values.head.size} files")
-    val rows = db.get(Query("s.hot")).map(new String(_)).toSeq
-    assert(db.compact(minFiles = 2) == 1)
-    val after = dayDirFiles(dir)
-    assert(after.values.head.size == 1, s"not folded: ${after.values.head}")
-    assert(db.get(Query("s.hot")).map(new String(_)).toSeq == rows)
   }
 
   test("open cleans a compact crash leftover (staged tmp, commit never ran)") {
@@ -1505,12 +1468,11 @@ class UnitDbSpec extends SparkSpec {
     try r.getFooter finally r.close()
   }
 
-  test("sync writes the layout the distributed write does: plain, AES-GCM, ChaCha20-Poly1305, salted") {
-    layoutScenario("plain", None, AesGcm, 1)
-    layoutScenario("AES-GCM", Some(Array.tabulate[Byte](16)(i => (i * 3 + 1).toByte)), AesGcm, 1)
+  test("sync writes the layout the distributed write does: plain, AES-GCM, ChaCha20-Poly1305") {
+    layoutScenario("plain", None, AesGcm)
+    layoutScenario("AES-GCM", Some(Array.tabulate[Byte](16)(i => (i * 3 + 1).toByte)), AesGcm)
     layoutScenario("ChaCha20-Poly1305",
-      Some(Array.tabulate[Byte](32)(i => (i * 5 + 2).toByte)), ChaCha20Poly1305, 1)
-    layoutScenario("salted", None, AesGcm, 4)
+      Some(Array.tabulate[Byte](32)(i => (i * 5 + 2).toByte)), ChaCha20Poly1305)
   }
 
   /** One buffer, synced into one store and `appendFrame`d (the
@@ -1518,7 +1480,7 @@ class UnitDbSpec extends SparkSpec {
     * partition directory on rows, footer schema, metadata keys, blooms,
     * compression and `(topic, ts)` byte order. */
   private def layoutScenario(label: String, key: Option[Array[Byte]],
-      cipher: PayloadCipher, salt: Int): Unit = {
+      cipher: PayloadCipher): Unit = {
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
     import org.apache.spark.sql.functions.col
     import org.apache.spark.unsafe.types.UTF8String
@@ -1526,7 +1488,7 @@ class UnitDbSpec extends SparkSpec {
     val DayMs = 86400000L
     var now = 1700000000000L
     def open(name: String) = UnitDb.open(spark, s"$base/$name", clock = () => now,
-      encryptionKey = key, cipher = cipher, writeSaltBuckets = salt)
+      encryptionKey = key, cipher = cipher)
     val synced = open("synced")
     val appended = open("appended")
     // "a.｡" sorts before "a.😀" in UTF-8 bytes and after it in UTF-16 units
@@ -1578,9 +1540,8 @@ class UnitDbSpec extends SparkSpec {
       s"$label: partition dirs ${mine.keySet} vs ${theirs.keySet}")
     val reference = footer(theirs.values.head.head).getFileMetaData
     for ((dir, files) <- mine) {
-      if (salt == 1) assert(files.size == 1, s"$label: $dir holds ${files.size} files")
-      else assert(files.size > 1 && files.size <= salt, s"$label: $dir holds ${files.size} files")
-      assert(theirs(dir).size <= salt)
+      assert(files.size == 1 && theirs(dir).size == 1,
+        s"$label: $dir holds ${files.size} and ${theirs(dir).size} files")
       for (f <- files) {
         val meta = footer(f)
         assert(meta.getFileMetaData.getSchema == reference.getSchema,
@@ -1707,5 +1668,75 @@ class UnitDbSpec extends SparkSpec {
     assert(synced.count() == 3)
     synced.close()
     db2.close()
+  }
+
+  test("read faces agree: tail, scanFrame, getFrame and get keep the same rows; count() the live ones") {
+    import org.apache.spark.sql.streaming.Trigger
+    val base = Files.createTempDirectory("graftdb_agree").toString
+    val HourMs = 3600000L
+    // 02:00 UTC, so `?last=6h` reaches back into the previous day
+    val now = 1700013600000L
+    val db = UnitDb.open(spark, base + "/store", clock = () => now)
+    val C2 = 77L
+    // `tail` judges expiry by the wall clock and the other faces by the
+    // store clock: a live TTL ends after both, an expired one before both
+    val Live = Some(10L * 365 * 24 * HourMs)
+    val Expired = Some(HourMs / 2)
+    final case class Row(name: String, topic: String, contract: Long, agoMs: Long,
+        ttl: Option[Long] = None, deleted: Boolean = false) {
+      def live: Boolean = !deleted && ttl.forall(_ > agoMs)
+    }
+    val M = Message.MasterContract
+    val rows = Seq(
+      Row("m.b", "ag.a.b", M, HourMs),
+      Row("m.c.ttl", "ag.a.c", M, HourMs, Live),
+      Row("m.b.yesterday", "ag.a.b", M, 3 * HourMs),        // 23:00 the day before
+      Row("m.b.beyond", "ag.a.b", M, 8 * HourMs),           // before the cutoff
+      Row("m.b.expired", "ag.a.b", M, HourMs, Expired),
+      Row("m.w.star", "ag.a.*", M, 2 * HourMs),             // stored wildcards: wc=1
+      Row("m.w.multi", "ag...", M, 4 * HourMs, Live),
+      Row("m.w.old", "ag.a.*", M, 30 * HourMs),
+      Row("m.b.synced-delete", "ag.a.b", M, 90 * 60000L, deleted = true),
+      Row("m.c.pending-delete", "ag.a.c", M, 100 * 60000L, deleted = true),
+      Row("m.z", "ag.z.q", M, HourMs),
+      Row("c.b", "ag.a.b", C2, HourMs),
+      Row("c.w.star", "ag.a.*", C2, 5 * HourMs),
+      Row("c.b.expired", "ag.a.b", C2, 2 * HourMs, Expired),
+      Row("c.b.synced-delete", "ag.a.b", C2, 2 * HourMs, deleted = true))
+    val seqs = rows.map { r =>
+      val id = db.putEntry(Entry(r.topic, r.name.getBytes, r.contract, ttlMillis = r.ttl,
+        tsMillis = Some(now - r.agoMs)))
+      r -> graft.model.MessageId.decode(id)._3
+    }.toMap
+    def delete(r: Row): Unit = db.delete(seqs(r), r.topic, r.contract)
+    rows.filter(r => r.deleted && !r.name.contains("pending")).foreach(delete)
+    db.sync()
+    rows.filter(r => r.deleted && r.name.contains("pending")).foreach(delete)
+    assert(db.count() == rows.count(_.live))
+
+    def names(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("payload").collect().map(r => new String(r.getAs[Array[Byte]](0))).toSet
+    var streams = 0
+    def tailed(q: Query): Set[String] = {
+      streams += 1
+      val name = s"agree_tail_$streams"
+      db.tail(q).writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", s"$base/ckpt_$streams")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      names(spark.table(name))
+    }
+    for (pattern <- Seq("ag.a.b?last=6h", "ag.a.*?last=6h", "ag..."); c <- Seq(M, C2)) {
+      val q = Query(pattern, contract = c)
+      val bare = pattern.takeWhile(_ != '?')
+      val cutoffMs = if (pattern.contains("?last=6h")) 6 * HourMs else Long.MaxValue
+      val want = rows.filter(r => r.contract == c && r.live && r.agoMs <= cutoffMs &&
+        modelMatch(r.topic, bare)).map(_.name).toSet
+      assert(want.nonEmpty, s"$pattern/$c")
+      assert(names(db.scanFrame(q)) == want, s"scanFrame $pattern/$c")
+      assert(names(db.getFrame(q)) == want, s"getFrame $pattern/$c")
+      assert(db.get(q).map(new String(_)).toSet == want, s"get $pattern/$c")
+      assert(tailed(q) == want, s"tail $pattern/$c")
+    }
+    db.close()
   }
 }

@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+
 import graft.functions.{TombstoneKeys, TombstoneSet}
 import graft.model.Topic
 
@@ -21,7 +23,7 @@ object EngineProbe {
   /** The data columns the driver read takes from a file for each branch of
     * a `get` on `pattern`, in read order. */
   def branchColumns(pattern: String): Seq[Seq[String]] =
-    new GetRule(1L, Topic.parse(pattern), 0L, None, 100,
+    new GetRule(1L, Topic.parse(pattern), Literal(new java.sql.Timestamp(0L)), None, 100,
       new TombstoneSet(Nil, TombstoneKeys.empty, 0L))
       .branches.map(DriverRead.requiredColumns(_).fieldNames.toSeq)
 }

@@ -10,8 +10,8 @@ import graft.streaming.{UtpCodec => C}
 /** Scratch profiler for the uTP wire path (test scope, manual runMain):
   * loopback clients pushing batched PUBLISH frames through the full
   * decode → putEntry → sync pipeline.
-  * Args: [messages] [batch] [conns] [syncEvery]
-  * [transport: tcp|tcps|ws|grpc] [window] — the transport arg drives the
+  * Args: [messages] [batch] [conns] [transport: tcp|tcps|ws|grpc]
+  * [window] (the server syncs on its own cadence, every 256 puts) — the transport arg drives the
   * SAME workload through the WebSocket or gRPC/h2c face, so the
   * listeners' throughput is comparable from one harness. `tcps` is the
   * tcp face under TLS (ephemeral keytool material, the UtpSpec recipe):
@@ -67,11 +67,10 @@ object UtpProf {
     val total = args.headOption.map(_.toInt).getOrElse(2000000)
     val batch = args.lift(1).map(_.toInt).getOrElse(200)
     val conns = args.lift(2).map(_.toInt).getOrElse(4)
-    val syncEvery = args.lift(3).map(_.toInt).getOrElse(1000000)
-    val transport = args.lift(4).getOrElse("tcp")
+    val transport = args.lift(3).getOrElse("tcp")
     require(Set("tcp", "tcps", "ws", "grpc")(transport),
       s"unknown transport $transport")
-    val window = args.lift(5).map(_.toInt).getOrElse(1)
+    val window = args.lift(4).map(_.toInt).getOrElse(1)
     require(window >= 1, s"window must be >= 1, got $window")
     require(window == 1 || transport == "tcp" || transport == "tcps",
       "pipelined window only implemented for the tcp/tcps faces")
@@ -81,15 +80,12 @@ object UtpProf {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val base = java.nio.file.Files.createTempDirectory("graft_utp_prof").toString
-    // sync cadence sized so parquet flushes amortize, and the hot-day
-    // write salted across 8 writer tasks (one ingest day = one physical
-    // partition otherwise — a single-task parquet write)
-    val db = UnitDb.open(spark, base + "/store", autoFlushRows = 2000000,
-      writeSaltBuckets = 8)
+    // a buffer large enough that only the server's cadence syncs it
+    val db = UnitDb.open(spark, base + "/store", autoFlushRows = 2000000)
     val (srvTls, cliSsl) =
       if (transport == "tcps") { val (a, b) = tlsPair(); (Some(a), Some(b)) }
       else (None, None)
-    val srv = new UtpServer(db, port = 0, syncEveryPuts = syncEvery,
+    val srv = new UtpServer(db, port = 0,
       wsPort = if (transport == "ws") 0 else -1,
       grpcPort = if (transport == "grpc") 0 else -1,
       tls = srvTls)

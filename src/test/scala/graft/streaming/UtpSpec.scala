@@ -173,7 +173,7 @@ class UtpSpec extends SparkSpec {
   test("server: a wire client connects, publishes, relays back, disconnects") {
     val dir = Files.createTempDirectory("graft_utp").toString + "/store"
     val db = UnitDb.open(spark, dir)
-    val srv = new UtpServer(db, port = 0, syncEveryPuts = 1000)
+    val srv = new UtpServer(db, port = 0)
     try {
       val sock = new Socket("127.0.0.1", srv.actualPort)
       val out = sock.getOutputStream
